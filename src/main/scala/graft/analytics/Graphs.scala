@@ -171,10 +171,13 @@ object Graphs {
   def itemItemRecs(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     // Round-14 (guide §2.4): the memoized ADJACENCY already holds every
     // part's full weighted neighbor list as one array row, so the top-k
-    // is an IN-ROW array_sort + slice — ZERO shuffle in this query
-    // (rounds 12-13 symmetrized the pair scaffold into a 2|E|-row union
-    // and re-aggregated it per run through a typed top-k Aggregator:
-    // one exchange plus per-row encoder dispatch, every execution).
+    // is an IN-ROW array_sort + slice — no per-run aggregation shuffle
+    // beyond the memoized adjacency (whose first build pays its own
+    // exchanges); only the final presentation orderBy remains, a range
+    // exchange + sort of the catalog×k result on every run (rounds 12-13
+    // symmetrized the pair scaffold into a 2|E|-row union and
+    // re-aggregated it per run through a typed top-k Aggregator: one
+    // more exchange plus per-row encoder dispatch, every execution).
     // Same (w desc, rec asc) tiebreak, row-for-row the row_number()
     // formulation (GraphsSpec pins it). Per-node cost is d log d against
     // the Aggregator's d·k scan — bounded by the same per-group degree

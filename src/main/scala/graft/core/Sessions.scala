@@ -68,7 +68,15 @@ object Sessions {
   /** Local session for the harness mains and tests. `cpus` drives both the
     * master thread count and shuffle partitions: on a single node there is
     * no win in more reducers than cores, and the driver contract asks for
-    * 32, not the 200 default sized for real clusters. */
+    * 32, not the 200 default sized for real clusters.
+    *
+    * File listing is serial here. Above
+    * `parallelPartitionDiscovery.threshold` (32) subdirectories, Spark
+    * lists through a Spark job; in `local[n]` that job's tasks run in the
+    * driver's own JVM, so all it adds is job and stage scheduling — one
+    * job per `user_name`-partitioned bronze directory on every read.
+    * Sessions handed in by a cluster driver ([[ensure]]) keep Spark's
+    * default, where parallel listing does help on object stores. */
   def local(cpus: Int, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -91,6 +99,9 @@ object Sessions {
       // keeps such stages parallel while single-MB reduction outputs
       // still coalesce to one task.
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+      // serial listing: see the scaladoc above
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       // the generated-class cache defaults to 100 entries; a session
       // running the whole 150+-query surface holds far more codegen
       // units than that, and evictions mean re-Janino-compiling hot

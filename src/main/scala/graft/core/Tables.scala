@@ -88,9 +88,20 @@ object Tables {
     * and repeated the q278 mistake for multi-pass consumers (q324's
     * ten-stage CDF pipeline: 1.28 s at 32 cores vs 0.48 s at 8 —
     * round-14 A/B below picks the quantum that removes the inversion).
-    * `spark.graft.scan.heavyRows` overrides the heavy quantum for
-    * deployments whose per-row cost differs (e.g. longer documents). */
+    * `spark.graft.scan.heavyRows.<table>` overrides a heavy table's
+    * quantum for deployments whose per-row cost differs (e.g. longer
+    * documents). A value ≤ 0 is rejected. */
   private val FanRowsPerPartition = 40000L
+
+  /** The heavy quantum for `name`: its per-table key, else `default`. */
+  private[core] def heavyQuantum(spark: SparkSession, name: String,
+      default: Long): Long = {
+    val key = s"spark.graft.scan.heavyRows.$name"
+    val value = spark.conf.get(key, default.toString)
+    value.trim.toLongOption.filter(_ > 0L).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a positive row count, got '$value'"))
+  }
 
   private def fanned(spark: SparkSession, dir: String, name: String,
       key: String, heavyRows: Long = 0L): DataFrame = {
@@ -98,9 +109,7 @@ object Tables {
     val cores = math.max(1, spark.sparkContext.defaultParallelism)
     val (rowGroups, rows) = footerOf(spark, s"$dir/$name.parquet")
     val quantum =
-      if (heavyRows > 0L)
-        spark.conf.get(s"spark.graft.scan.heavyRows.$name",
-          heavyRows.toString).toLong
+      if (heavyRows > 0L) heavyQuantum(spark, name, heavyRows)
       else FanRowsPerPartition
     val width = math.max(1L, math.min(cores.toLong, rows / quantum)).toInt
     // session kill-switch: the fan-out sits between a scan and the

@@ -20,8 +20,10 @@ import org.apache.spark.sql.functions._
   *  2. CONTENT hash: only the genuinely new paths are loaded and
   *     `sha2(content, 256)`-hashed; a second left-anti join on the hash
   *     drops renamed copies of already-processed bytes (the notebook's
-  *     stronger variant). Renamed copies are still APPENDED to the ledger
-  *     (as seen-paths) so the next tick's metadata filter skips them too.
+  *     stronger variant), and byte-identical files landing in the same
+  *     tick are processed once. Renamed copies are still APPENDED to the
+  *     ledger (as seen-paths) so the next tick's metadata filter skips
+  *     them too.
   *
   * Structured Streaming's checkpoint file-log (graft.streaming) gives
   * filename-level exactly-once for free; this ledger is the batch-mode and
@@ -117,21 +119,25 @@ object Ledger {
     val hashedRows = hashPaths(spark, freshPaths).collect()
     val hashedDf = spark.createDataFrame(
       java.util.Arrays.asList(hashedRows: _*), hashedSchema)
+    // The anti-join only sees the PRIOR ledger, so byte-identical files
+    // landing in the same tick all survive it: keep one per content hash
+    // (the smallest path, so the choice is deterministic). The others are
+    // ledgered below as seen copies, like renamed copies of older files.
     val rows = newFiles(hashedDf, ledger)
       .select(col("content_hash"), col("path"), col("length"), col("modification_time"))
       .collect()
+      .groupBy(_.getString(0)).values.map(_.minBy(_.getString(1)))
+      .toArray.sortBy(_.getString(1))
     if (rows.nonEmpty) process(rows.map(_.getString(1)).toSeq)
 
-    // Ledger append: processed files AND renamed duplicates (so the next
-    // tick's metadata filter skips both without re-reading).
+    // Ledger append: processed files AND copies of seen or just-processed
+    // bytes (so the next tick's metadata filter skips them without
+    // re-reading).
     val processedPaths = rows.map(_.getString(1)).toSet
     val dupRows = hashedRows.filterNot(r => processedPaths.contains(r.getString(1)))
     val appendRows = rows ++ dupRows
     if (appendRows.nonEmpty) {
-      spark.createDataFrame(
-        java.util.Arrays.asList(appendRows: _*),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "content_hash STRING, path STRING, length LONG, modification_time TIMESTAMP"))
+      spark.createDataFrame(java.util.Arrays.asList(appendRows: _*), hashedSchema)
         .withColumn("processed_at", current_timestamp())
         .write.mode("append").parquet(ledgerDir)
     }

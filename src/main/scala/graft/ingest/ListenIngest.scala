@@ -85,9 +85,17 @@ object ListenIngest {
         col("track_metadata.additional_info.artist_msid").as("track_artist_msid"),
         to_date(timestamp_seconds(col("listened_at"))).as("listened_date"))
 
-  /** S6: user_name-partitioned parquet write (reference ingest_job.py:85). */
+  /** S6: user_name-partitioned parquet write (reference ingest_job.py:85).
+    *
+    * Rows are rebalanced on the partition column first. A partitioned
+    * write opens one file per (writer task, partition value) it sees, so
+    * an unclustered batch lands as tasks × users small files, and every
+    * later bronze read pays for each of them. Clustered, each write emits
+    * one file per user. A rebalance, not `coalesce` or `repartition(n)`:
+    * AQE still splits a user larger than the advisory partition size
+    * into several files instead of funnelling it through one task. */
   def writeBronze(bronzeDf: DataFrame, outDir: String): Unit =
-    bronzeDf.write
+    bronzeDf.hint("rebalance", col("user_name")).write
       .partitionBy("user_name")
       .mode("overwrite")
       .parquet(outDir)

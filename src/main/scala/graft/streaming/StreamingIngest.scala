@@ -41,11 +41,15 @@ object StreamingIngest {
       .json(inDir)
 
   /** Streaming bronze sink: user_name-partitioned parquet + checkpoint
-    * (S5/S6). `trigger` defaults to the reference's 30 s cadence. */
+    * (S5/S6). `trigger` defaults to the reference's 30 s cadence. Each
+    * micro-batch is rebalanced on user_name before the partitioned write,
+    * as in [[ListenIngest.writeBronze]], so a batch writes one file per
+    * user rather than one per (task, user). */
   def startBronzeSink(spark: SparkSession, inDir: String, bronzeDir: String,
                       checkpointDir: String,
                       trigger: Trigger = Trigger.ProcessingTime("30 seconds")): StreamingQuery =
     ListenIngest.bronze(rawStream(spark, inDir))
+      .hint("rebalance", col("user_name"))
       .writeStream
       .format("parquet")
       .option("path", bronzeDir)

@@ -29,6 +29,30 @@ class LedgerSpec extends SparkSpecBase {
     assert(run() === 0)
   }
 
+  test("byte-identical files in one tick: one processed, both ledgered") {
+    val in = tmpDir("ledger-twin-in-")
+    val work = tmpDir("ledger-twin-")
+    val (ledger, bronze) = (s"$work/ledger", s"$work/bronze")
+    val listens = Seq("u1" -> 1700000000L, "u2" -> 1700000060L).map { case (u, t) =>
+      s"""{"listened_at":$t,"recording_msid":"m$t","user_name":"$u","track_metadata":{"artist_name":"a","track_name":"t"}}"""
+    }.mkString("\n").getBytes
+    Files.write(Paths.get(in, "b.json"), listens)
+    Files.write(Paths.get(in, "a.json"), listens)
+
+    var processed = Seq.empty[String]
+    val n = Ledger.ingestTick(spark, in, ledger) { paths =>
+      processed = paths.map(p => p.substring(p.lastIndexOf('/') + 1))
+      ListenIngest.writeBronze(ListenIngest.bronze(
+        ListenIngest.readRaw(spark, s"$in/{${processed.mkString(",")}}")), bronze)
+    }
+    assert(n === 1)
+    assert(processed === Seq("a.json"))
+    assert(spark.read.parquet(ledger).count() === 2)
+    assert(spark.read.parquet(bronze).count() === 2)
+    // both copies are ledgered, so the next tick skips them by metadata
+    assert(Ledger.ingestTick(spark, in, ledger)(_ => fail("re-processed")) === 0)
+  }
+
   test("maxFilesPerTick bounds the driver snapshot; backlog drains across ticks") {
     // Round-7 review: a first scan of a huge bucket must not collect every
     // path at once. With the cap at 2, a 5-file backlog takes 3 ticks —

@@ -67,4 +67,25 @@ class ListenIngestSpec extends SparkSpecBase {
     assert(new java.io.File(s"$out/user_name=userA").exists())
     assert(spark.read.parquet(out).count() === 4)
   }
+
+  test("bronze write emits exactly one parquet file per user") {
+    // 3 files × 4 users, so each scan task sees every user and an
+    // unclustered partitioned write would give every user one file per task
+    val dir = tmpDir("listen-layout-")
+    val users = Seq("userA", "userB", "userC", "userD")
+    for (f <- 0 until 3)
+      Files.write(Paths.get(dir, s"part-$f.json"), users.zipWithIndex.map {
+        case (u, i) => listen(day1 + 100 * f + i, s"m$f$i", u, "track")
+      }.mkString("\n").getBytes)
+    val raw = ListenIngest.readRaw(spark, dir)
+    assert(raw.rdd.getNumPartitions > 1)
+    val out = tmpDir("bronze-layout-")
+    ListenIngest.writeBronze(ListenIngest.bronze(raw), out)
+    for (u <- users) {
+      val files = new java.io.File(s"$out/user_name=$u").list()
+        .filter(_.endsWith(".parquet"))
+      assert(files.length === 1, s"user_name=$u: ${files.mkString(", ")}")
+    }
+    assert(spark.read.parquet(out).count() === 12)
+  }
 }

@@ -37,6 +37,28 @@ class StreamingIngestSpec extends SparkSpecBase {
     assert(new java.io.File(s"$bronze/user_name=u1").exists())
   }
 
+  test("each streaming micro-batch writes exactly one parquet file per user") {
+    val in = tmpDir("stream-layout-in-")
+    val bronze = tmpDir("stream-layout-bronze-")
+    val ckpt = tmpDir("stream-layout-ckpt-")
+    val users = Seq("u1", "u2", "u3")
+    def land(batch: Int): Unit =
+      for (f <- 0 until 3)
+        Files.write(Paths.get(in, s"b$batch-f$f.json"), users.zipWithIndex.map {
+          case (u, i) => listen(1700000000L + 1000 * batch + 10 * f + i, s"m$batch$f$i", u)
+        }.mkString("\n").getBytes)
+    def filesPerUser: Seq[Int] = users.map(u =>
+      new java.io.File(s"$bronze/user_name=$u").list().count(_.endsWith(".parquet")))
+
+    land(0)
+    StreamingIngest.runOnce(spark, in, bronze, ckpt)
+    assert(filesPerUser === Seq(1, 1, 1))
+    land(1)
+    StreamingIngest.runOnce(spark, in, bronze, ckpt)
+    assert(filesPerUser === Seq(2, 2, 2))
+    assert(spark.read.parquet(bronze).count() === 18)
+  }
+
   test("watermarked daily-counts stream emits closed windows") {
     val in = tmpDir("agg-in-")
     val ckpt = tmpDir("agg-ckpt-")
