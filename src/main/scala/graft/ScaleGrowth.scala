@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Sessions, Tables}
-import graft.llm.{EmbedDedup, Multimodal, TextDedup}
+import graft.core.{Caches, Sessions, Shard, Tables}
+import graft.llm.{EmbedDedup, FuzzyMatch, Multimodal, TextDedup}
 
 /** Multi-scale-point audit of the dedup/ANN candidate volumes (round-5 review
   * stretch item): every near-dup family in this engine claims its candidate
@@ -122,7 +122,7 @@ object ScaleGrowth {
         // candidate pairs of the q204 banded Hamming join, after the
         // adaptive subshard cap — bounded by 4·n_docs·(cap−1)/2
         pairSum(Multimodal.phashBands(docs), 2L, Long.MaxValue,
-          "b", "bv", "sub")
+          "b", "bv", "subshard")
       },
       // q322: sorted-neighborhood candidates — (window−1)·N by
       // construction (block-edge truncation only shrinks it); blocking
@@ -144,16 +144,8 @@ object ScaleGrowth {
       // q323: Σ n·(n−1)/2 over (lang, length-band, adaptive subshard)
       // blocks — the exact pair count the edit-distance verify pays
       timedCount("edit_block_pairs") {
-        val meta = docs.select(col("doc_id"), col("lang"),
-          expr("n_chars div 64").as("band"))
-        val census = meta.groupBy(col("lang"), col("band"))
-          .agg(count(lit(1)).as("bdocs"))
-        val cap = graft.llm.FuzzyMatch.BlockCap
-        val keyed = meta.join(census, Seq("lang", "band"))
-          .withColumn("subshard",
-            conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-              .cast("long") % expr(s"(bdocs + ${cap - 1}) div $cap"))
-        pairSum(keyed, 2L, Long.MaxValue, "lang", "band", "subshard")
+        pairSum(FuzzyMatch.editBlocks(docs), 2L, Long.MaxValue,
+          "lang", "band", "subshard")
       },
       // q318/q326 watch counter: LARGEST simhash hamming≤1 component.
       // Not a candidate volume — a merge-structure metric: hamming
@@ -182,8 +174,7 @@ object ScaleGrowth {
     * keep the growth-ratio criterion instead. */
   private def capBound(counts: Map[String, Long]): Map[String, Long] = Map(
     // per subshard ≤ cap docs → pairs ≤ n_docs·(cap−1)/2
-    "ngram_block_pairs" ->
-      counts("n_docs") * (TextDedup.MaxBlockDocs - 1) / 2,
+    "ngram_block_pairs" -> counts("n_docs") * (Shard.Cap - 1) / 2,
     // per shingle df ≤ cap → Σ df(df−1)/2 ≤ (cap−1)/2 · Σ df ≤ (cap−1)/2 · rows
     "contain_rare_collisions" ->
       counts("n_shingle_rows") * (TextDedup.ContainDfCap - 1) / 2,
@@ -191,15 +182,13 @@ object ScaleGrowth {
       counts("n_fp_rows") * (TextDedup.MaxFpDf - 1) / 2,
     // NumBands buckets per doc, each subsharded to ≤ cap docs
     "embed_cand" ->
-      counts("n_docs") * EmbedDedup.NumBands * (EmbedDedup.MaxBandBucketDocs - 1) / 2,
+      counts("n_docs") * EmbedDedup.NumBands * (Shard.Cap - 1) / 2,
     // 4 band postings per doc, each bucket subsharded to ≤ cap docs
-    "phash_band_pairs" ->
-      counts("n_docs") * 4 * (Multimodal.MaxPhashBandDocs - 1) / 2,
+    "phash_band_pairs" -> counts("n_docs") * 4 * (Shard.Cap - 1) / 2,
     // (window − 1) successors per row, blocks only truncate
     "snm_candidates" -> counts("n_docs") * (TextDedup.SnmWindow - 1),
     // per subshard ≤ cap docs → pairs ≤ n_docs·(cap−1)/2
-    "edit_block_pairs" ->
-      counts("n_docs") * (graft.llm.FuzzyMatch.BlockCap - 1) / 2)
+    "edit_block_pairs" -> counts("n_docs") * (Shard.Cap - 1) / 2)
 
   /** Counters RECORDED but excluded from the linear criterion: structure
     * metrics whose growth IS the measured hazard (not a candidate volume

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analytics.{Bitmaps, BloomJoin, Diagnostics, Features, Funnels, Graphs, History, Incremental, Reports, SkewJoin, Sketches, StarQueries, TemporalOps}
+import graft.core.Shard
 import graft.ingest.Medallion
 import graft.llm.{Coverage, Curation, Datasheet, Decontaminate, DupClusters, EmbedDedup, Multimodal, Scrub, Search, Similarity, TextDedup, TextStats}
 import graft.pipeline.EventsPipeline
@@ -1726,7 +1727,7 @@ object SparkEntry {
     * cosine on candidates. All-integer until the final division. */
   private def embedDedupOracle: String = {
     import graft.llm.EmbedDedup.{NumBuckets, NumPlanes, BandBits, WeightMod,
-      CosThreshold, MaxBandBucketDocs}
+      CosThreshold}
     s"""WITH nd AS (
        |  SELECT doc_id, str_split($duckNorm, ' ') AS w FROM documents),
        |words AS (SELECT doc_id, unnest(w) AS word FROM nd),
@@ -1745,17 +1746,11 @@ object SparkEntry {
        |  SELECT doc_id, plane // $BandBits AS band,
        |         CAST(SUM(CASE WHEN pr > 0 THEN (CAST(1 AS BIGINT) << CAST(plane % $BandBits AS INTEGER)) ELSE 0 END) AS BIGINT) AS bval
        |  FROM proj GROUP BY 1, 2),
-       |bcensus AS (
-       |  SELECT band, bval, COUNT(*) AS bdocs FROM bands GROUP BY 1, 2),
-       |bsub AS (
-       |  SELECT bands.doc_id, bands.band, bands.bval,
-       |         CAST('0x' || substr(md5(CAST(bands.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-       |           % ((bdocs + ${MaxBandBucketDocs - 1}) // $MaxBandBucketDocs) AS sub
-       |  FROM bands JOIN bcensus USING (band, bval)),
+       |${Shard.duckCapped("bands", Seq("band", "bval"))},
        |cand AS MATERIALIZED (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bsub a JOIN bsub b
-       |    ON a.band = b.band AND a.bval = b.bval AND a.sub = b.sub
+       |  FROM keyed a JOIN keyed b
+       |    ON a.band = b.band AND a.bval = b.bval AND a.subshard = b.subshard
        |       AND a.doc_id < b.doc_id),
        |dots AS (
        |  SELECT c.doc_a, c.doc_b, SUM(ta.cnt * tb.cnt) AS dt
@@ -2623,21 +2618,13 @@ object SparkEntry {
         |ORDER BY vec_id ASC""".stripMargin,
     "q28_simhash_neardups" -> simhashOracle,
     // Blocking key mirrors TextDedup.ngramBlocks exactly: (lang, source,
-    // n_chars div 256 length-band, adaptive md5 subshard capped at 64
-    // docs/block). Integer div/mod only — bit-identical across engines.
+    // n_chars div 256 length-band) capped by Shard.duckCapped.
     "q29_ngram_jaccard" ->
       s"""WITH meta AS (
          |  SELECT doc_id, lang, source, n_chars // 256 AS band,
          |         $duckNorm AS norm
          |  FROM documents),
-         |census AS (
-         |  SELECT lang, source, band, COUNT(*) AS bdocs
-         |  FROM meta GROUP BY 1, 2, 3),
-         |keyed AS (
-         |  SELECT m.doc_id, m.lang, m.source, m.band, m.norm,
-         |         CAST('0x' || substr(md5(CAST(m.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-         |           % ((c.bdocs + 63) // 64) AS subshard
-         |  FROM meta m JOIN census c USING (lang, source, band)),
+         |${Shard.duckCapped("meta", Seq("lang", "source", "band"))},
          |nd AS (
          |  SELECT doc_id, lang, source, band, subshard,
          |         str_split(norm, ' ') AS w
@@ -5272,7 +5259,7 @@ object SparkEntry {
     // q204: same text-raster aHash (nested list lambdas mirror the
     // engine's nested higher-order functions), same 4-band pigeonhole.
     "q204_phash_dups" ->
-      """WITH h0 AS (
+      s"""WITH h0 AS (
         |  SELECT doc_id,
         |         list_transform(range(0, 64), i ->
         |           list_sum(list_transform(range(1, 5), j ->
@@ -5297,19 +5284,13 @@ object SparkEntry {
         |              WHEN c.b = 2 THEN h_hi & 65535
         |              ELSE (h_hi >> 16) & 65535 END AS bv
         |  FROM h CROSS JOIN (VALUES (0), (1), (2), (3)) c(b)),
-        |census AS (
-        |  SELECT b, bv, COUNT(*) AS bdocs FROM bands0 GROUP BY 1, 2),
-        |bands AS (
-        |  SELECT x.doc_id, x.h_lo, x.h_hi, x.b, x.bv,
-        |         CAST('0x' || substr(md5(CAST(x.doc_id AS VARCHAR)), 1, 15)
-        |              AS BIGINT) % ((c.bdocs + 63) // 64) AS sub
-        |  FROM bands0 x JOIN census c USING (b, bv)),
+        |${Shard.duckCapped("bands0", Seq("b", "bv"))},
         |cand AS (
         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |         a.h_lo AS lo_a, a.h_hi AS hi_a,
         |         b.h_lo AS lo_b, b.h_hi AS hi_b
-        |  FROM bands a JOIN bands b
-        |    ON a.b = b.b AND a.bv = b.bv AND a.sub = b.sub
+        |  FROM keyed a JOIN keyed b
+        |    ON a.b = b.b AND a.bv = b.bv AND a.subshard = b.subshard
         |   AND a.doc_id < b.doc_id)
         |SELECT doc_a, doc_b,
         |       CAST(bit_count(xor(lo_a, lo_b))
@@ -9185,20 +9166,14 @@ object SparkEntry {
          |         // (n_docs * (n_docs - 1) // 2) AS BIGINT)
          |         AS reduction_ppm
          |FROM counts""".stripMargin,
-    // q323: (lang, length band, adaptive md5 subshard) blocking — the
+    // q323: (lang, length band) blocking capped by Shard.duckCapped — the
     // q29 contract — then exact prefix-window Levenshtein.
     "q323_edit_distance_dups" ->
       s"""WITH meta AS (
          |  SELECT doc_id, lang, n_chars // 64 AS band,
          |         substr($duckNorm, 1, 64) AS p
          |  FROM documents),
-         |census AS (
-         |  SELECT lang, band, COUNT(*) AS bdocs FROM meta GROUP BY 1, 2),
-         |keyed AS (
-         |  SELECT m.doc_id, m.lang, m.band, m.p,
-         |         CAST('0x' || substr(md5(CAST(m.doc_id AS VARCHAR)), 1, 15)
-         |           AS BIGINT) % ((c.bdocs + 63) // 64) AS subshard
-         |  FROM meta m JOIN census c USING (lang, band))
+         |${Shard.duckCapped("meta", Seq("lang", "band"))}
          |SELECT a.lang, a.doc_id AS doc_a, b.doc_id AS doc_b,
          |       CAST(levenshtein(a.p, b.p) AS BIGINT) AS dist
          |FROM keyed a JOIN keyed b

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.core.Shard.h60
 
 /** Data-distribution diagnostics: the reports an operator runs BEFORE
   * picking a partitioning/salting strategy at scale. Skew is the #1
@@ -228,9 +229,8 @@ object Diagnostics {
     * changes the bucket. */
   def merkleBuckets(docs: DataFrame, buckets: Int = 64): DataFrame =
     docs.select((col("doc_id") % buckets).as("bucket"),
-        conv(substring(md5(concat_ws("|",
-          col("doc_id"), col("text"), col("lang"), col("source"))), 1, 15),
-          16, 10).cast("long").as("h"))
+        h60(concat_ws("|",
+          col("doc_id"), col("text"), col("lang"), col("source"))).as("h"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         expr("bit_xor(h)").cast("long").as("checksum"))
@@ -504,8 +504,7 @@ object Diagnostics {
       .select(col("o_orderkey").as("k"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v")))
     val sample = v.filter(
-      conv(substring(md5(concat(lit("rp:"), col("k").cast("string"))),
-        1, 15), 16, 10).cast("long") % 1000 < 20)
+      h60(concat(lit("rp:"), col("k").cast("string"))) % 1000 < 20)
     val hist = sample.groupBy(col("v")).agg(count(lit(1)).as("c"))
     val ns = sample.agg(count(lit(1)).as("ns"))
     import org.apache.spark.sql.expressions.Window
@@ -579,9 +578,8 @@ object Diagnostics {
       .select(col("doc_id"),
         size(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " "))
           .cast("long").as("n_tokens"))
-    val u = conv(substring(md5(concat(lit("boot:"), col("b").cast("string"),
-      lit(":"), col("doc_id").cast("string"))), 1, 15), 16, 10)
-      .cast("long") % 1000000L
+    val u = h60(concat(lit("boot:"), col("b").cast("string"),
+      lit(":"), col("doc_id").cast("string"))) % 1000000L
     // Direct 6-branch CASE over u: CollapseProject textually inlines u
     // into every branch, but whole-stage codegen's subexpression
     // elimination evaluates the md5 ONCE. Two codegen traps measured
@@ -674,8 +672,7 @@ object Diagnostics {
     val ev = graft.core.Caches.scratch(silver.select(
       col("event_type").as("part"),
       expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-      (conv(substring(md5(concat(lit("conf:"),
-        col("event_id").cast("string"))), 1, 15), 16, 10).cast("long")
+      (h60(concat(lit("conf:"), col("event_id").cast("string")))
         % 10 < 5).as("is_cal")))
     // Round-14: both order statistics come from ONE per-part VALUE
     // HISTOGRAM of the calibration cents (integer domain, so the

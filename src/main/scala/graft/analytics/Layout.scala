@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 import graft.functions.ZOrder
 
 /** Physical-layout operators: Z-order clustering of a table for
@@ -79,26 +79,14 @@ object Layout {
     }.parquet(path)
   }
 
-  private val indexScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
   /** q142: a point-range lookup over the indexed layout — the read path
     * the layout exists for. The oracle gates values; the physical
     * payoff (bloom filters in footers, disjoint row groups, pushed
     * filters) is asserted in LayoutIndexSpec. */
   def indexedLayoutLookup(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = indexScratch.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .computeIfAbsent(dir, { _ =>
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-idx-layout-").toString
-        writeIndexedLayout(Tables.documents(spark, dir), "doc_id",
-          Seq("doc_id", "text"), files = 4,
-          maxRecordsPerFile = 100000L, p)
-        p
-      })
+    val scratch = Caches.scratchDir(spark, s"indexed-layout:$dir")(
+      writeIndexedLayout(Tables.documents(spark, dir), "doc_id",
+        Seq("doc_id", "text"), files = 4, maxRecordsPerFile = 100000L, _))
     spark.read.parquet(scratch)
       .filter(col("doc_id") >= 100 && col("doc_id") < 140)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -137,7 +125,7 @@ object Layout {
     val layouts = lay("natural", col("tie"))
       .unionAll(lay("sorted", col("pk")))
       .unionAll(lay("zorder", z))
-    val chunks = graft.core.Caches.scratch(
+    val chunks = Caches.scratch(
       OrderStats.rankAll(layouts)
         .select(col("part"), col("pk"),
           expr(s"(rnk - 1) div $chunkRows").as("chunk"))
@@ -209,7 +197,7 @@ object Layout {
     // domain-sized: distinct grid cells, <= 4^bits rows
     val wz = Window.orderBy(col("zv").asc)
     val wh = Window.orderBy(col("hv").asc)
-    val valued = graft.core.Caches.scratch(
+    val valued = Caches.scratch(
       graft.functions.Hilbert.withHValue(
           cells.withColumn("zv", ZOrder.zValue(col("x"), col("y"), bits)),
           col("x"), col("y"), bits, "hv")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Shard.h60
 import graft.pipeline.EventsPipeline
 
 /** The reference's report/analytics surface (SURVEY §2.4-§2.6), one function
@@ -975,8 +976,7 @@ object Reports {
     * one map-side-combinable aggregate over (type, arm) — nothing
     * user-keyed shuffles beyond silver's existing clustering. */
   def aaBalance(silver: DataFrame): DataFrame = {
-    val arm = (conv(substring(md5(col("user_id").cast("string")), 1, 15),
-      16, 10).cast("long") % 2).as("arm")
+    val arm = (h60(col("user_id").cast("string")) % 2).as("arm")
     val tagged = silver.select(col("event_type"), col("user_id"), arm)
     val totals = tagged.groupBy(col("arm")).agg(count(lit(1)).as("t"))
     val t0 = totals.filter(col("arm") === 0).select(col("t").as("tot_a"))
@@ -1028,8 +1028,7 @@ object Reports {
       max(col("event_date")).as("hi"))
     val perUser = silver.crossJoin(broadcast(bounds))
       .select(col("user_id"),
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15),
-          16, 10).cast("long") % 2).as("arm"),
+        (h60(col("user_id").cast("string")) % 2).as("arm"),
         when(datediff(col("event_date"), col("lo")) * 2
           < datediff(col("hi"), col("lo")),
           expr("CAST(round(value * 100) AS BIGINT)")).otherwise(lit(0L))
@@ -1098,8 +1097,7 @@ object Reports {
       max(col("event_date")).as("hi"))
     val perUser = silver.crossJoin(broadcast(bounds))
       .select(col("user_id"),
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15),
-          16, 10).cast("long") % 2).as("arm"),
+        (h60(col("user_id").cast("string")) % 2).as("arm"),
         when(datediff(col("event_date"), col("lo")) * 2
           < datediff(col("hi"), col("lo")),
           expr("CAST(round(value * 100) AS BIGINT)")).otherwise(lit(0L))
@@ -1169,8 +1167,7 @@ object Reports {
       max(col("event_date")).as("hi"))
     val perUserLook = silver.crossJoin(broadcast(bounds))
       .select(col("user_id"),
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15),
-          16, 10).cast("long") % 2).as("arm"),
+        (h60(col("user_id").cast("string")) % 2).as("arm"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
         datediff(col("event_date"), col("lo")).as("dd"),
         datediff(col("hi"), col("lo")).as("span"),
@@ -1234,8 +1231,7 @@ object Reports {
   def stratifiedAte(silver: DataFrame): DataFrame = {
     val perUser = silver
       .select(col("user_id"),
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15),
-          16, 10).cast("long") % 2).as("arm"),
+        (h60(col("user_id").cast("string")) % 2).as("arm"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("user_id"), col("arm"))
       .agg(count(lit(1)).as("ne"), sum(col("cents")).as("y"))
@@ -1461,8 +1457,7 @@ object Reports {
       .groupBy(col("user_id"))
       .agg(sum(col("cents")).as("y"))
       .withColumn("bucket",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 15),
-          16, 10).cast("long") % 20))
+        h60(col("user_id").cast("string")) % 20)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("u_b"), sum(col("y")).as("c_b"))
     val totals = buckets.agg(count(lit(1)).as("nb"),

@@ -1,5 +1,6 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -136,4 +137,34 @@ object Caches {
     val q = ckptFrames.get(spark)
     if (q == null) 0 else q.size()
   }
+
+  // ---- per-session scratch directories ------------------------------------
+
+  private val scratchDirs = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, String]]())
+
+  /** Every scratch dir ever created, deleted on JVM exit. */
+  private val allScratchDirs = ConcurrentHashMap.newKeySet[String]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    allScratchDirs.forEach { d =>
+      try {
+        import scala.jdk.CollectionConverters._
+        Files.walk(Paths.get(d)).iterator().asScala.toSeq.reverse
+          .foreach(p => Files.deleteIfExists(p))
+      } catch { case _: Throwable => () }
+    }))
+
+  /** A temp dir memoized per (session, `key`): `build` writes it once, and
+    * later calls with the same key return the same path, so repeat
+    * invocations in a session measure the READ of a write-once table.
+    * Keys are global across callers, so prefix them with the caller's
+    * name. The dir is deleted on JVM exit. */
+  def scratchDir(spark: SparkSession, key: String)(build: String => Unit): String =
+    scratchDirs.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, String]())
+      .computeIfAbsent(key, { _ =>
+        val d = Files.createTempDirectory("graft-scratch-").toString
+        allScratchDirs.add(d)
+        build(d)
+        d
+      })
 }

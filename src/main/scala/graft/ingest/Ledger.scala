@@ -55,18 +55,6 @@ object Ledger {
         col("length"),
         col("modificationTime").as("modification_time"))
 
-  /** Candidate files + content hashes in one pass (reads every candidate —
-    * kept for the non-incremental / first-scan use; ticks use the
-    * metadata-pre-filtered two-stage path). */
-  def fileHashes(spark: SparkSession, inDir: String, glob: String = "*.{txt,json}"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(inDir)
-      .select(
-        sha2(col("content"), 256).as("content_hash"),
-        col("path"),
-        col("length"))
-
   /** Ledger table read; empty frame with the right schema before the first
     * append. (Local-path check; on a cluster the ledger is a catalog table
     * and this becomes spark.table.) */

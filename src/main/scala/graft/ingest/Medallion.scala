@@ -1,12 +1,10 @@
 package graft.ingest
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Sessions, Tables}
+import graft.core.{Caches, Sessions, Tables}
 import graft.pipeline.EventsPipeline
 
 /** Materialized medallion over the events table: partitioned writes, the
@@ -120,38 +118,8 @@ object Medallion {
     * in-memory simulation. The scratch dir is memoized per (session, dir)
     * — write once, read many, like the materialized table it stands in
     * for (repeat invocations in a session measure the tolerant READ). */
-  private val epochScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  /** Every scratch dir ever created, deleted on JVM exit (round-2 advice:
-    * they were never cleaned up). */
-  private val allScratchDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    allScratchDirs.forEach { d =>
-      try {
-        import java.nio.file.{Files => F, Paths}
-        import scala.jdk.CollectionConverters._
-        F.walk(Paths.get(d)).iterator().asScala.toSeq.reverse.foreach(p =>
-          F.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }))
-
-  private def scratchFor(cache: java.util.Map[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]],
-      spark: SparkSession, key: String)(build: String => Unit): String =
-    cache.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .computeIfAbsent(key, { _ =>
-        val s = Files.createTempDirectory("graft-scratch-").toString
-        allScratchDirs.add(s)
-        build(s)
-        s
-      })
-
   def goldEpochsOnDisk(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = scratchFor(epochScratch, spark, dir)(
+    val scratch = Caches.scratchDir(spark, s"epochs:$dir")(
       writeGoldEpochs(EventsPipeline.silver(spark, dir), _))
     readGoldEpochs(spark, scratch)
       .orderBy(col("user_id").asc, col("event_date").asc)
@@ -202,11 +170,6 @@ object Medallion {
         col("props_struct.k").as("prop_k"),
         to_date(col("ts")).as("event_date"))
 
-  private val ndjsonScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
   /** q-entry: full NDJSON round trip — export a slice, scan it back with
     * the schema'd PERMISSIVE reader, flatten to bronze. Oracle-checked
     * against the events parquet directly, so any loss in the round trip
@@ -214,28 +177,20 @@ object Medallion {
     * export is memoized per (session, dir, slice) — write once, scan many
     * — so repeat invocations measure the schema'd PERMISSIVE read. */
   def ndjsonRoundtrip(spark: SparkSession, dir: String, maxEventId: Long = 10000): DataFrame = {
-    val scratch = scratchFor(ndjsonScratch, spark, s"$dir#$maxEventId")(
+    val scratch = Caches.scratchDir(spark, s"ndjson:$dir#$maxEventId")(
       writeEventsNdjson(spark, dir, _, maxEventId))
     bronzeFromNdjson(readEventsNdjson(spark, scratch))
       .orderBy(col("event_id").asc)
   }
 
   // -------------------------------------------- ORC / CSV round trips
-  private val orcScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-  private val csvScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
 
   /** q118: gold daily through an ORC round trip — the columnar format a
     * warehouse interchange actually hits beside parquet. Same memoized
     * write-once/read-many contract as the NDJSON trip; the oracle is
     * q12's, so any type or value loss in ORC io fails the gate. */
   def goldOrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = scratchFor(orcScratch, spark, dir)(p =>
+    val scratch = Caches.scratchDir(spark, s"orc:$dir")(p =>
       graft.pipeline.EventsPipeline.goldDaily(spark, dir)
         .write.mode("overwrite").orc(p))
     spark.read.orc(scratch)
@@ -247,7 +202,7 @@ object Medallion {
     * stringly-typed, so the schema'd read (not inferSchema) is the
     * contract: dates and longs must survive textual serialization. */
   def goldCsvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = scratchFor(csvScratch, spark, dir)(p =>
+    val scratch = Caches.scratchDir(spark, s"csv:$dir")(p =>
       graft.pipeline.EventsPipeline.goldDaily(spark, dir)
         .write.mode("overwrite").option("header", "true").csv(p))
     spark.read
@@ -256,11 +211,6 @@ object Medallion {
       .orderBy(col("user_id").asc, col("event_date").asc)
   }
 
-  private val xmlScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
   /** q149: gold daily through Spark 4's BUILT-IN XML source (SPARK-44265)
     * — the interchange format B2B/feed ingestion still speaks. Same
     * memoized write-once/read-many contract as the NDJSON/ORC/CSV trips,
@@ -268,7 +218,7 @@ object Medallion {
     * the EXPLICIT read schema (dates and longs re-parsed from element
     * text) is the contract under test, not inference. */
   def goldXmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = scratchFor(xmlScratch, spark, dir)(p =>
+    val scratch = Caches.scratchDir(spark, s"xml:$dir")(p =>
       graft.pipeline.EventsPipeline.goldDaily(spark, dir)
         .write.mode("overwrite").option("rowTag", "row").format("xml").save(p))
     spark.read
@@ -276,11 +226,6 @@ object Medallion {
       .option("rowTag", "row").format("xml").load(scratch)
       .orderBy(col("user_id").asc, col("event_date").asc)
   }
-
-  private val binScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
 
   /** q179: the `binaryFile` DataSource — Spark's opaque-blob ingestion
     * path, the scan every multimodal pipeline starts from (images/audio
@@ -298,7 +243,7 @@ object Medallion {
   def binaryIngestCensus(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val carve = docs.filter(col("doc_id") % 7 === 0)
-    val scratch = scratchFor(binScratch, spark, dir) { p =>
+    val scratch = Caches.scratchDir(spark, s"bin:$dir") { p =>
       carve.select(col("doc_id"), col("text"))
         .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
           val base = java.nio.file.Paths.get(p)
@@ -329,11 +274,6 @@ object Medallion {
 
   // ------------------------------------------------ file lineage (q141)
 
-  private val lineageScratch =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-
   /** q141: file-level lineage audit via the `_metadata` hidden columns —
     * the provenance primitive of a data lake: "which physical file did
     * this row come from, and what does each file contain?" without any
@@ -349,7 +289,7 @@ object Medallion {
     * groups as partition dirs. */
   def fileLineage(spark: SparkSession, dir: String): DataFrame = {
     Sessions.ensure(spark)
-    val scratch = scratchFor(lineageScratch, spark, dir)(p =>
+    val scratch = Caches.scratchDir(spark, s"lineage:$dir")(p =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"))
         .repartition(col("event_type"))

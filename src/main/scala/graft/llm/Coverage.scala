@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Caches, Tables}
+import graft.core.Shard.h60
 
 /** Greedy coverage-based source selection — the data-mixture question
   * ("which sources do I ingest first to cover the most distinct
@@ -165,8 +166,8 @@ object Coverage {
       .filter(col("neg_id") =!= col("query_id"))
       .filter(col("qc").isNull || col("nc").isNull || col("qc") =!= col("nc"))
       .select(col("query_id"), col("neg_id"),
-        expr("CAST(conv(substring(md5(concat(CAST(query_id AS STRING), ':', " +
-          "CAST(neg_id AS STRING))), 1, 15), 16, 10) AS BIGINT)").as("h"))
+        h60(concat(col("query_id").cast("string"), lit(":"),
+          col("neg_id").cast("string"))).as("h"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neg_id"))

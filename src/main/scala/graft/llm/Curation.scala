@@ -1,10 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.core.Shard.h60
 
 /** Dataset-curation operators a training-data pipeline runs after cleaning
   * and dedup: deterministic splits, stratified sampling, weighted source
@@ -20,9 +21,6 @@ import graft.core.Tables
   * keep the assignments independent of each other.
   */
 object Curation {
-
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Train/val/test assignment: bucket = h(salt + doc_id) % 100, cut at
     * 80/90. Per-doc and stable — the join-free, shuffle-free split. */
@@ -718,8 +716,7 @@ object Curation {
   def kfoldBalance(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val folded = docs.select(col("source"),
-      (conv(substring(md5(concat(lit("fold:"), col("doc_id").cast("string"))),
-        1, 15), 16, 10).cast("long") % k).as("fold"))
+      (h60(concat(lit("fold:"), col("doc_id").cast("string"))) % k).as("fold"))
     val cells = folded.groupBy(col("fold"), col("source"))
       .agg(count(lit(1)).as("n_docs"))
     val rowTot = cells.groupBy(col("fold")).agg(sum(col("n_docs")).as("fold_n"))
@@ -905,8 +902,8 @@ object Curation {
     val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
     val perShard = docs
       .select(
-        (conv(substring(md5(concat(lit("shard:"), col("doc_id").cast("string"))),
-          1, 15), 16, 10).cast("long") % shards).as("shard"),
+        (h60(concat(lit("shard:"), col("doc_id").cast("string"))) % shards)
+          .as("shard"),
         size(split(norm, " ")).cast("long").as("n_tokens"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))

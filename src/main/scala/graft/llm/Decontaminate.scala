@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Caches, Tables}
+import graft.core.Shard.h60
 
 /** Benchmark decontamination: flag training documents whose word n-grams
   * overlap a held-out evaluation set (the GPT-3 / Llama "13-gram overlap"
@@ -187,7 +188,7 @@ object Decontaminate {
             i => concat_ws(" ", slice(col("w"), i, lit(n)))))).as("gram"))
         .distinct())
     val based = srcShingles.withColumn("hb",
-      conv(substring(md5(col("gram")), 1, 15), 16, 10).cast("long") % MinhashP)
+      h60(col("gram")) % MinhashP)
     val slotAggs = (0 until SourceSketchSlots).map { s =>
       min((lit(minhashA(s)) * col("hb") + lit(minhashB(s))) % MinhashP).as(s"h$s")
     }

@@ -1,9 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Shard, Tables}
+import graft.core.Shard.h60
 
 /** Embedding-cosine near-dup over `documents` — the fifth dedup family of
   * the brief (exact, minhash, simhash, n-gram Jaccard, embedding-cosine).
@@ -52,22 +53,6 @@ object EmbedDedup {
   val WeightMod = 2001L
   val CosThreshold = 0.97
 
-  /** Hot-bucket cap for the band join: a (band, value) bucket holding more
-    * docs than this is hash-split into ceil(n/cap) subshards before the
-    * self-join. Template-heavy corpora concentrate sign signatures — the
-    * round-6 ScaleGrowth audit measured candidate pairs growing 99× for a
-    * 10× corpus (quadratic in the hot buckets) before this cap; with it,
-    * any bucket contributes ≤ cap·n_bucket/2 pairs, restoring the linear
-    * bound every other dedup family already enforces (ngram subshard,
-    * winnow/containment df caps). Recall loss is confined to pairs split
-    * across subshards of oversized buckets, and a true near-dup pair
-    * (cos ≥ 0.97 → most sign bits equal) collides in SEVERAL of the 5
-    * bands, so it gets that many independent chances to co-shard. */
-  val MaxBandBucketDocs = 64
-
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** Sparse hashed-TF vectors: one row per (doc, non-empty bucket). */
   def tfVectors(docs: DataFrame): DataFrame =
     TextDedup.normalized(docs)
@@ -105,28 +90,28 @@ object EmbedDedup {
   /** Candidate pairs: equi-join on any shared (band, value, subshard).
     * The band frame feeds both self-join sides — persisted so the
     * 100-projection groupBy upstream runs once, not once per side (5
-    * skinny rows/doc). Buckets over [[MaxBandBucketDocs]] are adaptively
-    * hash-split (census join on the same (band, bval) keys as the
-    * self-join — no extra shuffle beyond the tiny census frame). */
+    * skinny rows/doc). Buckets over [[Shard.Cap]] are hash-split by
+    * [[Shard.capped]] (census join on the same (band, bval) keys as the
+    * self-join — no extra shuffle beyond the tiny census frame). Without
+    * the cap the round-6 ScaleGrowth audit measured candidate pairs
+    * growing 99× for a 10× corpus: template-heavy corpora concentrate
+    * sign signatures. A true near-dup pair (cos ≥ 0.97 → most sign bits
+    * equal) collides in SEVERAL of the 5 bands, so it gets that many
+    * chances to co-shard. */
   def candidates(bandVals: DataFrame): DataFrame = {
     val bandsRaw = bandVals.select(col("doc_id"),
       explode(array((0 until NumBands).map { b =>
         struct(lit(b).as("band"), col(s"band$b").as("bval"))
       }: _*)).as("e"))
       .select(col("doc_id"), col("e.band"), col("e.bval"))
-    val census = bandsRaw.groupBy(col("band"), col("bval"))
-      .agg(count(lit(1)).as("bdocs"))
     val bands = graft.core.Caches.scratch(
-      bandsRaw.join(census, Seq("band", "bval"))
-        .withColumn("nsub",
-          expr(s"(bdocs + ${MaxBandBucketDocs - 1}) div $MaxBandBucketDocs"))
-        .withColumn("sub", h60(col("doc_id").cast("string")) % col("nsub"))
-        .select(col("doc_id"), col("band"), col("bval"), col("sub")))
-    val a = bands.select(col("band"), col("bval"), col("sub"),
+      Shard.capped(bandsRaw, Seq("band", "bval"))
+        .select(col("doc_id"), col("band"), col("bval"), col("subshard")))
+    val a = bands.select(col("band"), col("bval"), col("subshard"),
       col("doc_id").as("doc_a"))
-    val b = bands.select(col("band"), col("bval"), col("sub"),
+    val b = bands.select(col("band"), col("bval"), col("subshard"),
       col("doc_id").as("doc_b"))
-    a.join(b, Seq("band", "bval", "sub"))
+    a.join(b, Seq("band", "bval", "subshard"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
   }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Shard, Tables}
 
 /** Blocked fuzzy matching (entity resolution) — the catalog-cleaning twin
   * of document near-dedup: find records whose NAMES are within a small
@@ -51,30 +51,30 @@ object FuzzyMatch {
     * full-text quadratic — the production bound for fuzzy dedup at
     * scale (a full-document DP on 100 KB texts is 10¹⁰ cells/pair).
     *
-    * Blocking is the q29 contract verbatim: (lang, n_chars div 64
-    * length band) + an ADAPTIVE md5 subshard that caps every block at
-    * ~[[BlockCap]] docs, so candidate pairs stay LINEAR in the corpus
-    * (unsharded length-band blocks grow linearly and their pair counts
-    * quadratically — measured 94× pairs for 10× docs on this corpus).
-    * The documented trade: near-dups split across subshards are missed;
-    * recall comes from the OTHER families (q27/q28), this one adds the
-    * char-noise lens. */
+    * Blocking is the q29 contract verbatim ([[editBlocks]]), so
+    * candidate pairs stay LINEAR in the corpus (unsharded length-band
+    * blocks grow linearly and their pair counts quadratically — measured
+    * 94× pairs for 10× docs on this corpus). The documented trade:
+    * near-dups split across subshards are missed; recall comes from the
+    * OTHER families (q27/q28), this one adds the char-noise lens. */
   def editDistanceDups(spark: SparkSession, dir: String): DataFrame =
     editDistanceDups(Tables.documents(spark, dir))
 
-  def editDistanceDups(docs: DataFrame, maxDist: Int = 8,
-                       prefixLen: Int = 64): DataFrame = {
+  /** Blocking key per document for [[editDistanceDups]]: (lang,
+    * n_chars div 64 length band) capped by [[Shard.capped]],
+    * with `p` the first `prefixLen` normalized chars. */
+  def editBlocks(docs: DataFrame, prefixLen: Int = 64): DataFrame = {
     val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
     val meta = docs
       .select(col("doc_id"), col("lang"),
         expr("n_chars div 64").as("band"),
         substring(norm, 1, prefixLen).as("p"))
-    val census = meta.groupBy(col("lang"), col("band"))
-      .agg(count(lit(1)).as("bdocs"))
-    val keyed = meta.join(census, Seq("lang", "band"))
-      .withColumn("subshard",
-        conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-          .cast("long") % expr(s"(bdocs + ${BlockCap - 1}) div $BlockCap"))
+    Shard.capped(meta, Seq("lang", "band"))
+  }
+
+  def editDistanceDups(docs: DataFrame, maxDist: Int = 8,
+                       prefixLen: Int = 64): DataFrame = {
+    val keyed = editBlocks(docs, prefixLen)
     // thresholded levenshtein: the banded DP short-circuits at maxDist
     // (returns -1 above it) — O(maxDist·len) per pair instead of len²,
     // the difference between a cheap verify and the dominant bench cost
@@ -89,8 +89,4 @@ object FuzzyMatch {
         col("b.doc_id").as("doc_b"), col("dist").cast("long").as("dist"))
       .orderBy(col("doc_a").asc, col("doc_b").asc)
   }
-
-  /** Adaptive block cap for [[editDistanceDups]] — same budget as
-    * `TextDedup.ngramBlocks` (q29). */
-  val BlockCap = 64
 }

@@ -2,10 +2,10 @@ package graft.llm
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Shard, Tables}
 
 /** Opaque media payload + typed metadata. */
 case class MediaRecord(media_id: Long, payload: Array[Byte], mime: String,
@@ -369,10 +369,11 @@ object Multimodal {
     * pigeonhole equi-join on 16-bit band values — with Hamming radius
     * ≤ 3 and 4 bands, one band is ALWAYS untouched, so banding finds
     * every pair within radius whose shared bucket is under
-    * [[MaxPhashBandDocs]] (the q28 SimHash contract, bounded by the
-    * adaptive subshard cap; SCALE_GROWTH.json tracks the measured
-    * candidate count against the 4·|docs|·(cap−1)/2 bound). No
-    * all-pairs comparison anywhere. */
+    * [[Shard.Cap]] (the q28 SimHash contract, bounded by the
+    * [[Shard.capped]] split; SCALE_GROWTH.json tracks the
+    * measured candidate count against the 4·|docs|·(cap−1)/2 bound). A
+    * raster-identical mega-cluster split across subshards is still
+    * caught by exact dedup (q26). No all-pairs comparison anywhere. */
   /** The text-raster aHash frame: (doc_id, h_lo, h_hi) for docs ≥ 256
     * chars. Row-local nested higher-order functions — no corpus
     * explode; the 64 cells and both packed halves are computed inside
@@ -408,21 +409,8 @@ object Multimodal {
           |)[0]""".stripMargin).as("h"))
       .select(col("doc_id"), col("h.h_lo").as("h_lo"), col("h.h_hi").as("h_hi"))
 
-  /** Band buckets with more docs than this are hash-split into
-    * ceil(n/cap) subshards before the self-join — the same linear
-    * candidate bound every other dedup family enforces (ngram
-    * subshard, containment df cap, embed-LSH bucket cap), so candidate
-    * pairs stay ≤ 4·|docs|·(cap−1)/2 no matter how the raster space
-    * saturates. The trade is documented recall loss across subshards
-    * of OVERSIZED buckets only; a raster-identical mega-cluster is
-    * still caught by exact dedup (q26). */
-  val MaxPhashBandDocs = 64
-
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** The banded, subshard-capped hash stream of the q204 join:
-    * (doc_id, h_lo, h_hi, b, bv, sub). */
+    * (doc_id, h_lo, h_hi, b, bv, subshard). */
   private[graft] def phashBands(docs: DataFrame): DataFrame = {
     // the 17-byte/doc hash frame feeds the bucket census and both join
     // sides — scratch-persist so the raster pass over the corpus runs
@@ -438,20 +426,16 @@ object Multimodal {
             .stripMargin)).as("band"))
       .select(col("doc_id"), col("h_lo"), col("h_hi"),
         col("band.b").as("b"), col("band.bv").as("bv"))
-    val census = raw.groupBy(col("b"), col("bv"))
-      .agg(count(lit(1)).as("bdocs"))
-    graft.core.Caches.scratch(raw.join(census, Seq("b", "bv"))
-      .withColumn("sub", h60(col("doc_id").cast("string")) %
-        expr(s"(bdocs + ${MaxPhashBandDocs - 1}) div $MaxPhashBandDocs"))
+    graft.core.Caches.scratch(Shard.capped(raw, Seq("b", "bv"))
       .select(col("doc_id"), col("h_lo"), col("h_hi"),
-        col("b"), col("bv"), col("sub")))
+        col("b"), col("bv"), col("subshard")))
   }
 
   def perceptualHashDups(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val banded = phashBands(docs)
     banded.as("a").join(banded.as("b"),
         col("a.b") === col("b.b") && col("a.bv") === col("b.bv") &&
-          col("a.sub") === col("b.sub") &&
+          col("a.subshard") === col("b.subshard") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.h_lo").as("lo_a"), col("a.h_hi").as("hi_a"),

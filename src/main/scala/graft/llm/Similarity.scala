@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Caches, Tables}
+import graft.core.Shard.h60
 
 /** Similarity search over the `embeddings` table
   * (vec_id, embedding array<float>, label).
@@ -450,8 +451,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     val corpus = vecs(embeddings)
     val sample = corpus
-      .filter(pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"), lit(sampleMod)) === 0)
+      .filter(pmod(h60(col("vec_id").cast("string")), lit(sampleMod)) === 0)
       .select(col("vec_id"), col("v"))
     var centroids: Map[Int, Seq[Double]] = corpus.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int"), col("v"))

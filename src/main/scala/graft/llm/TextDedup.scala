@@ -1,18 +1,17 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, Shard, Tables}
+import graft.core.Shard.h60
 
 /** Deduplication operators for LLM training-data pipelines, over the
   * `documents` table (doc_id, text, lang, source, n_chars).
   *
-  * All hashes are md5-derived so the DuckDB oracle can compute bit-identical
-  * values: Spark `conv(substring(md5(x),1,15),16,10)` ≡ DuckDB
-  * `CAST('0x' || substr(md5(x),1,15) AS BIGINT)` (60 bits, fits a signed
-  * long). md5 is a codegen'd built-in on both sides — no UDFs anywhere.
+  * All hashes are md5-derived ([[Shard.h60]]) so the DuckDB oracle can
+  * compute bit-identical values — no UDFs anywhere.
   *
   * Scale design (100 TB):
   *  - Exact dedup is a hash-groupBy — one shuffle on the fingerprint.
@@ -31,10 +30,6 @@ object TextDedup {
     docs.select(
       col("doc_id"),
       regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("norm"))
-
-  /** Portable 60-bit hash of a string expression (optionally seeded). */
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   // ---------------------------------------------------------------- exact
 
@@ -275,12 +270,10 @@ object TextDedup {
 
   // -------------------------------------------- blocked n-gram Jaccard
 
-  /** Length-band width (chars) and per-block document cap for the blocked
-    * Jaccard join. 256-char bands keep same-length docs together (a pair at
-    * Jaccard ≥ 0.5 differs < 2× in size, so banding loses only boundary
-    * pairs); [[MaxBlockDocs]] caps the docs any one block may hold. */
+  /** Length-band width (chars) for the blocked Jaccard join. 256-char
+    * bands keep same-length docs together (a pair at Jaccard ≥ 0.5 differs
+    * < 2× in size, so banding loses only boundary pairs). */
   val BandChars = 256
-  val MaxBlockDocs = 64
 
   /** Blocking key per document for [[ngramJaccardDups]]:
     * (lang, source, length-band, subshard).
@@ -292,11 +285,8 @@ object TextDedup {
     *    crawl source; cross-source dups are MinHash-LSH's job, q27);
     *  - length-band (`n_chars div 256`): a J ≥ 0.5 pair differs < 2× in
     *    shingle count, so same-size banding is cheap recall to pay;
-    *  - subshard: an ADAPTIVE hash split — blocks over [[MaxBlockDocs]]
-    *    docs are divided into ceil(docs/cap) hash shards of ~cap docs, so
-    *    comparisons per block are ≤ cap² × shards = O(cap · n): LINEAR in
-    *    corpus size with a documented recall loss confined to oversized
-    *    blocks (pairs split across subshards), never O(n²).
+    *  - subshard: the [[Shard.capped]] split of blocks over [[Shard.Cap]]
+    *    docs, so comparisons stay LINEAR in corpus size, never O(n²).
     * All arithmetic is integer and md5-based, mirrored exactly by the
     * DuckDB oracle. */
   def ngramBlocks(docs: DataFrame): DataFrame = {
@@ -304,12 +294,7 @@ object TextDedup {
       .join(docs.select(col("doc_id"), col("lang"), col("source"), col("n_chars")),
         Seq("doc_id"))
       .withColumn("band", expr(s"n_chars div $BandChars"))
-    // block census is tiny (langs × sources × bands rows) — auto-broadcast
-    val census = base.groupBy(col("lang"), col("source"), col("band"))
-      .agg(count(lit(1)).as("bdocs"))
-    base.join(census, Seq("lang", "source", "band"))
-      .withColumn("nsub", expr(s"(bdocs + ${MaxBlockDocs - 1}) div $MaxBlockDocs"))
-      .withColumn("subshard", h60(col("doc_id").cast("string")) % col("nsub"))
+    Shard.capped(base, Seq("lang", "source", "band"))
       .select(col("doc_id"), col("norm"), col("lang"), col("source"),
         col("band"), col("subshard"))
   }
@@ -1309,8 +1294,7 @@ object TextDedup {
   def shardLocality(docs: DataFrame): DataFrame = {
     val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
     val shards = docs.select(col("doc_id"),
-      (conv(substring(md5(norm), 1, 15), 16, 10).cast("long") % 64)
-        .as("shard"))
+      (h60(norm) % 64).as("shard"))
     val pairs = minhashNearDups(docs)
       .withColumn("kind",
         when(col("jaccard") >= 0.999999, lit("exact")).otherwise(lit("near")))

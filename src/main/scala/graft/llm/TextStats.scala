@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.core.Shard.h60
 
 /** Text-analysis operators for training-data curation over `documents`:
   * token counting, corpus statistics, quality scoring, n-gram language ID,
@@ -47,7 +48,7 @@ object TextStats {
         ((length(col("norm")) - col("n_tokens") + lit(1)).cast("double")
           / col("n_tokens")).as("mean_token_len"),
         md5(col("norm")).as("fingerprint"),
-        (conv(substring(md5(col("norm")), 1, 15), 16, 10).cast("long") % 64).as("shard"))
+        (h60(col("norm")) % 64).as("shard"))
       .orderBy(col("doc_id").asc)
 
   def docFeatures(spark: SparkSession, dir: String): DataFrame =
@@ -1886,9 +1887,9 @@ object TextStats {
       .select(col("doc_id"), col("n_chars"), col("n"), col("n1"),
         explode(expr(s"sequence(0, ${b - 1})")).as("b"))
       .withColumn("assign",
-        (conv(substring(md5(concat(lit("perm:"), col("b").cast("string"),
-          lit(":"), col("doc_id").cast("string"))), 1, 15), 16, 10)
-          .cast("long") % col("n") < col("n1")).cast("long"))
+        (h60(concat(lit("perm:"), col("b").cast("string"),
+          lit(":"), col("doc_id").cast("string"))) % col("n") < col("n1"))
+          .cast("long"))
       .groupBy(col("b"))
       .agg(sum(col("assign")).as("n1b"),
         sum(col("assign") * col("n_chars")).as("s1b"))
@@ -2122,8 +2123,7 @@ object TextStats {
     * (kind, fraction) on the gram-count frame — never 4 corpus scans. */
   def sampleCurve(docs: DataFrame): DataFrame = {
     val fracs = Seq(10, 25, 50, 100)
-    val bucket = conv(substring(md5(concat(lit("curve:"),
-      col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long") % 100
+    val bucket = h60(concat(lit("curve:"), col("doc_id").cast("string"))) % 100
     val toks = docs.select(col("doc_id"), bucket.as("b"), split(norm, " ").as("w"))
     val words = toks.select(col("b"), explode(col("w")).as("gram"))
       .withColumn("kind", lit("word"))

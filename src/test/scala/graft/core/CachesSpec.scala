@@ -29,4 +29,20 @@ class CachesSpec extends SparkSpecBase {
     Caches.releaseScratch(spark)
     assert(Caches.pendingScratch(spark) === 0)
   }
+
+  test("scratch dirs: the same key builds once, distinct keys get distinct dirs") {
+    var builds = 0
+    def dir(key: String): String = Caches.scratchDir(spark, key) { d =>
+      builds += 1
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(d, "marker"), key)
+    }
+    val a = dir("caches-spec:a")
+    assert(dir("caches-spec:a") === a)
+    assert(builds === 1)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(a, "marker")) ===
+      "caches-spec:a")
+    val b = dir("caches-spec:b")
+    assert(b !== a)
+    assert(builds === 2)
+  }
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
-import graft.core.Tables
+import graft.core.{Shard, Tables}
 
 class MultimodalSpec extends SparkSpecBase {
 
@@ -172,7 +172,7 @@ class MultimodalSpec extends SparkSpecBase {
         (half >> (16 * (b % 2))) & 65535
       }.values.map(_.size).max
     }).max
-    assert(maxBucket <= Multimodal.MaxPhashBandDocs,
+    assert(maxBucket <= Shard.Cap,
       "fixture corpus saturated a bucket; equality claim no longer applies")
     val brute = (for {
       a <- hashes; b <- hashes if a._1 < b._1
@@ -195,12 +195,12 @@ class MultimodalSpec extends SparkSpecBase {
     val text = Seq.fill(64)("abcd").mkString("")
     val docs = (1L to 200L).map(i => (i, text)).toDF("doc_id", "text")
     val bands = Multimodal.phashBands(docs)
-    val maxShard = bands.groupBy("b", "bv", "sub").count()
+    val maxShard = bands.groupBy("b", "bv", "subshard").count()
       .agg(org.apache.spark.sql.functions.max("count")).head.getLong(0)
     // hash-mod sharding is uneven but each shard must stay well under
     // the un-capped bucket size; the PAIR bound is what matters
-    val pairBound = 200L * 4 * (Multimodal.MaxPhashBandDocs - 1) / 2
-    val candPairs = bands.groupBy("b", "bv", "sub").count()
+    val pairBound = 200L * 4 * (Shard.Cap - 1) / 2
+    val candPairs = bands.groupBy("b", "bv", "subshard").count()
       .agg(org.apache.spark.sql.functions
         .sum(org.apache.spark.sql.functions.expr("count * (count - 1) div 2")))
       .head.getLong(0)

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
-import graft.core.Tables
+import graft.core.{Shard, Tables}
 
 class TextDedupSpec extends SparkSpecBase {
 
@@ -96,8 +96,8 @@ class TextDedupSpec extends SparkSpecBase {
       .collect()
     assert(blocks.length === 4, s"expected 4 subshards, got ${blocks.length}")
     val maxBlock = blocks.map(_.getAs[Long]("docs")).max
-    assert(maxBlock <= TextDedup.MaxBlockDocs,
-      s"block of $maxBlock docs exceeds cap ${TextDedup.MaxBlockDocs}")
+    assert(maxBlock <= Shard.Cap,
+      s"block of $maxBlock docs exceeds cap ${Shard.Cap}")
   }
 
   test("winnow finds copies of discriminative text; boilerplate-only overlap is suppressed") {
@@ -256,7 +256,7 @@ class TextDedupSpec extends SparkSpecBase {
       .agg(countDistinct(col("subshard")).as("nsub"), count(lit(1)).as("docs"))
       .collect()
     blocks.foreach { r =>
-      if (r.getAs[Long]("docs") <= TextDedup.MaxBlockDocs)
+      if (r.getAs[Long]("docs") <= Shard.Cap)
         assert(r.getAs[Long]("nsub") === 1L,
           s"small block split unnecessarily: $r")
     }
