@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
+import graft.core.Sessions
+
 /** Per-JOB wall-time split of one registered query — the diagnostic the
   * iterative-kernel optimization recipe starts from ("diagnose before
   * optimizing"): a warm, isolated run of `SparkEntry.queries(name)` with
@@ -17,7 +19,7 @@ object JobSplit {
     val dir = args(0)
     val name = args(1)
     val warmups = if (args.length > 2) args(2).toInt else 3
-    val spark = graft.core.Sessions.local(32, "graft-jobsplit")
+    val spark = Sessions.local(Sessions.defaultCpus, "graft-jobsplit")
     val q = SparkEntry.queries(name)
     val jobs = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     val starts = scala.collection.mutable.HashMap[Int, Long]()

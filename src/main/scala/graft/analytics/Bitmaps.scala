@@ -1,9 +1,7 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.pipeline.EventsPipeline
 
 /** Bitmap-index aggregation — the roaring-bitmap idiom expressed with
   * nothing but built-in integer ops, so it stays inside whole-stage
@@ -64,9 +62,6 @@ object Bitmaps {
       .orderBy(col("week").asc)
   }
 
-  def bitmapRetention(spark: SparkSession, dir: String): DataFrame =
-    bitmapRetention(EventsPipeline.silver(spark, dir))
-
   /** q205: the full cohort triangle from the same bitmaps — cohort =
     * the user's FIRST active week in the window, and for every
     * (cohort, week ≥ cohort) cell: how many of the cohort were active
@@ -107,9 +102,6 @@ object Bitmaps {
           .as("active_ppm"))
       .orderBy(col("cohort").asc, col("week").asc)
   }
-
-  def cohortMatrix(spark: SparkSession, dir: String): DataFrame =
-    cohortMatrix(EventsPipeline.silver(spark, dir))
 
   /** q207: segment-overlap matrix (audience intersection) via bitmap
     * PATTERN COUNTING — the third bitmap trick after per-user masks
@@ -156,7 +148,4 @@ object Bitmaps {
           .as("jaccard_ppm"))
       .orderBy(col("type_a").asc, col("type_b").asc)
   }
-
-  def segmentOverlap(spark: SparkSession, dir: String): DataFrame =
-    segmentOverlap(EventsPipeline.silver(spark, dir))
 }

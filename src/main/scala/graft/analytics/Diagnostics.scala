@@ -49,9 +49,6 @@ object Diagnostics {
       .orderBy(col("rank").asc)
   }
 
-  def keySkewCensus(spark: SparkSession, dir: String): DataFrame =
-    keySkewCensus(Tables.events(spark, dir))
-
   /** q278: MEDIAN/MAD robust-outlier census over monthly order totals —
     * the data-cleaning screen that replaces mean/stddev z-scores where
     * the data is skewed or already polluted (one fat-finger order drags
@@ -126,9 +123,6 @@ object Diagnostics {
       .orderBy(col("mon").asc)
   }
 
-  def robustOutlierCensus(spark: SparkSession, dir: String): DataFrame =
-    robustOutlierCensus(Tables.orders(spark, dir))
-
   /** q282: BENFORD first-digit audit over order totals — the classic
     * forensic-accounting screen: naturally-arising monetary amounts put
     * ~30.1% of first digits at 1 (P(d) = log₁₀(1+1/d)); fabricated or
@@ -162,9 +156,6 @@ object Diagnostics {
           .as("dev_ppm"))
       .orderBy(col("d").asc)
   }
-
-  def benfordAudit(spark: SparkSession, dir: String): DataFrame =
-    benfordAudit(Tables.orders(spark, dir))
 
   /** Heavy hitters via the [[graft.functions.MisraGries]] sketch, gated
     * the q38/q64 way: the sketch's CONTENT is engine-specific (and
@@ -237,9 +228,6 @@ object Diagnostics {
       .select(col("bucket").cast("long").as("bucket"),
         col("n_docs").cast("long").as("n_docs"), col("checksum"))
       .orderBy(col("bucket").asc)
-
-  def merkleBuckets(spark: SparkSession, dir: String): DataFrame =
-    merkleBuckets(Tables.documents(spark, dir))
 
   /** Join FAN-OUT histogram for orders → lineitem: how many orders have
     * 0, 1, 2, … lineitems. The cardinality profile every join planner
@@ -731,7 +719,4 @@ object Diagnostics {
           .as("gap_ppm"))
       .orderBy(col("event_type").asc)
   }
-
-  def conformalCoverage(spark: SparkSession, dir: String): DataFrame =
-    conformalCoverage(graft.pipeline.EventsPipeline.silver(spark, dir))
 }

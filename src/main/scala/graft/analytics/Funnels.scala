@@ -1,10 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.pipeline.EventsPipeline
 
 /** Funnel and cohort-retention analytics — the two classic event-sequence
   * reports every product-analytics surface ships. Both are expressed as
@@ -38,9 +36,6 @@ object Funnels {
       .withColumn("purchase_given_click_ppm",
         expr("reached_purchase * 1000000 div reached_click"))
   }
-
-  def funnel(spark: SparkSession, dir: String): DataFrame =
-    funnel(EventsPipeline.silver(spark, dir))
 
   /** q276: U-SHAPED multi-touch attribution — the position-based credit
     * model marketing analytics ships alongside first/last-touch: every
@@ -87,9 +82,6 @@ object Funnels {
       .orderBy(col("event_type").asc)
   }
 
-  def uShapedAttribution(spark: SparkSession, dir: String): DataFrame =
-    uShapedAttribution(EventsPipeline.silver(spark, dir))
-
   /** q281: DAILY CHURN-HAZARD table — discrete-time survival analysis
     * over user activity: for each day, how many users are AT RISK (their
     * observed activity span covers the day) and how many CHURN (it is
@@ -122,9 +114,6 @@ object Funnels {
         expr("n_churned * 1000000 div n_at_risk").cast("long").as("hazard_ppm"))
       .orderBy(col("d").asc)
   }
-
-  def churnHazard(spark: SparkSession, dir: String): DataFrame =
-    churnHazard(EventsPipeline.silver(spark, dir))
 
   /** q283: ONE-SWEEP MEDIAN POLISH of the weekday × hour activity
     * matrix — Tukey's robust two-way decomposition: cell = row effect
@@ -170,9 +159,6 @@ object Funnels {
       .orderBy(col("wd").asc, col("hr").asc)
   }
 
-  def medianPolish(spark: SparkSession, dir: String): DataFrame =
-    medianPolish(EventsPipeline.silver(spark, dir))
-
   /** q284: FANO-FACTOR burstiness census — per (user, event_type), the
     * index of dispersion of DAILY event counts (variance/mean, exact
     * integer ppm via (n·Σx² − (Σx)²)·10⁶ div (n·Σx)); a Poisson arrival
@@ -211,9 +197,6 @@ object Funnels {
       .orderBy(col("event_type").asc)
   }
 
-  def fanoBurstiness(spark: SparkSession, dir: String): DataFrame =
-    fanoBurstiness(EventsPipeline.silver(spark, dir))
-
   /** Day-1 / day-7 cohort retention: cohort = a user's first active date;
     * retained = active exactly k days later. Exact ppm rates per cohort.
     * The (user, date) activity set is distinct-compressed BEFORE the
@@ -235,9 +218,6 @@ object Funnels {
       .withColumn("d7_ppm", expr("d7_retained * 1000000 div cohort_users"))
       .orderBy(col("cohort").asc)
   }
-
-  def retentionCohorts(spark: SparkSession, dir: String): DataFrame =
-    retentionCohorts(EventsPipeline.silver(spark, dir))
 
   /** q241: REVENUE retention matrix — the value-weighted sibling of the
     * user-count cohorts (q80/q205): per weekly cohort (week of first
@@ -285,9 +265,6 @@ object Funnels {
       .orderBy(col("cohort").asc, col("week").asc)
   }
 
-  def revenueRetention(spark: SparkSession, dir: String): DataFrame =
-    revenueRetention(EventsPipeline.silver(spark, dir))
-
   /** q146: first-order Markov transition matrix over each user's event
     * sequence — the "what do users do next" primitive behind journey
     * mining and next-action models. Consecutive-pair extraction is a
@@ -315,9 +292,6 @@ object Funnels {
       .withColumn("prob_ppm", expr("transitions * 1000000 div row_total"))
       .orderBy(col("prev_type").asc, col("next_type").asc)
   }
-
-  def eventTransitions(spark: SparkSession, dir: String): DataFrame =
-    eventTransitions(EventsPipeline.silver(spark, dir))
 
   /** q214: top-k 3-event paths — sequential pattern mining one order up
     * from the q146 transition matrix: the most common (t₁→t₂→t₃)
@@ -349,9 +323,6 @@ object Funnels {
         col("t3").asc)
   }
 
-  def eventTrigrams(spark: SparkSession, dir: String): DataFrame =
-    eventTrigrams(EventsPipeline.silver(spark, dir))
-
   /** Second-order sequence motifs: every consecutive TRIPLE in each
     * user's event sequence, counted corpus-wide — the 3-gram
     * generalization of [[eventTransitions]], and the point where journey
@@ -381,9 +352,6 @@ object Funnels {
         expr("n * 1000000 div prefix_total").cast("long").as("cond_ppm"))
       .orderBy(col("t1").asc, col("t2").asc, col("t3").asc)
   }
-
-  def motifCensus(spark: SparkSession, dir: String): DataFrame =
-    motifCensus(EventsPipeline.silver(spark, dir))
 
   /** q192: stationary distribution of the event-type Markov chain —
     * where does user behavior settle if the observed transition matrix
@@ -436,9 +404,6 @@ object Funnels {
       .orderBy(col("event_type").asc)
   }
 
-  def markovStationary(spark: SparkSession, dir: String): DataFrame =
-    markovStationary(EventsPipeline.silver(spark, dir))
-
   /** q200: last-touch attribution — every purchase credits the user's
     * most recent PRECEDING non-purchase event within a 7-day lookback;
     * older or absent touches attribute to 'none'. The conversion-
@@ -477,9 +442,6 @@ object Funnels {
         expr("conversions * 1000000 div total").cast("long").as("share_ppm"))
       .orderBy(col("attributed").asc)
   }
-
-  def lastTouchAttribution(spark: SparkSession, dir: String): DataFrame =
-    lastTouchAttribution(EventsPipeline.silver(spark, dir))
 
   /** q312: ABSORBING-MARKOV EXPECTED STEPS — for every transient event
     * type, the expected number of further events before the user reaches
@@ -537,7 +499,4 @@ object Funnels {
     }.toDF("event_type", "n_out", "p_absorb_ppm", "exp_steps_milli")
       .orderBy(col("event_type").asc)
   }
-
-  def absorbingMarkov(spark: SparkSession, dir: String): DataFrame =
-    absorbingMarkov(EventsPipeline.silver(spark, dir))
 }

@@ -1,10 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.core.Tables
 
 /** Slowly-changing-dimension (SCD type 2) history build: collapse a keyed
   * event stream into validity intervals `[valid_from, valid_to)` per state
@@ -48,7 +46,4 @@ object History {
       .select(col("o_custkey"), col("o_orderstatus"), col("valid_from"),
         col("valid_to"), col("is_current"), col("n_orders"))
   }
-
-  def statusHistory(spark: SparkSession, dir: String): DataFrame =
-    statusHistory(Tables.orders(spark, dir))
 }

@@ -3,7 +3,6 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.pipeline.EventsPipeline
 
 /** Incremental aggregate (materialized-view) maintenance: keep a gold
@@ -101,9 +100,6 @@ object Incremental {
         min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
       .orderBy(col("status").asc)
   }
-
-  def corpusDiff(spark: SparkSession, dir: String): DataFrame =
-    corpusDiff(Tables.documents(spark, dir))
 
   // ------------------------------------------- MERGE semantics (q129)
 

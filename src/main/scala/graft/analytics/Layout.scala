@@ -184,9 +184,6 @@ object Layout {
     * equi-joins on the shifted coordinate. The curve transforms are
     * flat integer projection chains (see [[graft.functions.Hilbert]]),
     * no UDF. */
-  def curveLocalityAudit(spark: SparkSession, dir: String): DataFrame =
-    curveLocalityAudit(Tables.orders(spark, dir))
-
   def curveLocalityAudit(orders: DataFrame): DataFrame = {
     val bits = LocalityBits
     val n = 1L << bits

@@ -15,8 +15,8 @@ import graft.pipeline.EventsPipeline
   * reference, where reports read the silver Iceberg table,
   * transform_job.py:93-95) — callers get it once from
   * [[EventsPipeline.silver]], which persists it, so no report recomputes the
-  * dedup shuffle. The (spark, dir) overloads exist for the driver's
-  * per-query entry points and resolve to the same cached frame.
+  * dedup shuffle. The driver's per-query entry points bind each report to
+  * that same cached frame in `SparkEntry` (its `silver` binder).
   *
   * Determinism contract (for the DuckDB oracle): every result is fully
   * ordered by its output columns, timestamps are emitted as second-precision
@@ -38,9 +38,6 @@ object Reports {
       .orderBy(col("listen_count").desc, col("user_id").asc)
       .limit(n)
 
-  def topUsers(spark: SparkSession, dir: String): DataFrame =
-    topUsers(EventsPipeline.silver(spark, dir))
-
   /** A13: first event per user (min_by semantics via window).
     * Reference: analysis.ipynb block A3. */
   def firstEventPerUser(silver: DataFrame): DataFrame = {
@@ -54,9 +51,6 @@ object Reports {
         ts2str(col("ts")).as("first_ts"))
       .orderBy(col("user_id").asc)
   }
-
-  def firstEventPerUser(spark: SparkSession, dir: String): DataFrame =
-    firstEventPerUser(EventsPipeline.silver(spark, dir))
 
   /** P7: users active on a given date. Partition-prunable at scale when the
     * table is date-partitioned. Reference: analysis.ipynb block A2. */
@@ -74,9 +68,6 @@ object Reports {
     silver
       .select(col("event_date")).distinct()
       .orderBy(col("event_date").asc)
-
-  def distinctDates(spark: SparkSession, dir: String): DataFrame =
-    distinctDates(EventsPipeline.silver(spark, dir))
 
   /** J1/W4: 7-day rolling distinct active users.
     * Reference: ingest_job_glue.py:30-41 writes this as a theta self-join
@@ -101,9 +92,6 @@ object Reports {
       .orderBy(col("d").asc)
   }
 
-  def activeUsers7Day(spark: SparkSession, dir: String): DataFrame =
-    activeUsers7Day(EventsPipeline.silver(spark, dir))
-
   /** A7/W3: hourly histogram with grand-total percentage.
     * Reference: analysis-minio.ipynb cell 4. pct left unrounded: identical
     * integer operands + fixed op order ⇒ bit-identical double in any engine. */
@@ -118,9 +106,6 @@ object Reports {
         ((col("cnt") * lit(100.0)) / col("total")).as("pct"))
       .orderBy(col("hour").asc)
   }
-
-  def hourlyActivity(spark: SparkSession, dir: String): DataFrame =
-    hourlyActivity(EventsPipeline.silver(spark, dir))
 
   /** §2.8 scalar-function closure: the reference's
     * `ROUND(cnt * 100.0 / total, 2)` (analysis.ipynb `46e60a34`,
@@ -148,9 +133,6 @@ object Reports {
       .orderBy(col("hour").asc)
   }
 
-  def hourlyActivityRounded(spark: SparkSession, dir: String): DataFrame =
-    hourlyActivityRounded(EventsPipeline.silver(spark, dir))
-
   /** A8: monthly trends. Reference: analysis-minio.ipynb cell 4. */
   def monthlyTrends(silver: DataFrame): DataFrame =
     silver
@@ -160,9 +142,6 @@ object Reports {
         countDistinct(col("user_id")).as("unique_users"),
         countDistinct(col("event_type")).as("unique_types"))
       .orderBy(col("year").asc, col("month").asc)
-
-  def monthlyTrends(spark: SparkSession, dir: String): DataFrame =
-    monthlyTrends(EventsPipeline.silver(spark, dir))
 
   /** A9/P6: listening-diversity ratio with HAVING.
     * Reference: analysis-minio.ipynb cell 4. */
@@ -178,9 +157,6 @@ object Reports {
         ((col("unique_types") * lit(100.0)) / col("total_listens")).as("diversity_pct"))
       .orderBy(col("user_id").asc)
 
-  def diversityRatio(spark: SparkSession, dir: String): DataFrame =
-    diversityRatio(EventsPipeline.silver(spark, dir))
-
   /** A4: per-user profile — multi-distinct + min/max timestamps.
     * Reference: analysis-minio.ipynb cells 2-4 ("Top 10 Users"). */
   def userProfile(silver: DataFrame): DataFrame =
@@ -193,9 +169,6 @@ object Reports {
         min(ts2str(col("ts"))).as("first_seen"),
         max(ts2str(col("ts"))).as("last_seen"))
       .orderBy(col("user_id").asc)
-
-  def userProfile(spark: SparkSession, dir: String): DataFrame =
-    userProfile(EventsPipeline.silver(spark, dir))
 
   /** A4 at 100 TB: the exact multi-countDistinct above plans via Expand
     * (3× row multiplication before the shuffle). This variant swaps the
@@ -214,9 +187,6 @@ object Reports {
         approx_count_distinct(col("event_date"), rsd).as("active_days"),
         approx_count_distinct(col("event_type"), rsd).as("unique_types"))
       .orderBy(col("user_id").asc)
-
-  def userProfileApprox(spark: SparkSession, dir: String): DataFrame =
-    userProfileApprox(EventsPipeline.silver(spark, dir))
 
   /** [[userProfileApprox]] with the tolerance check INSIDE the query
     * (round-3 review: the raw HLL estimates carried only a rows-only
@@ -243,9 +213,6 @@ object Reports {
           <= col("exact_types") * lit(tol)).as("unique_types_ok"))
       .orderBy(col("user_id").asc)
   }
-
-  def userProfileApproxChecked(spark: SparkSession, dir: String): DataFrame =
-    userProfileApproxChecked(EventsPipeline.silver(spark, dir))
 
   /** Quantile sketch with the accuracy guarantee checked INSIDE the query
     * — the percentile counterpart of [[userProfileApproxChecked]].
@@ -294,9 +261,6 @@ object Reports {
       .orderBy(col("event_type").asc)
   }
 
-  def valueQuantilesApproxChecked(spark: SparkSession, dir: String): DataFrame =
-    valueQuantilesApproxChecked(EventsPipeline.silver(spark, dir))
-
   /** MERGEABLE distinct-count sketches (DataSketches HLL): daily per-type
     * sketches built once, then UNIONED into weekly estimates — no second
     * pass over raw events. This re-aggregability is the property that
@@ -326,9 +290,6 @@ object Reports {
       .orderBy(col("event_type").asc, col("week").asc)
   }
 
-  def weeklyDistinctSketched(spark: SparkSession, dir: String): DataFrame =
-    weeklyDistinctSketched(EventsPipeline.silver(spark, dir))
-
   /** Skew-safe distinct count under a LOW-cardinality group key — the
     * salted two-stage aggregation pattern, written out.
     *
@@ -355,9 +316,6 @@ object Reports {
       .agg(sum(col("partial_users")).as("unique_users"))
       .orderBy(col("event_type").asc)
 
-  def typeUniqueUsersSalted(spark: SparkSession, dir: String): DataFrame =
-    typeUniqueUsersSalted(EventsPipeline.silver(spark, dir))
-
   /** A5: daily activity profile. Reference: analysis-minio.ipynb cell 3. */
   def dailyProfile(silver: DataFrame): DataFrame =
     silver
@@ -368,9 +326,6 @@ object Reports {
         countDistinct(col("event_type")).as("unique_types"))
       .orderBy(col("event_date").asc)
 
-  def dailyProfile(spark: SparkSession, dir: String): DataFrame =
-    dailyProfile(EventsPipeline.silver(spark, dir))
-
   /** A6: top event types (≈ top tracks/artists).
     * Reference: analysis-minio.ipynb cell 4. */
   def topTypes(silver: DataFrame, n: Int = 10): DataFrame =
@@ -379,9 +334,6 @@ object Reports {
       .agg(count(lit(1)).as("cnt"), countDistinct(col("user_id")).as("unique_users"))
       .orderBy(col("cnt").desc, col("event_type").asc)
       .limit(n)
-
-  def topTypes(spark: SparkSession, dir: String): DataFrame =
-    topTypes(EventsPipeline.silver(spark, dir))
 
   /** W1-adjacent window-frame surface: running totals + lag/lead per user.
     * The reference only uses row_number; we expose the full frame machinery
@@ -405,9 +357,6 @@ object Reports {
       .orderBy(col("user_id").asc, col("event_id").asc)
   }
 
-  def runningTotals(spark: SparkSession, dir: String): DataFrame =
-    runningTotals(EventsPipeline.silver(spark, dir))
-
   // --------------------------------------------------- pivot / ntile
 
   /** Fixed domain for the event-type pivot: an EXPLICIT value list keeps
@@ -428,9 +377,6 @@ object Reports {
       .na.fill(0L, EventTypes)
       .orderBy(col("user_id").asc)
 
-  def userTypePivot(spark: SparkSession, dir: String): DataFrame =
-    userTypePivot(EventsPipeline.silver(spark, dir))
-
   /** UNPIVOT — the pivot's inverse (wide activity matrix back to long
     * (user, type, cnt) rows). `Dataset.unpivot` is a narrow, shuffle-free
     * projection: each wide row explodes to k long rows in place, so at
@@ -445,9 +391,6 @@ object Reports {
         EventTypes.map(col).toArray,
         "event_type", "cnt")
       .orderBy(col("user_id").asc, col("event_type").asc)
-
-  def userTypeUnpivot(spark: SparkSession, dir: String): DataFrame =
-    userTypeUnpivot(EventsPipeline.silver(spark, dir))
 
   /** MAP-typed profile: each user's event_type→count map assembled with
     * `map_from_entries` over a SORTED entry array (map equality/serialized
@@ -474,9 +417,6 @@ object Reports {
         size(map_filter(col("m"), (_, v) => v >= minCount))
           .as("n_major_types"))
       .orderBy(col("user_id").asc)
-
-  def userTypeMapProfile(spark: SparkSession, dir: String): DataFrame =
-    userTypeMapProfile(EventsPipeline.silver(spark, dir))
 
   /** Rank-distribution statistics (`percent_rank`, `cume_dist`) over the
     * per-user volume table — the calibration curve behind "you are in the
@@ -517,9 +457,6 @@ object Reports {
       .orderBy(col("user_id").asc)
   }
 
-  def rankDistributions(spark: SparkSession, dir: String): DataFrame =
-    rankDistributions(EventsPipeline.silver(spark, dir))
-
   /** first/last/nth_value across frames — including the classic
     * DEFAULT-FRAME GOTCHA pinned as data: with the default frame (RANGE
     * UNBOUNDED PRECEDING..CURRENT ROW), `last_value` is just the current
@@ -540,9 +477,6 @@ object Reports {
       nth_value(col("listen_count"), 2).over(wFull).as("second_cnt"))
       .orderBy(col("user_id").asc, col("event_date").asc)
   }
-
-  def valueWindows(spark: SparkSession, dir: String): DataFrame =
-    valueWindows(EventsPipeline.silver(spark, dir))
 
   /** Time-RANGE rolling window: 7-day rolling listen totals per user over
     * the daily gold rollup. The frame is `RANGE BETWEEN INTERVAL 6 DAY
@@ -606,9 +540,6 @@ object Reports {
       .orderBy(col("quartile").asc)
   }
 
-  def userQuartiles(spark: SparkSession, dir: String): DataFrame =
-    userQuartiles(EventsPipeline.silver(spark, dir))
-
   /** Fixed-bucket value histogram via `width_bucket`: explicit bounds are
     * the scale-safe histogram (data-dependent bounds need a pre-pass;
     * fixed bounds are one map-side-combinable aggregation — and the
@@ -625,9 +556,6 @@ object Reports {
         min(col("value")).as("lo_seen"),
         max(col("value")).as("hi_seen"))
       .orderBy(col("bucket").asc)
-
-  def valueHistogram(spark: SparkSession, dir: String): DataFrame =
-    valueHistogram(EventsPipeline.silver(spark, dir))
 
   /** q147: day-over-day volume-spike census — the monitoring primitive
     * behind ingest anomaly alerts ("yesterday's partition is 2× / half
@@ -654,9 +582,6 @@ object Reports {
         col("delta"), col("spike"))
       .orderBy(col("event_date").asc)
   }
-
-  def dailySpikeCensus(spark: SparkSession, dir: String): DataFrame =
-    dailySpikeCensus(EventsPipeline.silver(spark, dir))
 
   /** q153: k-anonymity census over behavioral profiles — the re-
     * identification risk measurement that complements the PII scrub (q70)
@@ -686,9 +611,6 @@ object Reports {
         (col("k") * col("n_profiles")).as("n_users"))
       .orderBy(col("k").asc)
   }
-
-  def kAnonymityCensus(spark: SparkSession, dir: String): DataFrame =
-    kAnonymityCensus(EventsPipeline.silver(spark, dir))
 
   /** Market-basket co-occurrence LIFT between event types: for every
     * unordered type pair, how much more often users exhibit both than
@@ -730,9 +652,6 @@ object Reports {
       .orderBy(col("type_a").asc, col("type_b").asc)
   }
 
-  def typeLift(spark: SparkSession, dir: String): DataFrame =
-    typeLift(EventsPipeline.silver(spark, dir))
-
   /** Cross-SERIES covariance between event types' daily volumes: for
     * every unordered type pair, the exact integer covariance numerator
     * n·Σxy − Σx·Σy over the days both series exist — do types move
@@ -765,9 +684,6 @@ object Reports {
         expr("n_days * sxy - sx * sy").cast("long").as("cov_num"))
       .orderBy(col("type_a").asc, col("type_b").asc)
   }
-
-  def typeCovariance(spark: SparkSession, dir: String): DataFrame =
-    typeCovariance(EventsPipeline.silver(spark, dir))
 
   /** q188: two-sample Kolmogorov–Smirnov distance between the `value`
     * distributions of two event types — the canonical nonparametric
@@ -838,9 +754,6 @@ object Reports {
         expr("ks_num * 1000000 div (n1 * n2)").cast("long").as("ks_ppm"))
   }
 
-  def ksDistance(spark: SparkSession, dir: String): DataFrame =
-    ksDistance(EventsPipeline.silver(spark, dir))
-
   /** q189: l-diversity census — the companion privacy gauge to the
     * k-anonymity profile census (q153). Quasi-identifier = the
     * (event_type, hour) cell an "anonymized" event exposes; sensitive
@@ -865,9 +778,6 @@ object Reports {
         max(col("l")).as("max_l"),
         sum(when(col("l") < 5, 1L).otherwise(0L)).cast("long").as("cells_below_5"))
       .orderBy(col("event_type").asc)
-
-  def lDiversityCensus(spark: SparkSession, dir: String): DataFrame =
-    lDiversityCensus(EventsPipeline.silver(spark, dir))
 
   /** q271: t-CLOSENESS census — the third leg of the privacy triad
     * (q153 k-anonymity: how many share a profile; q189 l-diversity: how
@@ -921,9 +831,6 @@ object Reports {
       .orderBy(col("event_type").asc)
   }
 
-  def tClosenessCensus(spark: SparkSession, dir: String): DataFrame =
-    tClosenessCensus(EventsPipeline.silver(spark, dir))
-
   /** q198: event-time disorder census — per user, the Spearman rank
     * agreement between ARRIVAL order (event_id) and EVENT-TIME order
     * (ts): ρ = 1 − 6Σd²⁄(n³−n). The out-of-orderness measurement that
@@ -957,9 +864,6 @@ object Reports {
           .as("rho_ppm"))
       .orderBy(col("user_id").asc)
   }
-
-  def disorderCensus(spark: SparkSession, dir: String): DataFrame =
-    disorderCensus(EventsPipeline.silver(spark, dir))
 
   /** q222: A/A balance census — the experimentation-platform sanity
     * check run before trusting any A/B readout: hash-split users into
@@ -997,9 +901,6 @@ object Reports {
           .cast("long").as("share_diff_ppm"))
       .orderBy(col("event_type").asc)
   }
-
-  def aaBalance(spark: SparkSession, dir: String): DataFrame =
-    aaBalance(EventsPipeline.silver(spark, dir))
 
   /** q291: CUPED VARIANCE-REDUCED EXPERIMENT READOUT — the standard
     * trick for making A/B metrics converge faster (Deng et al., WSDM'13):
@@ -1075,9 +976,6 @@ object Reports {
       .orderBy(col("arm").asc)
   }
 
-  def cupedAdjustment(spark: SparkSession, dir: String): DataFrame =
-    cupedAdjustment(EventsPipeline.silver(spark, dir))
-
   /** q307: EXPERIMENT POWER ANALYSIS — how many users per arm would the
     * q291 experiment need to detect its own observed effect at α = 0.05
     * (two-sided) and 80% power, with and without CUPED? The classic
@@ -1141,9 +1039,6 @@ object Reports {
           / (col("d") * col("d"))).cast("long").as("n_per_arm_cuped"),
         floor(col("rho2") * lit(1000000.0)).cast("long").as("rho2_ppm"))
   }
-
-  def powerAnalysis(spark: SparkSession, dir: String): DataFrame =
-    powerAnalysis(EventsPipeline.silver(spark, dir))
 
   /** q313: GROUP-SEQUENTIAL MONITORING TABLE — the q291 experiment
     * re-read at four interim looks (quartiles of the date range) against
@@ -1211,9 +1106,6 @@ object Reports {
       .orderBy(col("look").asc)
   }
 
-  def groupSequential(spark: SparkSession, dir: String): DataFrame =
-    groupSequential(EventsPipeline.silver(spark, dir))
-
   /** q315: POST-STRATIFIED TREATMENT-EFFECT TABLE — the q291 arm gap
     * re-read within activity strata (user event count relative to the
     * corpus mean: <½, <1, <1½, ≥1½ — data-relative integer thresholds,
@@ -1268,9 +1160,6 @@ object Reports {
         col("pooled_den").cast("long").as("pooled_den"))
       .orderBy(col("stratum").asc)
   }
-
-  def stratifiedAte(spark: SparkSession, dir: String): DataFrame =
-    stratifiedAte(EventsPipeline.silver(spark, dir))
 
   /** q320: BRIER-SCORE DECOMPOSITION (Murphy) of a train-period purchase
     * forecast against test-period outcomes — the calibration audit that
@@ -1364,9 +1253,6 @@ object Reports {
         (col("rel_ppm") - col("res_ppm") + col("unc_ppm")).cast("long"))
   }
 
-  def brierDecomposition(spark: SparkSession, dir: String): DataFrame =
-    brierDecomposition(EventsPipeline.silver(spark, dir))
-
   /** q325: HÁJEK INVERSE-PROPENSITY-WEIGHTED outcome contrast for an
     * OBSERVATIONAL exposure — the causal-adjustment estimator the
     * experiment family (q291 CUPED, q315 post-stratification) lacks:
@@ -1428,9 +1314,6 @@ object Reports {
       .orderBy(col("treated").asc)
   }
 
-  def ipwEffect(spark: SparkSession, dir: String): DataFrame =
-    ipwEffect(EventsPipeline.silver(spark, dir))
-
   /** q328: BUCKETED DELETE-ONE-GROUP JACKKNIFE for a ratio metric —
     * the industry-standard variance estimator for per-user ratios
     * (revenue per active user here): a ratio of sums is nonlinear, so
@@ -1484,7 +1367,4 @@ object Reports {
       .withColumn("jk_se_milli",
         floor(sqrt(col("jk_var_milli2").cast("double"))).cast("long"))
   }
-
-  def jackknifeRatio(spark: SparkSession, dir: String): DataFrame =
-    jackknifeRatio(EventsPipeline.silver(spark, dir))
 }

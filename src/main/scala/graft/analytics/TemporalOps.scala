@@ -529,9 +529,6 @@ object TemporalOps {
       .orderBy(col("user_id").asc)
   }
 
-  def timeWeightedValue(spark: SparkSession, dir: String): DataFrame =
-    timeWeightedValue(graft.pipeline.EventsPipeline.silver(spark, dir))
-
   /** q194: half-life-decayed engagement score per user — recency-
     * weighted activity where an event aged w whole weeks (against the
     * CORPUS max date, so the score is data-relative and reproducible,
@@ -557,9 +554,6 @@ object TemporalOps {
         max(col("event_date")).as("last_date"))
       .orderBy(col("user_id").asc)
   }
-
-  def decayedEngagement(spark: SparkSession, dir: String): DataFrame =
-    decayedEngagement(graft.pipeline.EventsPipeline.silver(spark, dir))
 
   /** q196: as-of join WITH TOLERANCE — pandas `merge_asof(tolerance=)`
     * semantics: each event takes the most recent same-customer order,
@@ -657,9 +651,6 @@ object TemporalOps {
       .orderBy(col("lag").asc)
   }
 
-  def acfDailyStats(spark: SparkSession, dir: String): DataFrame =
-    acfDailyStats(graft.pipeline.EventsPipeline.silver(spark, dir))
-
   /** q209: pre/post first-conversion activity census — the event-study
     * (difference-around-anchor) design: for each user who ever
     * purchases, anchor = their FIRST purchase date, then per event
@@ -697,9 +688,6 @@ object TemporalOps {
         expr("n_post * 1000000 div n_pre").cast("long").as("lift_ppm"))
       .orderBy(col("event_type").asc)
   }
-
-  def prePostFirstPurchase(spark: SparkSession, dir: String): DataFrame =
-    prePostFirstPurchase(graft.pipeline.EventsPipeline.silver(spark, dir))
 
   /** q224: session handoff matrix — how a user's LAST action in one
     * session relates to their FIRST action in the next: the
@@ -743,9 +731,6 @@ object TemporalOps {
         expr("n_handoffs * 1000000 div t").cast("long").as("share_ppm"))
       .orderBy(col("exit_type").asc, col("next_entry").asc)
   }
-
-  def sessionHandoffs(spark: SparkSession, dir: String): DataFrame =
-    sessionHandoffs(graft.pipeline.EventsPipeline.silver(spark, dir))
 
   /** q238: CONVERSION LIFE TABLE (discrete Kaplan–Meier) — time from a
     * user's first `view` to their first subsequent `purchase`, as the
@@ -804,9 +789,6 @@ object TemporalOps {
       .orderBy(col("k").asc)
   }
 
-  def conversionLifeTable(spark: SparkSession, dir: String): DataFrame =
-    conversionLifeTable(graft.pipeline.EventsPipeline.silver(spark, dir))
-
   /** q242: CONCURRENCY PEAKS (interval sweep, minute resolution) — per
     * day, the maximum number of simultaneously open sessions and the
     * earliest minute achieving it: the capacity-planning readout (how
@@ -850,9 +832,6 @@ object TemporalOps {
       .orderBy(col("day").asc)
   }
 
-  def concurrencyPeaks(spark: SparkSession, dir: String): DataFrame =
-    concurrencyPeaks(graft.pipeline.EventsPipeline.silver(spark, dir))
-
   /** q247: FORECAST BACKTEST (seasonal-naive vs naive-1) — the honest
     * baseline every demand-forecasting effort must beat, run as a
     * relation: for each event type over the LAST 7 observed days,
@@ -891,9 +870,6 @@ object TemporalOps {
           .as("mase_ppm"))
       .orderBy(col("event_type").asc)
   }
-
-  def forecastBacktest(spark: SparkSession, dir: String): DataFrame =
-    forecastBacktest(graft.pipeline.EventsPipeline.silver(spark, dir))
 
   /** q299: CUSUM CHANGEPOINT SCAN over the daily event-count series —
     * the sequential drift detector (Page, 1954) every volume-monitoring
@@ -935,9 +911,6 @@ object TemporalOps {
         (col("s_pos") > col("h") || col("s_neg") > col("h")).as("breach"))
       .orderBy(col("d").asc)
   }
-
-  def cusumChangepoint(spark: SparkSession, dir: String): DataFrame =
-    cusumChangepoint(graft.pipeline.EventsPipeline.silver(spark, dir))
 
   /** q310: THEIL–SEN ROBUST TREND of the daily event-count series — the
     * median of all pairwise slopes, the estimator that shrugs off the
@@ -986,9 +959,6 @@ object TemporalOps {
         col("v").cast("long").as("slope_milli"),
         (col("v") > 0).as("trending_up"))
   }
-
-  def theilSen(spark: SparkSession, dir: String): DataFrame =
-    theilSen(graft.pipeline.EventsPipeline.silver(spark, dir))
 
   /** The q314 exponential quantiles −ln(1−k/10), k = 1..9, computed ONCE
     * on the JVM and shared with the oracle as printed literals (the
@@ -1050,9 +1020,6 @@ object TemporalOps {
       .orderBy(col("decile").asc)
   }
 
-  def exponentialQq(spark: SparkSession, dir: String): DataFrame =
-    exponentialQq(graft.pipeline.EventsPipeline.silver(spark, dir))
-
   /** q321: ALLEN INTERVAL-ALGEBRA census — each user's per-event-type
     * activity span ([min ts, max ts], microseconds) classified pairwise
     * into Allen's 13 interval relations. q117 answers "do intervals
@@ -1106,7 +1073,4 @@ object TemporalOps {
         expr("n_pairs * 1000000 div total").cast("long").as("share_ppm"))
       .orderBy(col("relation").asc)
   }
-
-  def allenRelations(spark: SparkSession, dir: String): DataFrame =
-    allenRelations(graft.pipeline.EventsPipeline.silver(spark, dir))
 }

@@ -124,9 +124,6 @@ object Curation {
       .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("total_chars"))
       .orderBy(col("split").asc, col("lang").asc)
 
-  def trainSplitSummary(spark: SparkSession, dir: String): DataFrame =
-    trainSplitSummary(Tables.documents(spark, dir))
-
   /** Stratified deterministic sample: the k docs per stratum with the
     * smallest salted hash — a uniform-without-replacement sample per group
     * that every re-run (and every engine) reproduces. One hash-shuffle on
@@ -141,9 +138,6 @@ object Curation {
       .select(col("lang"), col("rk"), col("doc_id"), col("source"))
       .orderBy(col("lang").asc, col("rk").asc)
   }
-
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    stratifiedSample(Tables.documents(spark, dir))
 
   /** Per-source keep weights for the mixture: head sources at full weight,
     * tail sources downsampled 4×. (In production this map is a config;
@@ -168,9 +162,6 @@ object Curation {
       .withColumn("kept_rate", col("docs_kept").cast("double") / col("docs_in"))
       .orderBy(col("source").asc)
   }
-
-  def sourceMixture(spark: SparkSession, dir: String): DataFrame =
-    sourceMixture(Tables.documents(spark, dir))
 
   /** Temperature-flattened source mixture (T = 2): rebalance sources so
     * the kept corpus' shares follow n_s^(1/2) instead of n_s — the
@@ -210,9 +201,6 @@ object Curation {
       .orderBy(col("source").asc)
   }
 
-  def temperatureMixture(spark: SparkSession, dir: String): DataFrame =
-    temperatureMixture(Tables.documents(spark, dir))
-
   /** Token budgeting: whitespace tokens vs a BPE-ish subword count (every
     * word contributes ceil(len/4) pieces via the `[a-z]{1,4}` chunking
     * regex — the greedy fixed-width stand-in for a merge table) and the
@@ -231,9 +219,6 @@ object Curation {
         col("n_alpha_chars").cast("double") / col("bpe_tokens"))
       .orderBy(col("doc_id").asc)
   }
-
-  def tokenCounts(spark: SparkSession, dir: String): DataFrame =
-    tokenCounts(Tables.documents(spark, dir))
 
   /** The whole curation pipeline as ONE declarative plan — the flagship
     * composition a training-data user actually runs: quality rubric
@@ -262,9 +247,6 @@ object Curation {
         col("is_duplicate"), col("kept"), col("split"))
       .orderBy(col("doc_id").asc)
   }
-
-  def curationVerdicts(spark: SparkSession, dir: String): DataFrame =
-    curationVerdicts(Tables.documents(spark, dir))
 
   /** Concat-and-chunk sequence packing — the standard pretraining layout:
     * within each source shard, documents are concatenated in a
@@ -298,9 +280,6 @@ object Curation {
         max(col("doc_id")).as("last_doc"))
       .orderBy(col("source").asc, col("chunk_id").asc)
   }
-
-  def packSequences(spark: SparkSession, dir: String): DataFrame =
-    packSequences(Tables.documents(spark, dir))
 
   /** GREEDY first-fit packing — the padding-aware sibling of
     * [[packSequences]]: documents never span chunks; a doc that would
@@ -353,9 +332,6 @@ object Curation {
       .orderBy(col("source").asc, col("chunk_id").asc)
   }
 
-  def packGreedy(spark: SparkSession, dir: String): DataFrame =
-    packGreedy(Tables.documents(spark, dir))
-
   /** GROUPED greedy packing — the 100 TB form of [[packGreedy]]. The pure
     * greedy fold is a single sequential chain per source; at corpus scale
     * one hot source serializes the whole stage. Here each source's doc
@@ -392,9 +368,6 @@ object Curation {
       .withColumn("padding", greatest(lit(0L), lit(budget) - col("n_tokens")))
       .orderBy(col("source").asc, col("chunk_id").asc)
   }
-
-  def packGreedyGrouped(spark: SparkSession, dir: String): DataFrame =
-    packGreedyGrouped(Tables.documents(spark, dir))
 
   /** The placement core of [[packGreedyGrouped]], reusable over any
     * pre-tokenized (source, doc_id, n_tokens) stream — the q250 funnel
@@ -487,9 +460,6 @@ object Curation {
       .orderBy(col("source").asc)
   }
 
-  def budgetAllocation(spark: SparkSession, dir: String): DataFrame =
-    budgetAllocation(Tables.documents(spark, dir))
-
   /** q137: deterministic training-order shuffle + sharding — the last op
     * before a corpus ships to dataloaders. Training wants a different
     * random visit order every epoch, reproducible across reruns and
@@ -510,9 +480,6 @@ object Curation {
         (conv(substring(col("ord"), 1, 8), 16, 10).cast("long")
           % shards).cast("int"))
       .orderBy(col("shard").asc, col("ord").asc, col("doc_id").asc)
-
-  def trainingOrder(spark: SparkSession, dir: String): DataFrame =
-    trainingOrder(Tables.documents(spark, dir))
 
   /** q150: fixed-size overlapping token-window chunking — how long
     * documents become training/RAG units. Windows of `size` tokens start
@@ -542,9 +509,6 @@ object Curation {
         md5(concat_ws(" ", col("chunk"))).as("chunk_md5"))
       .orderBy(col("doc_id").asc, col("chunk_start").asc)
   }
-
-  def docChunks(spark: SparkSession, dir: String): DataFrame =
-    docChunks(Tables.documents(spark, dir))
 
   /** q265: CHUNK-REHYDRATION integrity audit — reassemble every document
     * from its q150 overlapping windows and prove the round trip is exact.
@@ -600,9 +564,6 @@ object Curation {
       .orderBy(col("source").asc)
   }
 
-  def chunkRehydration(spark: SparkSession, dir: String): DataFrame =
-    chunkRehydration(Tables.documents(spark, dir))
-
   /** q154: length-bucketed batch binning — the padding-waste ledger of a
     * fixed-shape training/inference batcher. Each document is assigned to
     * the power-of-two bucket that would hold it (pad_len = smallest 2^k ≥
@@ -632,9 +593,6 @@ object Curation {
         expr("(padded_tokens - total_tokens) * 1000000 div padded_tokens"))
       .orderBy(col("pad_len").asc)
   }
-
-  def lengthBuckets(spark: SparkSession, dir: String): DataFrame =
-    lengthBuckets(Tables.documents(spark, dir))
 
   /** q163: the token budget a dedup pass actually buys, per source — the
     * KPI a curation run reports to justify itself: documents and
@@ -698,9 +656,6 @@ object Curation {
         expr(s"(cum - n_chars) div $stride").cast("long").as("pick_idx"))
       .orderBy(col("source").asc, col("doc_id").asc)
   }
-
-  def systematicSample(spark: SparkSession, dir: String): DataFrame =
-    systematicSample(Tables.documents(spark, dir))
 
   /** q244: K-FOLD assignment + balance audit — deterministic md5 folds
     * (the q52 split discipline generalized to cross-validation) with the
@@ -978,9 +933,6 @@ object Curation {
       .orderBy(col("source").asc)
   }
 
-  def waterfillMixture(spark: SparkSession, dir: String): DataFrame =
-    waterfillMixture(Tables.documents(spark, dir))
-
   /** q270: DoReMi-LITE mixture reweighting — the first DATA-DRIVEN
     * mixture operator (q54 weighted, q75 temperature, and q266
     * water-fill are all static policies): one integer-exact reweighting
@@ -1071,9 +1023,6 @@ object Curation {
       .orderBy(col("source").asc)
   }
 
-  def doremiReweight(spark: SparkSession, dir: String): DataFrame =
-    doremiReweight(Tables.documents(spark, dir))
-
   /** q272: BATCH-SHAPE padding-waste audit — the throughput question
     * every fixed-shape training job answers before choosing a batching
     * policy: pack batches of `batchSize` docs and pad each doc to its
@@ -1114,9 +1063,6 @@ object Curation {
           .cast("long").as("pad_ppm"))
       .orderBy(col("policy").asc)
   }
-
-  def paddingWaste(spark: SparkSession, dir: String): DataFrame =
-    paddingWaste(Tables.documents(spark, dir))
 
   /** q275: UniMax LANGUAGE allocation (Chung et al., 2023) — the
     * OVERSAMPLING dual of the q266 water-fill: q266 cuts hot sources
@@ -1176,9 +1122,6 @@ object Curation {
       .orderBy(col("lang").asc)
   }
 
-  def unimaxAllocation(spark: SparkSession, dir: String): DataFrame =
-    unimaxAllocation(Tables.documents(spark, dir))
-
   /** q279: SPAN-CORRUPTION mask plan — the deterministic twin of the
     * T5/BERT-style random span masking a denoising pretraining run
     * applies: every token draws a keep/mask decision from a positional
@@ -1223,9 +1166,6 @@ object Curation {
       .orderBy(col("source").asc)
   }
 
-  def spanCorruptionPlan(spark: SparkSession, dir: String): DataFrame =
-    spanCorruptionPlan(Tables.documents(spark, dir))
-
   /** q264: EVAL-SET QUOTA apportionment — distribute a fixed eval budget
     * of `k` documents across the (lang, source) strata proportionally to
     * their corpus mass, with LARGEST-REMAINDER (Hamilton) rounding so the
@@ -1260,9 +1200,6 @@ object Curation {
         (col("base") + col("extra")).cast("long").as("quota"))
       .orderBy(col("lang").asc, col("source").asc)
   }
-
-  def evalQuotas(spark: SparkSession, dir: String): DataFrame =
-    evalQuotas(Tables.documents(spark, dir))
 
   /** q297: NEYMAN SAMPLE ALLOCATION — split a sampling budget across
     * strata (sources) ∝ N_h·S_h (stratum size × stratum std of doc
@@ -1313,9 +1250,6 @@ object Curation {
       .orderBy(col("source").asc)
   }
 
-  def neymanAllocation(spark: SparkSession, dir: String): DataFrame =
-    neymanAllocation(Tables.documents(spark, dir))
-
   /** q311: DATA-CONSTRAINED EFFECTIVE TOKENS — when a source's token
     * budget exceeds its unique tokens, extra epochs are worth less than
     * fresh data (Muennighoff et al., "Scaling Data-Constrained Language
@@ -1363,9 +1297,6 @@ object Curation {
   def DecayTable(cap: Int): Seq[(Long, Long)] =
     Iterator.iterate(1000000L)(r => r * 950000L / 1000000L)
       .take(cap + 1).zipWithIndex.map { case (r, i) => (i.toLong, r) }.toSeq
-
-  def dataConstrainedValue(spark: SparkSession, dir: String): DataFrame =
-    dataConstrainedValue(Tables.documents(spark, dir))
 
   /** q250: the END-TO-END curation pipeline as ONE declarative plan —
     * the composition a production training-data run actually ships, not
@@ -1575,7 +1506,4 @@ object Curation {
           .as("mean_p_ppm"))
       .orderBy(col("train_source").asc, col("eval_source").asc)
   }
-
-  def lmTransferMatrix(spark: SparkSession, dir: String): DataFrame =
-    lmTransferMatrix(Tables.documents(spark, dir))
 }

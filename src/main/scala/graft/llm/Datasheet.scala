@@ -105,9 +105,6 @@ object Datasheet {
       .orderBy(col("source").asc)
   }
 
-  def looCorpusInfluence(spark: SparkSession, dir: String): DataFrame =
-    looCorpusInfluence(Tables.documents(spark, dir))
-
   /** q303: HOEFFDING SAMPLING-ERROR SCREEN — is each source's mean doc
     * length within the distribution-free sampling-error band of the
     * corpus mean? ε = (hi − lo)·√(ln(2/δ)/(2n)) at δ = 0.05 is the
@@ -137,7 +134,4 @@ object Datasheet {
         abs(col("mean_milli") - col("corpus_mean_milli")) <= col("eps_milli"))
       .orderBy(col("source").asc)
   }
-
-  def hoeffdingScreen(spark: SparkSession, dir: String): DataFrame =
-    hoeffdingScreen(Tables.documents(spark, dir))
 }

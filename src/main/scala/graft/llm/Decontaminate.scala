@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.Caches
 import graft.core.Shard.h60
 
 /** Benchmark decontamination: flag training documents whose word n-grams
@@ -72,9 +72,6 @@ object Decontaminate {
       .orderBy(col("doc_id").asc)
   }
 
-  def overlapReport(spark: SparkSession, dir: String): DataFrame =
-    overlapReport(Tables.documents(spark, dir))
-
   // ------------------------------------------------- boilerplate census
 
   /** Grams present in at least this percentage of documents count as
@@ -117,9 +114,6 @@ object Decontaminate {
       .orderBy(col("doc_id").asc)
   }
 
-  def boilerplateCensus(spark: SparkSession, dir: String): DataFrame =
-    boilerplateCensus(Tables.documents(spark, dir))
-
   // ------------------------------------------------ source overlap
 
   /** Source-overlap matrix: shingle-level Jaccard between every pair of
@@ -155,9 +149,6 @@ object Decontaminate {
           (col("na") + col("nb") - col("shared_grams"))).as("jaccard"))
       .orderBy(col("source_a").asc, col("source_b").asc)
   }
-
-  def sourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlap(Tables.documents(spark, dir))
 
   /** Slots in the per-source minhash signature (q269). */
   val SourceSketchSlots = 64
@@ -226,7 +217,4 @@ object Decontaminate {
           - col("exact_ppm")).cast("long").as("err_ppm"))
       .orderBy(col("source_a").asc, col("source_b").asc)
   }
-
-  def sourceMinhashAudit(spark: SparkSession, dir: String): DataFrame =
-    sourceMinhashAudit(Tables.documents(spark, dir))
 }

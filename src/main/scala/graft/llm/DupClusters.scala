@@ -153,10 +153,6 @@ object DupClusters {
       connectedComponents(TextDedup.minhashNearDups(spark, dir))
     }
 
-  /** Test hook: number of cluster frames cached for `spark`. */
-  def cachedClusterCount(spark: SparkSession): Int =
-    clusterCache.cachedCount(spark)
-
   /** q60: resolve the MinHash-LSH near-dup pairs (q27) into clusters. */
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
     clustersFor(spark, dir)
@@ -362,7 +358,7 @@ object DupClusters {
 
   def simClustersFor(spark: SparkSession, dir: String): DataFrame =
     simClusterCache.get(spark, dir) {
-      connectedComponents(TextDedup.simhashNearDups(spark, dir)
+      connectedComponents(TextDedup.simhashNearDups(Tables.documents(spark, dir))
         .filter(col("hamming") <= SimRefHammingMax)
         .select(col("doc_a"), col("doc_b")))
     }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Shard, Tables}
+import graft.core.Shard
 import graft.core.Shard.h60
 
 /** Embedding-cosine near-dup over `documents` — the fifth dedup family of
@@ -151,9 +151,6 @@ object EmbedDedup {
       .orderBy(col("doc_a").asc, col("doc_b").asc)
   }
 
-  def embeddingNearDups(spark: SparkSession, dir: String): DataFrame =
-    embeddingNearDups(Tables.documents(spark, dir))
-
   /** SemDeDup-style semantic dedup census (Abbas et al. 2023): compare
     * documents pairwise WITHIN a cell only, in embedding space, and mark
     * every doc that has a more-canonical (lower-id) neighbor at cosine ≥
@@ -187,6 +184,9 @@ object EmbedDedup {
         .withColumn("nrm", sqrt(call_function(dot, col("v"), col("v"))))
         .join(meta, Seq("doc_id"))
         .repartition(col("lang"), col("source")))
+    // materialize-then-plan: this count runs a Spark job while the frame
+    // is still being BUILT, and it is what makes the cache's (lang,
+    // source) partitioning visible to the joins and aggregations below
     dense.count()
     val a = dense.select(col("lang"), col("source"),
       col("doc_id").as("doc_a"), col("v").as("va"), col("nrm").as("na"))
@@ -212,9 +212,6 @@ object EmbedDedup {
       .withColumn("n_kept", col("n_docs") - col("n_removed"))
       .orderBy(col("lang").asc, col("source").asc)
   }
-
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedup(Tables.documents(spark, dir))
 
   /** Brute-force variant (all pairs via the bucket inverted index, no LSH
     * filter) — the recall baseline for tests; not registered as a query. */

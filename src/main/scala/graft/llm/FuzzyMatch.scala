@@ -42,6 +42,18 @@ object FuzzyMatch {
       .orderBy(col("name_a").asc, col("name_b").asc)
   }
 
+  /** Blocking key per document for [[editDistanceDups]]: (lang,
+    * n_chars div 64 length band) capped by [[Shard.capped]],
+    * with `p` the first `prefixLen` normalized chars. */
+  def editBlocks(docs: DataFrame, prefixLen: Int = 64): DataFrame = {
+    val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
+    val meta = docs
+      .select(col("doc_id"), col("lang"),
+        expr("n_chars div 64").as("band"),
+        substring(norm, 1, prefixLen).as("p"))
+    Shard.capped(meta, Seq("lang", "band"))
+  }
+
   /** q323: EDIT-DISTANCE near-dup pairs over the document corpus — the
     * character-level dedup family the shingle/minhash/simhash set lacks
     * (Jaccard on word shingles is blind to dense single-character noise;
@@ -57,21 +69,6 @@ object FuzzyMatch {
     * 94× pairs for 10× docs on this corpus). The documented trade:
     * near-dups split across subshards are missed; recall comes from the
     * OTHER families (q27/q28), this one adds the char-noise lens. */
-  def editDistanceDups(spark: SparkSession, dir: String): DataFrame =
-    editDistanceDups(Tables.documents(spark, dir))
-
-  /** Blocking key per document for [[editDistanceDups]]: (lang,
-    * n_chars div 64 length band) capped by [[Shard.capped]],
-    * with `p` the first `prefixLen` normalized chars. */
-  def editBlocks(docs: DataFrame, prefixLen: Int = 64): DataFrame = {
-    val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-    val meta = docs
-      .select(col("doc_id"), col("lang"),
-        expr("n_chars div 64").as("band"),
-        substring(norm, 1, prefixLen).as("p"))
-    Shard.capped(meta, Seq("lang", "band"))
-  }
-
   def editDistanceDups(docs: DataFrame, maxDist: Int = 8,
                        prefixLen: Int = 64): DataFrame = {
     val keyed = editBlocks(docs, prefixLen)

@@ -447,7 +447,4 @@ object Multimodal {
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("doc_a").asc, col("doc_b").asc)
   }
-
-  def perceptualHashDups(spark: SparkSession, dir: String): DataFrame =
-    perceptualHashDups(Tables.documents(spark, dir))
 }

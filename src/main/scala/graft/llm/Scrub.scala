@@ -1,9 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.core.Tables
 
 /** PII-pattern scrubbing with a compliance audit trail. A training-data
   * pipeline must redact identifier patterns (emails, phone numbers,
@@ -43,7 +41,4 @@ object Scrub {
         sum(col("n_redactions")).as("total_redactions"),
         countDistinct(col("props_redacted")).as("distinct_shapes"))
       .orderBy(col("event_type").asc)
-
-  def redactionAudit(spark: SparkSession, dir: String): DataFrame =
-    redactionAudit(Tables.events(spark, dir))
 }

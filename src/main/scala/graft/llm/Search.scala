@@ -1,10 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.core.Tables
 
 /** Inverted-index retrieval over the document corpus — the conjunctive
   * (AND) keyword query every corpus-inspection tool runs ("all docs
@@ -67,9 +65,6 @@ object Search {
       .orderBy(col("doc_id").asc)
   }
 
-  def conjunctiveSearch(spark: SparkSession, dir: String): DataFrame =
-    conjunctiveSearch(Tables.documents(spark, dir))
-
   /** q210: positional phrase search — occurrences per doc of the
     * corpus' most frequent bigram (count desc, then lexicographic — a
     * deterministic, data-derived phrase). Membership postings (q208)
@@ -103,9 +98,6 @@ object Search {
       .select(col("doc_id"), col("w1"), col("w2"), col("n_occurrences"))
       .orderBy(col("doc_id").asc)
   }
-
-  def phraseCount(spark: SparkSession, dir: String): DataFrame =
-    phraseCount(Tables.documents(spark, dir))
 
   /** q211: single-term BM25 top-10 — the classic lexical relevance
     * scorer, in EXACT integer arithmetic. With k1 = 6/5, b = 3/4 and a
@@ -150,7 +142,4 @@ object Search {
       // ordered, but the gate contract wants it explicit in the plan)
       .orderBy(col("score_ppm").desc, col("doc_id").asc)
   }
-
-  def bm25TopK(spark: SparkSession, dir: String): DataFrame =
-    bm25TopK(Tables.documents(spark, dir))
 }

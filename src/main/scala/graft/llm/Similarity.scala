@@ -96,9 +96,6 @@ object Similarity {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  def knnExact(spark: SparkSession, dir: String): DataFrame =
-    knnExact(Tables.embeddings(spark, dir))
-
   /** q126: top-k over INT8-QUANTIZED embeddings — the 4× storage/bandwidth
     * lever a 100 TB vector corpus reaches for before any index. Per-vector
     * symmetric quantization: scale = max|e_i|, q_i = floor(e_i·127/scale
@@ -129,9 +126,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcos"))
       .orderBy(col("query_id").asc, col("rank").asc)
   }
-
-  def knnQuantized(spark: SparkSession, dir: String): DataFrame =
-    knnQuantized(Tables.embeddings(spark, dir))
 
   /** q202: reciprocal-rank fusion of two retrieval rankings — the
     * standard way a retrieval pipeline combines heterogeneous scorers
@@ -167,9 +161,6 @@ object Similarity {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  def rrfFusion(spark: SparkSession, dir: String): DataFrame =
-    rrfFusion(Tables.embeddings(spark, dir))
-
   /** q215: int8 quantization-error census — the DIRECT error gauge
     * behind q126's recall number: per vector, the worst per-element
     * residual |e_i·127/scale − round(e_i·127/scale)| in units of the
@@ -197,9 +188,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_vectors"),
         max(col("r_ppm")).as("max_residual_ppm"))
       .orderBy(col("bucket").asc)
-
-  def quantErrorCensus(spark: SparkSession, dir: String): DataFrame =
-    quantErrorCensus(Tables.embeddings(spark, dir))
 
   /** q132: embedding-centroid drift per label — the vector-space sibling
     * of the q121 language-mix drift: how far each label's mean embedding
@@ -234,9 +222,6 @@ object Similarity {
           .as("cos_to_corpus"))
       .orderBy(col("label").asc)
   }
-
-  def embeddingDrift(spark: SparkSession, dir: String): DataFrame =
-    embeddingDrift(Tables.embeddings(spark, dir))
 
   /** 16-bit sign signature per vector: bit p set iff dot(v, plane_p) > 0,
     * where plane_p is the corpus vector with vec_id = p. Computed as a
@@ -296,9 +281,6 @@ object Similarity {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  def knnLsh(spark: SparkSession, dir: String): DataFrame =
-    knnLsh(Tables.embeddings(spark, dir))
-
   /** q274: LABEL-CONSISTENCY audit over LSH neighborhoods — the
     * label-noise screen (the confident-learning idea reduced to its
     * scalable core): if labels follow the embedding geometry, a vector's
@@ -356,9 +338,6 @@ object Similarity {
         col("n_suspect").cast("long").as("n_suspect"))
       .orderBy(col("label").asc)
   }
-
-  def labelConsistency(spark: SparkSession, dir: String): DataFrame =
-    labelConsistency(Tables.embeddings(spark, dir))
 
   // ------------------------------------------------------------- IVF
 
@@ -520,18 +499,12 @@ object Similarity {
              k: Int = 5): DataFrame =
     knnIvfWith(embeddings, ivfSeeds(embeddings), numQueries, probes, k)
 
-  def knnIvf(spark: SparkSession, dir: String): DataFrame =
-    knnIvf(Tables.embeddings(spark, dir))
-
   /** IVF top-k over SAMPLED-K-MEANS cells ([[kmeansCells]]) — the centroid
     * quality upgrade: tighter cells recall more at the same probe budget
     * (SimilaritySpec asserts ≥ the seed variant's recall vs brute force). */
   def knnIvfKmeans(embeddings: DataFrame, numQueries: Int = 10, probes: Int = 2,
                    k: Int = 5): DataFrame =
     knnIvfWith(embeddings, kmeansCells(embeddings), numQueries, probes, k)
-
-  def knnIvfKmeans(spark: SparkSession, dir: String): DataFrame =
-    knnIvfKmeans(Tables.embeddings(spark, dir))
 
   /** Embedding-similarity pair join (the embedding-space near-dup
     * operator): all corpus pairs above `minCosine`, generated through the
@@ -552,9 +525,6 @@ object Similarity {
       .filter(col("cos") >= minCosine)
       .orderBy(col("vec_a").asc, col("vec_b").asc)
   }
-
-  def similarPairs(spark: SparkSession, dir: String): DataFrame =
-    similarPairs(Tables.embeddings(spark, dir))
 
   /** q260: CONTRASTIVE-PAIR MINING census — the table an embedding-model
     * finetune (SBERT/DPR-style) is trained from: per anchor vector,
@@ -623,9 +593,6 @@ object Similarity {
       .orderBy(col("role").asc)
   }
 
-  def contrastiveMiningCensus(spark: SparkSession, dir: String): DataFrame =
-    contrastiveMiningCensus(Tables.embeddings(spark, dir))
-
   // ------------------------------------------------- cluster profiling
 
   /** Semantic cluster profile: assign every vector to its nearest seed
@@ -660,9 +627,6 @@ object Similarity {
       .orderBy(col("slabel").asc)
   }
 
-  def clusterProfile(spark: SparkSession, dir: String): DataFrame =
-    clusterProfile(Tables.embeddings(spark, dir))
-
   /** Per-vector statistics through HIGHER-ORDER array functions
     * (`aggregate` fold, `transform`, `filter`) — the declarative array
     * surface for when a custom expression is overkill. Folds evaluate
@@ -680,9 +644,6 @@ object Similarity {
           .as("linf"),
         size(filter(col("v"), x => x > 0)).as("n_positive"))
       .orderBy(col("vec_id").asc)
-
-  def vectorStats(spark: SparkSession, dir: String): DataFrame =
-    vectorStats(Tables.embeddings(spark, dir))
 
   /** Per-DIMENSION corpus statistics via `posexplode` — the feature-
     * normalization pre-pass an ANN/quantization pipeline runs before
@@ -706,9 +667,6 @@ object Similarity {
         sum(when(col("x") === 0, 1L).otherwise(0L)).as("n_zero"))
       .withColumn("range", col("hi") - col("lo"))
       .orderBy(col("pos").asc)
-
-  def dimStats(spark: SparkSession, dir: String): DataFrame =
-    dimStats(Tables.embeddings(spark, dir))
 
   /** Recall@k audit of every approximate ANN variant against the exact
     * brute-force ranking — the acceptance test a production vector index
@@ -737,6 +695,10 @@ object Similarity {
     // once before forking. Row content is unchanged: same searches,
     // same recall joins, same ordering.
     val corpus = vecsNormed(embeddings)
+    // materialize-then-plan: building this frame runs Spark jobs; the
+    // two counts materialize the shared caches, so the searches planned
+    // below see a built cache (its partitioning and size) and read it
+    // instead of each rebuilding it
     corpus.count() // materialize the shared scratch before forking
     val exact = graft.core.Caches.scratch(
       knnExact(embeddings, numQueries, k)
@@ -778,9 +740,6 @@ object Similarity {
       .orderBy(col("method").asc, col("query_id").asc)
   }
 
-  def annRecallAudit(spark: SparkSession, dir: String): DataFrame =
-    annRecallAudit(Tables.embeddings(spark, dir))
-
   /** Within-label pairwise COSINE HISTOGRAM (decile buckets) — the
     * distance-distribution audit that justifies a semantic-dedup or ANN
     * threshold before anyone commits to it (q162 hard-codes 0.9; this
@@ -808,9 +767,6 @@ object Similarity {
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("label").asc, col("cos_decile").asc)
   }
-
-  def cosineHistogram(spark: SparkSession, dir: String): DataFrame =
-    cosineHistogram(Tables.embeddings(spark, dir))
 
   /** q197: PRODUCT-QUANTIZATION top-k (Jégou et al., PAMI'11) — the
     * memory-compression ANN a production vector store actually deploys:
@@ -878,9 +834,6 @@ object Similarity {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  def knnPq(spark: SparkSession, dir: String): DataFrame =
-    knnPq(Tables.embeddings(spark, dir))
-
   /** PQ candidates re-ranked EXACTLY (the IVFADC-R deployment shape,
     * Jégou et al. §V): the compressed-domain ADC scan nominates
     * `candidates` ids per query, then only those |queries|·candidates
@@ -912,9 +865,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"))
       .orderBy(col("query_id").asc, col("rank").asc)
   }
-
-  def knnPqReranked(spark: SparkSession, dir: String): DataFrame =
-    knnPqReranked(Tables.embeddings(spark, dir))
 
   /** q251: MATRYOSHKA truncated-dimension retrieval audit (Kusupati et
     * al., "Matryoshka Representation Learning", NeurIPS'22): exact
@@ -975,9 +925,6 @@ object Similarity {
       .orderBy(col("dim").asc, col("query_id").asc)
   }
 
-  def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame =
-    matryoshkaRecall(Tables.embeddings(spark, dir))
-
   /** q252: SEMANTIC train/eval leakage curve — the embedding-space
     * sibling of the n-gram decontamination census (q69): candidate
     * (eval, train) pairs from shared sign-projection LSH bands, exact
@@ -1018,9 +965,6 @@ object Similarity {
         countDistinct(col("eval_id")).as("n_eval_docs"))
       .orderBy(col("cos_decile").asc)
   }
-
-  def semanticLeakage(spark: SparkSession, dir: String): DataFrame =
-    semanticLeakage(Tables.embeddings(spark, dir))
 
   /** q306: 1-NN LABEL-MARGIN CENSUS — for every vector with both kinds
     * of LSH-candidate neighbors, the gap between its best same-label and
@@ -1073,9 +1017,6 @@ object Similarity {
         col("n_negative_margin").cast("long").as("n_negative_margin"))
       .orderBy(col("label").asc)
   }
-
-  def labelMargin(spark: SparkSession, dir: String): DataFrame =
-    labelMargin(Tables.embeddings(spark, dir))
 
   /** q319 eval frame, single-sourced into BOTH engines: the Spark
     * defaults below and the oracle SQL literals in SparkEntry are all
@@ -1163,9 +1104,6 @@ object Similarity {
       .orderBy(col("query_id").asc)
   }
 
-  def rankQualityAudit(spark: SparkSession, dir: String): DataFrame =
-    rankQualityAudit(Tables.embeddings(spark, dir))
-
   /** q336 probe grid, single-sourced into both engines (the q319
     * constant discipline). */
   val ProbeSweep: Seq[Int] = Seq(1, 2, 4)
@@ -1235,9 +1173,6 @@ object Similarity {
           .cast("long").as("recall_ppm"))
       .orderBy(col("nprobe").asc)
   }
-
-  def ivfProbeSweep(spark: SparkSession, dir: String): DataFrame =
-    ivfProbeSweep(Tables.embeddings(spark, dir))
 
   /** q337 constants, single-sourced into both engines. λ = 1/2 is
     * spelled integer-exactly as score = 2·rel − max_sim (argmax-
@@ -1331,7 +1266,4 @@ object Similarity {
         "mmr_score_ppm")
       .orderBy(col("query_id").asc, col("mmr_rank").asc)
   }
-
-  def mmrRerank(spark: SparkSession, dir: String): DataFrame =
-    mmrRerank(Tables.embeddings(spark, dir))
 }

@@ -47,9 +47,6 @@ object TextDedup {
         (col("doc_id") =!= col("canonical_id")).as("is_duplicate"))
       .orderBy(col("doc_id").asc)
 
-  def exactDedup(spark: SparkSession, dir: String): DataFrame =
-    exactDedup(Tables.documents(spark, dir))
-
   // -------------------------------------------------------------- shingles
 
   /** Distinct word k-shingles per doc. Docs shorter than k words produce no
@@ -265,9 +262,6 @@ object TextDedup {
       .orderBy(col("doc_a").asc, col("doc_b").asc)
   }
 
-  def simhashNearDups(spark: SparkSession, dir: String): DataFrame =
-    simhashNearDups(Tables.documents(spark, dir))
-
   // -------------------------------------------- blocked n-gram Jaccard
 
   /** Length-band width (chars) for the blocked Jaccard join. 256-char
@@ -326,6 +320,9 @@ object TextDedup {
             sequence(lit(0), size(col("w")) - 2),
             i => concat_ws(" ", slice(col("w"), i + 1, lit(2)))))).as("shingle"): _*)
       .repartition(blockCols.map(col) :+ col("shingle"): _*))
+    // materialize-then-plan: building this frame runs a Spark job, and
+    // the count is what makes the cache's partitioning visible to the
+    // self-join below (PlanAuditSpec pins the exchange-free arms)
     sh.count()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = sh.select(blockCols.map(col) :+ col("shingle") :+ col("doc_id").as("doc_a"): _*)
@@ -341,9 +338,6 @@ object TextDedup {
       .filter(col("jaccard") >= minJaccard)
       .orderBy(col("lang").asc, col("doc_a").asc, col("doc_b").asc)
   }
-
-  def ngramJaccardDups(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardDups(Tables.documents(spark, dir))
 
   // ----------------------------------------------------------- containment
 
@@ -486,9 +480,6 @@ object TextDedup {
       .orderBy(col("doc_a").asc, col("doc_b").asc)
   }
 
-  def winnowDups(spark: SparkSession, dir: String): DataFrame =
-    winnowDups(Tables.documents(spark, dir))
-
   // ------------------------------------------- content-defined chunk dedup
 
   val CdcK = 8          // rolling-hash window for boundary detection
@@ -537,9 +528,6 @@ object TextDedup {
       .filter(col("n_docs") > 1)
       .orderBy(col("chunk_hash").asc)
 
-  def chunkDedup(spark: SparkSession, dir: String): DataFrame =
-    chunkDedup(Tables.documents(spark, dir))
-
   /** Per-document duplication coverage: what fraction of each document's
     * characters sit in CDC chunks whose content recurs verbatim in some
     * OTHER document. Corpus-curation reports (Gopher/RefinedWeb-style)
@@ -579,9 +567,6 @@ object TextDedup {
       .filter(col("dup_chunks") > 0)
       .orderBy(col("doc_id").asc)
   }
-
-  def dupCoverage(spark: SparkSession, dir: String): DataFrame =
-    dupCoverage(Tables.documents(spark, dir))
 
   // ------------------------------------------------ paragraph dedup
 
@@ -632,9 +617,6 @@ object TextDedup {
           .as("dup_char_ppm"))
       .orderBy(col("source").asc)
   }
-
-  def paragraphDedup(spark: SparkSession, dir: String): DataFrame =
-    paragraphDedup(Tables.documents(spark, dir))
 
   // ------------------------------------------------ incremental dedup
 
@@ -798,9 +780,6 @@ object TextDedup {
       .orderBy(col("source").asc)
   }
 
-  def windowDupMass(spark: SparkSession, dir: String): DataFrame =
-    windowDupMass(Tables.documents(spark, dir))
-
   /** q221: cross-source window provenance — WHO copies WHOM, at the
     * exact-substring granularity of q191: for every source pair, how
     * many distinct 64-char windows they share verbatim. q84's source
@@ -835,9 +814,6 @@ object TextDedup {
       .orderBy(col("shared_windows").desc, col("src_a").asc,
         col("src_b").asc)
   }
-
-  def windowProvenance(spark: SparkSession, dir: String): DataFrame =
-    windowProvenance(Tables.documents(spark, dir))
 
   /** q199: WEIGHTED (multiset) Jaccard verification of the minhash band
     * candidates — Σ min(tf) ⁄ Σ max(tf) over word frequencies, the
@@ -1062,9 +1038,6 @@ object TextDedup {
       .orderBy(col("wsize").asc)
   }
 
-  def dedupSweep(spark: SparkSession, dir: String): DataFrame =
-    dedupSweep(Tables.documents(spark, dir))
-
   /** q300: MINHASH THRESHOLD OPERATING-POINT SWEEP — pick the signature-
     * agreement cutoff by measuring it. Over the LSH candidate set, each
     * pair carries (a) the 32-slot signature-agreement ESTIMATE of its
@@ -1276,9 +1249,6 @@ object TextDedup {
       .orderBy(col("batch_size").asc)
   }
 
-  def inBatchCollisions(spark: SparkSession, dir: String): DataFrame =
-    inBatchCollisions(Tables.documents(spark, dir))
-
   /** q317: SHARD LOCALITY OF NEAR-DUP PAIRS — if dedup runs shard-local
     * (the only shape that scales to 100 TB: partition by content
     * fingerprint, dedup within partitions), what fraction of true pairs
@@ -1312,9 +1282,6 @@ object TextDedup {
           .as("same_shard_ppm"))
       .orderBy(col("kind").asc)
   }
-
-  def shardLocality(spark: SparkSession, dir: String): DataFrame =
-    shardLocality(Tables.documents(spark, dir))
 
   /** q322: SORTED-NEIGHBORHOOD dedup (Hernández–Stolfo SNM) + the
     * blocking-quality audit record-linkage reports ship — the classic

@@ -51,9 +51,6 @@ object TextStats {
         (h60(col("norm")) % 64).as("shard"))
       .orderBy(col("doc_id").asc)
 
-  def docFeatures(spark: SparkSession, dir: String): DataFrame =
-    docFeatures(Tables.documents(spark, dir))
-
   /** Corpus statistics per (lang, source): doc/token/char totals and
     * fixed-order averages. The canonical "profile your crawl" aggregation. */
   def corpusStats(docs: DataFrame): DataFrame =
@@ -69,9 +66,6 @@ object TextStats {
         max(col("n_chars")).as("max_chars"))
       .withColumn("avg_tokens", col("total_tokens").cast("double") / col("docs"))
       .orderBy(col("lang").asc, col("source").asc)
-
-  def corpusStats(spark: SparkSession, dir: String): DataFrame =
-    corpusStats(Tables.documents(spark, dir))
 
   /** Quality score: integer rubric (length band, stopword presence, token
     * length sanity) + the ratios it derives from. Filter-quality gating is
@@ -89,9 +83,6 @@ object TextStats {
         col("len_ok"), col("stop_ok"), col("wordlen_ok"),
         (col("len_ok") + col("stop_ok") + col("wordlen_ok")).as("quality"))
       .orderBy(col("doc_id").asc)
-
-  def qualityScore(spark: SparkSession, dir: String): DataFrame =
-    qualityScore(Tables.documents(spark, dir))
 
   /** q273: FLEISS' KAPPA rater-agreement audit over the q32 quality
     * rubric — treat the three heuristic quality signals (len_ok,
@@ -148,9 +139,6 @@ object TextStats {
       .orderBy(col("source").asc)
   }
 
-  def fleissKappa(spark: SparkSession, dir: String): DataFrame =
-    fleissKappa(Tables.documents(spark, dir))
-
   /** Marker-word sets for the n-gram language-ID heuristic. (The synthetic
     * corpus shares one vocabulary across langs, so accuracy vs the label is
     * not the point — the operator contract is a deterministic, portable
@@ -192,9 +180,6 @@ object TextStats {
       .orderBy(col("doc_id").asc)
   }
 
-  def langId(spark: SparkSession, dir: String): DataFrame =
-    langId(Tables.documents(spark, dir))
-
   /** q246: language-ID CONFUSION MATRIX — the q33 per-doc predictions
     * reduced to the (labeled lang × predicted lang) cell counts with
     * per-label row shares in ppm (the diagonal cells ARE per-class
@@ -220,9 +205,6 @@ object TextStats {
       .orderBy(col("lang").asc, col("predicted_lang").asc)
   }
 
-  def langIdConfusion(spark: SparkSession, dir: String): DataFrame =
-    langIdConfusion(Tables.documents(spark, dir))
-
   /** Rolling-hash document fingerprints: every k-byte window of the
     * ASCII-normalized text hashed by the codegen'd O(n)
     * [[graft.functions.RollingHash]] expression — the Rabin–Karp
@@ -246,9 +228,6 @@ object TextStats {
         array_max(col("rh")).as("max_rh"))
       .orderBy(col("doc_id").asc)
   }
-
-  def rollingFingerprints(spark: SparkSession, dir: String): DataFrame =
-    rollingFingerprints(Tables.documents(spark, dir))
 
   // ---------------------------------------------------- distinctive terms
 
@@ -299,9 +278,6 @@ object TextStats {
       .orderBy(col("doc_id").asc, col("rnk").asc)
   }
 
-  def distinctiveTerms(spark: SparkSession, dir: String): DataFrame =
-    distinctiveTerms(Tables.documents(spark, dir))
-
   // --------------------------------------------------- repetition signals
 
   val MaxDupWordPpm = 600000L  // drop docs whose words are >60% repeats
@@ -349,9 +325,6 @@ object TextStats {
       .orderBy(col("doc_id").asc)
   }
 
-  def repetitionSignals(spark: SparkSession, dir: String): DataFrame =
-    repetitionSignals(Tables.documents(spark, dir))
-
   // --------------------------------------------------- rare-word ratio
 
   /** A word is "rare" if it appears in fewer than this many documents. */
@@ -387,9 +360,6 @@ object TextStats {
       .withColumn("oov_heavy", col("rare_ppm") > oovHeavyPpm)
       .orderBy(col("doc_id").asc)
   }
-
-  def rareWordRatio(spark: SparkSession, dir: String): DataFrame =
-    rareWordRatio(Tables.documents(spark, dir))
 
   /** First BPE merge step: the corpus-weighted census of adjacent
     * character pairs — exactly what a tokenizer trainer computes to pick
@@ -450,9 +420,6 @@ object TextStats {
       .toDF("step", "left_sym", "right_sym", "merged", "pair_count")
       .orderBy(col("step").asc)
   }
-
-  def bpeVocabBuild(spark: SparkSession, dir: String): DataFrame =
-    bpeVocabBuild(Tables.documents(spark, dir))
 
   /** Driver-size cap on the collected BPE word-frequency table: at most
     * this many distinct words (top-N by frequency, ties broken by word)
@@ -622,9 +589,6 @@ object TextStats {
       .orderBy(col("source").asc)
   }
 
-  def bpeTokenize(spark: SparkSession, dir: String): DataFrame =
-    bpeTokenize(Tables.documents(spark, dir))
-
   /** q120: bigram LM count table per lang — the first-order conditional
     * counts a tokenizer/LM bootstrap materializes from the corpus. Each
     * doc emits its n-1 adjacent token pairs (one `transform`+`explode`,
@@ -655,9 +619,6 @@ object TextStats {
         col("rank").cast("long").as("rank"))
       .orderBy(col("lang").asc, col("rank").asc)
   }
-
-  def bigramCounts(spark: SparkSession, dir: String): DataFrame =
-    bigramCounts(Tables.documents(spark, dir))
 
   /** q277: GOOD–TURING count-of-counts — the frequency-of-frequencies
     * table Good–Turing smoothing is built from, the classic answer to
@@ -700,9 +661,6 @@ object TextStats {
       .orderBy(col("lang").asc, col("c").asc)
   }
 
-  def goodTuringCounts(spark: SparkSession, dir: String): DataFrame =
-    goodTuringCounts(Tables.documents(spark, dir))
-
   /** q280: ZIPF rank-frequency audit, logarithm-free — Zipf's law says
     * rank × frequency is roughly constant over a natural corpus's head;
     * the r·f product per head word IS that check in exact integers (a
@@ -729,9 +687,6 @@ object TextStats {
       .orderBy(col("lang").asc, col("rnk").asc)
   }
 
-  def zipfAudit(spark: SparkSession, dir: String): DataFrame =
-    zipfAudit(Tables.documents(spark, dir))
-
   /** q134: per-lang k-shingle census through the LAZY shingle generator
     * ([[graft.functions.WordShingles]]): distinct and total word
     * trigrams per language — the corpus-profiling pass run before sizing
@@ -750,9 +705,6 @@ object TextStats {
       .agg(countDistinct(col("shingle")).as("distinct_shingles"),
         count(lit(1)).as("total_shingles"))
       .orderBy(col("lang").asc)
-
-  def shingleCensus(spark: SparkSession, dir: String): DataFrame =
-    shingleCensus(Tables.documents(spark, dir))
 
   /** q133: per-document bigram-LM score — the KenLM/CCNet "perplexity
     * filter" stand-in a production curation pipeline runs to drop
@@ -878,9 +830,6 @@ object TextStats {
       .orderBy(col("lang").asc, col("rank").asc)
   }
 
-  def knBigramLm(spark: SparkSession, dir: String): DataFrame =
-    knBigramLm(Tables.documents(spark, dir))
-
   /** q263: HELD-OUT LM score gap — train a [[knBigramLm]]-style smoothed
     * bigram LM on the TRAIN split only (q52 hash rule) and score every
     * split's pooled bigram stream under it. Train scores above val/test
@@ -946,9 +895,6 @@ object TextStats {
       .orderBy(col("split").asc)
   }
 
-  def heldoutLmGap(spark: SparkSession, dir: String): DataFrame =
-    heldoutLmGap(Tables.documents(spark, dir))
-
   /** q267: WORST-WINDOW LM localization — quality scoring at SPAN
     * granularity instead of q133's whole-doc mean: each document's
     * bigram stream is cut into fixed 8-bigram windows, every window gets
@@ -1001,9 +947,6 @@ object TextStats {
       .orderBy(col("source").asc)
   }
 
-  def worstWindowLm(spark: SparkSession, dir: String): DataFrame =
-    worstWindowLm(Tables.documents(spark, dir))
-
   /** q268: SIMPSON bigram-diversity census — the collision probability
     * of two random bigrams per source, Σ f·(f−1) / (T·(T−1)) in exact
     * integer ppm. This is the pairwise-overlap (self-BLEU-style)
@@ -1043,9 +986,6 @@ object TextStats {
       .orderBy(col("source").asc)
   }
 
-  def simpsonDiversity(spark: SparkSession, dir: String): DataFrame =
-    simpsonDiversity(Tables.documents(spark, dir))
-
   /** q121: source-vs-corpus distribution drift, exact integer ppm — the
     * monitoring op a training pipeline runs to catch a source whose
     * language mix shifts between snapshots. L1 distance between each
@@ -1079,12 +1019,6 @@ object TextStats {
       .orderBy(col("source").asc)
   }
 
-  def sourceDrift(spark: SparkSession, dir: String): DataFrame =
-    sourceDrift(Tables.documents(spark, dir))
-
-  def bpeMergeCandidates(spark: SparkSession, dir: String): DataFrame =
-    bpeMergeCandidates(Tables.documents(spark, dir))
-
   /** q138: Unicode-canonicalization census — per lang, how many docs are
     * NOT in NFC and how many code points canonicalization removes. This is
     * the audit run BEFORE content hashing: every hash-keyed operator
@@ -1114,9 +1048,6 @@ object TextStats {
         sum(length(col("raw")) - length(col("nfc"))).as("cp_removed"))
       .orderBy(col("lang").asc)
 
-  def nfcCensus(spark: SparkSession, dir: String): DataFrame =
-    nfcCensus(Tables.documents(spark, dir))
-
   /** q144: case-insensitive census via COLLATION (Spark 4) — grouping,
     * equality, and ordering under `UTF8_LCASE` as a property of the TYPE,
     * not a `lower()` call at every use site. That distinction matters at
@@ -1143,9 +1074,6 @@ object TextStats {
       .select(lower(col("lang_ci")).cast("string").as("lang"),
         col("n_docs"), col("n_spellings"), col("min_doc_id"))
       .orderBy(col("lang").asc)
-
-  def collatedLangCensus(spark: SparkSession, dir: String): DataFrame =
-    collatedLangCensus(Tables.documents(spark, dir))
 
   /** q151: vocabulary-growth curve — how many NEW word types each block of
     * `bucketDocs` documents contributes, plus the running vocabulary size.
@@ -1177,9 +1105,6 @@ object TextStats {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .orderBy(col("bucket").asc)
   }
-
-  def vocabGrowth(spark: SparkSession, dir: String): DataFrame =
-    vocabGrowth(Tables.documents(spark, dir))
 
   /** Per-document shingle NOVELTY: the fraction of a document's distinct
     * word 3-shingles never seen in any lower-doc_id document. The
@@ -1251,9 +1176,6 @@ object TextStats {
       .orderBy(col("lang").asc, col("source").asc)
   }
 
-  def chi2Census(spark: SparkSession, dir: String): DataFrame =
-    chi2Census(Tables.documents(spark, dir))
-
   /** Char-mass-WEIGHTED doc-length percentiles per source: the length L
     * such that 25/50/75 % of the source's characters live in docs of
     * length ≤ L. Token-weighted (not doc-weighted) percentiles are what
@@ -1286,9 +1208,6 @@ object TextStats {
           .as("p75_len"))
       .orderBy(col("source").asc)
   }
-
-  def weightedLengthPercentiles(spark: SparkSession, dir: String): DataFrame =
-    weightedLengthPercentiles(Tables.documents(spark, dir))
 
   /** Quality × duplication INTERACTION census — operators composed: the
     * q32 quality score crossed with the q160 chunk-level duplication
@@ -1330,9 +1249,6 @@ object TextStats {
       .orderBy(col("quality").asc)
   }
 
-  def qualityDupInteraction(spark: SparkSession, dir: String): DataFrame =
-    qualityDupInteraction(Tables.documents(spark, dir))
-
   /** Out-of-vocabulary census per source against a corpus-derived
     * top-K vocabulary — the tokenizer-coverage audit: a source whose
     * token mass falls outside the vocabulary will fragment into long
@@ -1360,9 +1276,6 @@ object TextStats {
         expr("oov_tokens * 1000000 div n_tokens").cast("long").as("oov_ppm"))
       .orderBy(col("source").asc)
   }
-
-  def oovCensus(spark: SparkSession, dir: String): DataFrame =
-    oovCensus(Tables.documents(spark, dir))
 
   /** q212: PMI collocation ranking — which word pairs co-occur
     * adjacently far more than their marginals predict. The association
@@ -1408,9 +1321,6 @@ object TextStats {
       .orderBy(col("lift_ppm").desc, col("w1").asc, col("w2").asc)
   }
 
-  def pmiCollocations(spark: SparkSession, dir: String): DataFrame =
-    pmiCollocations(Tables.documents(spark, dir))
-
   /** q219: vocabulary-size sweep — the OOV-mass curve behind tokenizer
     * sizing: for each candidate vocab size s (top-s tokens by corpus
     * frequency, deterministic (count desc, token asc) order), the
@@ -1452,9 +1362,6 @@ object TextStats {
           .as("oov_ppm"))
       .orderBy(col("vocab_size").asc, col("source").asc)
   }
-
-  def vocabSweep(spark: SparkSession, dir: String): DataFrame =
-    vocabSweep(Tables.documents(spark, dir))
 
   /** q226: compression-ratio quality proxy — the Gopher/RefinedWeb
     * heuristic: highly compressible text is repetitive boilerplate,
@@ -1506,9 +1413,6 @@ object TextStats {
       .orderBy(col("source").asc)
   }
 
-  def compressionQuality(spark: SparkSession, dir: String): DataFrame =
-    compressionQuality(Tables.documents(spark, dir))
-
   /** q253: quality-filter LENGTH-CALIBRATION matrix — per (64-char
     * length band × rubric score) document counts with each band's score
     * distribution in ppm. The audit every production quality gate needs
@@ -1536,9 +1440,6 @@ object TextStats {
         col("n_docs").cast("long").as("n_docs"), col("bucket_share_ppm"))
       .orderBy(col("len_bucket").asc, col("quality").asc)
   }
-
-  def qualityLengthCalibration(spark: SparkSession, dir: String): DataFrame =
-    qualityLengthCalibration(Tables.documents(spark, dir))
 
   /** q285: CCNet-STYLE PERPLEXITY BUCKETS — per language, rank every
     * document by its bigram-LM score (the q133 model) and split the
@@ -1595,9 +1496,6 @@ object TextStats {
         col("max_score_ppm").cast("long").as("max_score_ppm"))
       .orderBy(col("lang").asc, col("bucket").asc)
   }
-
-  def ccnetBuckets(spark: SparkSession, dir: String): DataFrame =
-    ccnetBuckets(Tables.documents(spark, dir))
 
   /** q286: GOPHER-STYLE QUALITY-RULE GATE with per-rule and FIRST-FAIL
     * attribution — the multi-rule heuristic filter of Rae et al.'s Gopher
@@ -1678,9 +1576,6 @@ object TextStats {
       .orderBy(col("rule").asc)
   }
 
-  def gopherRules(spark: SparkSession, dir: String): DataFrame =
-    gopherRules(Tables.documents(spark, dir))
-
   /** q287: FILTER DEMOGRAPHIC-PARITY AUDIT — does the q32 quality gate
     * (pass = all three rubric signals ok) admit every language at a
     * comparable rate? Quality heuristics tuned on high-resource text are
@@ -1719,9 +1614,6 @@ object TextStats {
         (col("ratio_ppm") >= 800000L).as("four_fifths_ok"))
       .orderBy(col("lang").asc)
   }
-
-  def filterParity(spark: SparkSession, dir: String): DataFrame =
-    filterParity(Tables.documents(spark, dir))
 
   /** q288: LEAVE-ONE-SOURCE-OUT SUPPORT — data valuation by sufficient-
     * statistic subtraction. For every source, score its bigrams under
@@ -1775,9 +1667,6 @@ object TextStats {
       .orderBy(col("source").asc)
   }
 
-  def losoSupport(spark: SparkSession, dir: String): DataFrame =
-    losoSupport(Tables.documents(spark, dir))
-
   /** q292: PAIRWISE SOURCE TOTAL-VARIATION DISTANCE MATRIX — for every
     * source pair, the TV distance ½·Σ|p(w) − q(w)| between their unigram
     * distributions (floor-ppm shares). TV is the linear-arithmetic
@@ -1817,9 +1706,6 @@ object TextStats {
       .orderBy(col("source_a").asc, col("source_b").asc)
   }
 
-  def sourceTvMatrix(spark: SparkSession, dir: String): DataFrame =
-    sourceTvMatrix(Tables.documents(spark, dir))
-
   /** q293: MANN–WHITNEY U per language vs the rest — the
     * distribution-free two-sample test statistic over document lengths,
     * with the common-language effect size (CLES = U/(n₁n₂) =
@@ -1855,9 +1741,6 @@ object TextStats {
           + "(2 * n1 * (n_total - n1))").cast("long").as("cles_ppm"))
       .orderBy(col("lang").asc)
   }
-
-  def mannWhitney(spark: SparkSession, dir: String): DataFrame =
-    mannWhitney(Tables.documents(spark, dir))
 
   /** q294: DETERMINISTIC RANDOMIZATION TEST — is the English-doc length
     * difference explainable by chance? B = 128 pseudo-random relabelings
@@ -1913,9 +1796,6 @@ object TextStats {
           .as("p_ppm"))
   }
 
-  def permutationTest(spark: SparkSession, dir: String): DataFrame =
-    permutationTest(Tables.documents(spark, dir))
-
   /** q295: BLEU-STYLE CORPUS OVERLAP — per source, the modified
     * (clipped) n-gram precision of the source against the REST of the
     * corpus for n = 1, 2, 3: Σ_g min(c_S(g), c_corpus(g) − c_S(g)) over
@@ -1959,9 +1839,6 @@ object TextStats {
           .as("precision_ppm"))
       .orderBy(col("source").asc, col("ngram").asc)
   }
-
-  def bleuOverlap(spark: SparkSession, dir: String): DataFrame =
-    bleuOverlap(Tables.documents(spark, dir))
 
   /** q296: QUANTILE-MAPPING TABLE — per source, the exact decile
     * boundaries of document length next to the GLOBAL deciles, with the
@@ -2014,9 +1891,6 @@ object TextStats {
       .orderBy(col("source").asc, col("decile").asc)
   }
 
-  def quantileMapping(spark: SparkSession, dir: String): DataFrame =
-    quantileMapping(Tables.documents(spark, dir))
-
   /** q302: COMPRESSION-DICTIONARY CANDIDATE MINING — the top trigram
     * phrases by modeled dictionary gain (c−1)·(len−2): every occurrence
     * beyond the first saves the phrase's bytes minus a token + separator
@@ -2047,9 +1921,6 @@ object TextStats {
         col("savings").cast("long").as("savings_bytes"))
       .orderBy(col("rank").asc)
   }
-
-  def dictMining(spark: SparkSession, dir: String): DataFrame =
-    dictMining(Tables.documents(spark, dir))
 
   /** q304: WILSON CONFIDENCE BOUNDS for the per-language quality-gate
     * pass rate — the uncertainty companion to the q287 parity audit: a
@@ -2104,9 +1975,6 @@ object TextStats {
       .orderBy(col("lang").asc)
   }
 
-  def wilsonBounds(spark: SparkSession, dir: String): DataFrame =
-    wilsonBounds(Tables.documents(spark, dir))
-
   /** q309: NESTED-SUBSAMPLE VOCABULARY CURVE — distinct word types and
     * distinct trigram shingles at hash-nested 10% / 25% / 50% / 100%
     * corpus samples. The "what does more data buy" instrument: type
@@ -2144,9 +2012,6 @@ object TextStats {
         col("n_types").cast("long").as("n_types"))
       .orderBy(col("kind").asc, col("sample_pct").asc)
   }
-
-  def sampleCurve(spark: SparkSession, dir: String): DataFrame =
-    sampleCurve(Tables.documents(spark, dir))
 
   /** q324: 1-D WASSERSTEIN (earth-mover) distance matrix between
     * per-source document-LENGTH distributions — the transport metric
@@ -2204,9 +2069,6 @@ object TextStats {
       .orderBy(col("source_a").asc, col("source_b").asc)
   }
 
-  def sourceWassersteinMatrix(spark: SparkSession, dir: String): DataFrame =
-    sourceWassersteinMatrix(Tables.documents(spark, dir))
-
   /** q332: PICKANDS-STYLE heavy-tail index audit of per-document token
     * length, per language — the shard-planning instrument the length
     * censuses (q154 buckets, q176 weighted percentiles) lack: how FAT is
@@ -2258,9 +2120,6 @@ object TextStats {
           .as("pickands_ratio_ppm"))
       .orderBy(col("lang").asc)
   }
-
-  def tailIndexAudit(spark: SparkSession, dir: String): DataFrame =
-    tailIndexAudit(Tables.documents(spark, dir))
 
   /** q335 flag set, single-sourced into both engines: the q32 rubric's
     * three failure flags plus the five q286 Gopher rules. The oracle SQL
@@ -2321,7 +2180,4 @@ object TextStats {
           .as("overlap_jaccard_ppm"))
       .orderBy(col("flag_a").asc, col("flag_b").asc)
   }
-
-  def filterOverlapMatrix(spark: SparkSession, dir: String): DataFrame =
-    filterOverlapMatrix(Tables.documents(spark, dir))
 }

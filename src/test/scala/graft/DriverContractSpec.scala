@@ -114,6 +114,36 @@ class DriverContractSpec extends AnyFunSuite {
       "ROUNDCHECK.json lacks a bench_sf01_sec phase budget")
   }
 
+  // A query reads its input table in ONE place: the registry binds it
+  // (SparkEntry's docs/embeddings/silver/orders/events binders) and the
+  // module exports only the DataFrame function. A module-level
+  // `def f(spark, dir) = f(<table read>(spark, dir))` writes that choice
+  // a second time; this law keeps the forwarding layer from growing back.
+  test("no (spark, dir) entry point only forwards to its DataFrame twin on a table read") {
+    val forward = ("""def (\w+)\((\w+): SparkSession, (\w+): String\)(?::\s*DataFrame)?\s*=\s*""" +
+      """(?:\{\s*)?(?:[\w.]+\.)?\1\((?:graft\.\w+\.)?""" +
+      """(?:Tables\.(?:documents|embeddings|orders|events)|EventsPipeline\.silver)""" +
+      """\(\2, \3\)\)(?!\s*\.)""").r
+    // positive control: the detector must flag the forbidden shape
+    assert(forward.findFirstIn("""def topUsers(spark: SparkSession, dir: String): DataFrame =
+      |    topUsers(EventsPipeline.silver(spark, dir))""".stripMargin).isDefined)
+    assert(forward.findFirstIn("""def topUsers(spark: SparkSession, dir: String): DataFrame =
+      |    topUsers(EventsPipeline.silver(spark, dir)).limit(3)""".stripMargin).isEmpty)
+    val files = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .forEach(p => if (p.toString.endsWith(".scala")) files += p)
+    assert(files.nonEmpty, "source scan found nothing — path wrong?")
+    val forwards = files.toSeq.flatMap { p =>
+      val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      forward.findAllMatchIn(txt).map { m =>
+        s"$p:${txt.take(m.start).count(_ == '\n') + 1}: ${m.group(1)}"
+      }
+    }
+    assert(forwards.isEmpty,
+      s"${forwards.size} pure table-read forwards (delete them and bind the " +
+        "table in SparkEntry.queries):\n  " + forwards.mkString("\n  "))
+  }
+
   test("entry() returns rows on the smoke scale factor") {
     val spark = graft.core.Sessions.local(4, "graft-contract")
     assert(SparkEntry.entry(spark).count() > 0)

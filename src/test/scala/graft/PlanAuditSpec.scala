@@ -158,11 +158,11 @@ class PlanAuditSpec extends SparkSpecBase {
     // so eager construction would unpersist later cases' caches
     val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "q168_type_lift" ->
-        (() => graft.analytics.Reports.typeLift(spark, sf)),
+        (() => graft.analytics.Reports.typeLift(EventsPipeline.silver(spark, sf))),
       "q183_type_covariance" ->
-        (() => graft.analytics.Reports.typeCovariance(spark, sf)),
+        (() => graft.analytics.Reports.typeCovariance(EventsPipeline.silver(spark, sf))),
       "q221_window_provenance" ->
-        (() => graft.llm.TextDedup.windowProvenance(spark, sf)))
+        (() => graft.llm.TextDedup.windowProvenance(Tables.documents(spark, sf))))
     cases.foreach { case (name, mk) =>
       val df = mk()
       val rels = df.queryExecution.optimizedPlan
@@ -175,6 +175,91 @@ class PlanAuditSpec extends SparkSpecBase {
           "are building the scratch frame independently")
       graft.core.Caches.releaseScratch(spark)
     }
+  }
+
+  // Materialize-then-plan pins (ROADMAP D3(b)). q29 and q298 persist a
+  // frame pre-partitioned on their join/group key, and the plans below
+  // reuse that partitioning only because the cache is materialized when
+  // the consumer is planned: q29 count()s it while building the frame,
+  // q298 relies on AQE re-planning over the materialized cache stage.
+  // Both depend on how Spark reports a cache's partitioning, so a Spark
+  // upgrade or a dropped count() shows up here as a returning Exchange.
+  // A suite that cached one of these results (GraphsSpec caches q104's)
+  // would hide its plan behind a single cache scan, so `uncached` drops
+  // that entry (if any) before the plan is built.
+  private def uncached(df: org.apache.spark.sql.DataFrame) =
+    df.unpersist(blocking = true)
+
+  private def physical(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  test("q29 ngram Jaccard: the shingle self-join reads the counted cache with no Exchange") {
+    import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // no broadcast: at sf0.001 the arms are small enough to broadcast,
+    // which would hide the shuffle join every larger corpus gets
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val plan = physical(uncached(
+        graft.llm.TextDedup.ngramJaccardDups(Tables.documents(spark, sf))))
+      def onCache(p: SparkPlan): Boolean = p match {
+        case _: InMemoryTableScanExec => true
+        case _: Exchange => false
+        case u: UnaryExecNode => onCache(u.child)
+        case _ => false
+      }
+      val joins = plan.collect {
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "shingle")) => j
+      }
+      assert(joins.size === 1, s"expected one shingle-keyed self-join in:\n$plan")
+      assert(joins.head.children.forall(onCache),
+        s"an Exchange sits between the shingle self-join and its cache:\n$plan")
+    } finally {
+      was match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      graft.core.Caches.releaseScratch(spark)
+    }
+  }
+
+  test("q298 dedup sweep: one (wsize, gram) exchange feeds the distinct, the count and the join") {
+    // the reuse shows in the FINAL adaptive plan, once the gram cache is
+    // a materialized stage: every hash exchange keyed on the gram is the
+    // explicit repartition inside the cache build, none is inserted for
+    // the distinct, the gram count or the shared-gram flag join
+    try {
+      val df = uncached(graft.llm.TextDedup.dedupSweep(Tables.documents(spark, sf)))
+      df.collect()
+      val plan = physical(df).toString
+      val gramExchanges = "Exchange hashpartitioning\\([^)]*gram#\\d+[^)]*\\), (\\w+)".r
+        .findAllMatchIn(plan).map(_.group(1)).toSeq
+      assert(gramExchanges.nonEmpty, s"gram repartition missing from:\n$plan")
+      assert(gramExchanges.forall(_ == "REPARTITION_BY_COL"),
+        s"a gram-keyed exchange was inserted above the cache:\n$plan")
+    } finally graft.core.Caches.releaseScratch(spark)
+  }
+
+  test("q104 item-item recs: only the final orderBy exchanges above the memoized adjacency") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    val plan = physical(uncached(graft.analytics.Graphs.itemItemRecs(spark, sf)))
+    // a cache scan is a leaf here, so this sees only the per-run plan
+    assert(plan.collect { case s: InMemoryTableScanExec => s }.size === 1,
+      s"adjacency memo not read once in:\n$plan")
+    val exchanges = plan.collect { case e: Exchange => e }
+    assert(exchanges.size === 1 && (exchanges.head match {
+      case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }), s"expected only the orderBy range exchange above the adjacency:\n$plan")
   }
 
   test("curation funnel plan has no corpus-wide running-aggregate window") {
@@ -395,8 +480,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // both decompose to per-source partitions; an unpartitioned window
     // here would be the single-reducer corpus sort the design forbids
     Seq(
-      graft.llm.Curation.systematicSample(spark, sf),
-      graft.llm.TextStats.weightedLengthPercentiles(spark, sf)
+      graft.llm.Curation.systematicSample(Tables.documents(spark, sf)),
+      graft.llm.TextStats.weightedLengthPercentiles(Tables.documents(spark, sf))
     ).foreach { df =>
       val plan = df.queryExecution.executedPlan.toString
       val windows = plan.linesIterator.filter(_.contains("Window")).mkString("\n")
@@ -419,9 +504,9 @@ class PlanAuditSpec extends SparkSpecBase {
     try {
       spark.conf.set("spark.graft.scan.fanout", "false")
       Seq(
-        graft.analytics.Bitmaps.bitmapRetention(spark, sf),
-        graft.analytics.Bitmaps.cohortMatrix(spark, sf),
-        graft.analytics.Bitmaps.segmentOverlap(spark, sf)
+        graft.analytics.Bitmaps.bitmapRetention(EventsPipeline.silver(spark, sf)),
+        graft.analytics.Bitmaps.cohortMatrix(EventsPipeline.silver(spark, sf)),
+        graft.analytics.Bitmaps.segmentOverlap(EventsPipeline.silver(spark, sf))
       ).foreach { df =>
         val plan = df.queryExecution.executedPlan.toString
         assert(!plan.contains("SortMergeJoin"),

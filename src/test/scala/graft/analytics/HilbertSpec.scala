@@ -61,7 +61,7 @@ class HilbertSpec extends SparkSpecBase {
     assert(hppm > zppm,
       s"Hilbert locality $hppm must beat Z-order $zppm on the full grid")
     // sparse corpus grids still produce a well-formed census
-    val sfOut = Layout.curveLocalityAudit(spark, sf).collect()
+    val sfOut = Layout.curveLocalityAudit(graft.core.Tables.orders(spark, sf)).collect()
     graft.core.Caches.releaseScratch(spark)
     assert(sfOut.length === 2)
     sfOut.foreach { r =>

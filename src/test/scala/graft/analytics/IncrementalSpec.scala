@@ -40,7 +40,7 @@ class IncrementalSpec extends SparkSpecBase {
 
   test("corpus diff census reconciles with the residue classes that built snapshot B") {
     val docs = graft.core.Tables.documents(spark, sf)
-    val byStatus = Incremental.corpusDiff(spark, sf).collect()
+    val byStatus = Incremental.corpusDiff(graft.core.Tables.documents(spark, sf)).collect()
       .map(r => r.getString(0) -> r.getAs[Long]("n_docs")).toMap
     val removed = docs.filter(col("doc_id") % 97 === 0).count()
     val added = docs.filter(col("doc_id") % 101 === 0).count()

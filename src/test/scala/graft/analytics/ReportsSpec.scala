@@ -145,7 +145,7 @@ class ReportsSpec extends SparkSpecBase {
   }
 
   test("quartiles partition the user base near-evenly and order by volume") {
-    val out = Reports.userQuartiles(spark, sf).collect()
+    val out = Reports.userQuartiles(EventsPipeline.silver(spark, sf)).collect()
     assert(out.map(_.getAs[Long]("users")).sum ===
       graft.pipeline.EventsPipeline.silver(spark, sf)
         .select(countDistinct(col("user_id"))).head.getLong(0))

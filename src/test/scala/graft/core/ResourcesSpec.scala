@@ -48,7 +48,7 @@ class ResourcesSpec extends SparkSpecBase {
   }
 
   test("q226 deflater path still produces per-source rows end-to-end") {
-    val out = graft.llm.TextStats.compressionQuality(spark, sf).collect()
+    val out = graft.llm.TextStats.compressionQuality(Tables.documents(spark, sf)).collect()
     assert(out.length > 0)
     assert(out.forall(r => r.getAs[Long]("mean_ratio_ppm") > 0L))
   }

@@ -147,10 +147,10 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("sequence packing tiles the token stream: chunks contiguous, budget-aligned") {
-    val out = Curation.packSequences(spark, sf).cache()
+    val out = Curation.packSequences(Tables.documents(spark, sf)).cache()
     import org.apache.spark.sql.functions._
     // total packed tokens == total corpus tokens (nothing dropped)
-    val total = Curation.tokenCounts(spark, sf)
+    val total = Curation.tokenCounts(Tables.documents(spark, sf))
       .agg(sum(col("ws_tokens"))).head.getLong(0)
     assert(out.agg(sum(col("n_tokens"))).head.getLong(0) === total)
     out.collect().groupBy(_.getString(0)).foreach { case (_, rows) =>
@@ -172,10 +172,10 @@ class CurationSpec extends SparkSpecBase {
 
   test("greedy packing: budget respected, docs intact, fill is tight") {
     import org.apache.spark.sql.functions._
-    val out = Curation.packGreedy(spark, sf).cache()
+    val out = Curation.packGreedy(Tables.documents(spark, sf)).cache()
     // nothing lost: token totals match the stream packing's
     assert(out.agg(sum("n_tokens")).head.getLong(0) ===
-      Curation.packSequences(spark, sf).agg(sum("n_tokens")).head.getLong(0))
+      Curation.packSequences(Tables.documents(spark, sf)).agg(sum("n_tokens")).head.getLong(0))
     // a chunk over budget can only be a single oversized doc
     assert(out.filter(col("n_tokens") > 512 && col("n_docs") > 1).count() === 0)
     // padding accounting
@@ -195,7 +195,7 @@ class CurationSpec extends SparkSpecBase {
     // greedy tightness: chunk i could not absorb chunk i+1's first doc
     val placedFirsts = out.select(col("source"), col("chunk_id"),
       col("n_tokens"), col("first_doc"))
-    val docToks = Curation.tokenCounts(spark, sf)
+    val docToks = Curation.tokenCounts(Tables.documents(spark, sf))
       .select(col("doc_id").as("first_doc"),
         col("ws_tokens").cast("long").as("first_toks"))
     val joined = placedFirsts.join(docToks, "first_doc")
@@ -210,10 +210,10 @@ class CurationSpec extends SparkSpecBase {
   test("grouped greedy packing: bounded chains, equals pure greedy at one group") {
     import org.apache.spark.sql.functions._
     val docs = graft.core.Tables.documents(spark, sf)
-    val out = Curation.packGreedyGrouped(spark, sf).cache()
+    val out = Curation.packGreedyGrouped(Tables.documents(spark, sf)).cache()
     // conservation: same token total as the other packing spellings
     assert(out.agg(sum("n_tokens")).head.getLong(0) ===
-      Curation.packSequences(spark, sf).agg(sum("n_tokens")).head.getLong(0))
+      Curation.packSequences(Tables.documents(spark, sf)).agg(sum("n_tokens")).head.getLong(0))
     // budget respected except single oversized docs
     assert(out.filter(col("n_tokens") > 512 && col("n_docs") > 1).count() === 0)
     // each group holds at most groupDocs docs and a group of g docs can
@@ -286,7 +286,7 @@ class CurationSpec extends SparkSpecBase {
     val feats = TextStats.qualityScore(docs)
       .select(col("doc_id"), col("n_tokens").cast("long").as("toks"), col("quality"))
     val budget = feats.agg(expr("CAST(SUM(toks) DIV 3 AS BIGINT)")).head().getLong(0)
-    val out = Curation.budgetAllocation(spark, sf).collect()
+    val out = Curation.budgetAllocation(Tables.documents(spark, sf)).collect()
     val keptTokens = out.map(_.getAs[Long]("tokens_kept")).sum
     assert(keptTokens <= budget, s"kept $keptTokens > budget $budget")
     // tightness: the cheapest unkept doc would not have fit... the greedy

@@ -253,7 +253,7 @@ class DupClustersSpec extends SparkSpecBase {
   test("reference closure only admits hamming <= 1 simhash pairs") {
     val refDocs = DupClusters.simClustersFor(spark, sf)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    val tight = TextDedup.simhashNearDups(spark, sf)
+    val tight = TextDedup.simhashNearDups(Tables.documents(spark, sf))
       .filter(col("hamming") <= DupClusters.SimRefHammingMax)
     val tightDocs = tight.select(col("doc_a")).collect().map(_.getLong(0))
       .toSet ++ tight.select(col("doc_b")).collect().map(_.getLong(0)).toSet

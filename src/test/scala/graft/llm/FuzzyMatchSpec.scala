@@ -69,7 +69,7 @@ class FuzzyMatchSpec extends SparkSpecBase {
     assert(out.toSeq === Seq((1L, 2L, 1L)),
       "exactly the same-language planted pair at distance 1")
     // sf corpus: pairs ordered, distance within threshold
-    val sfOut = FuzzyMatch.editDistanceDups(spark, sf).collect()
+    val sfOut = FuzzyMatch.editDistanceDups(graft.core.Tables.documents(spark, sf)).collect()
     sfOut.foreach { r =>
       assert(r.getLong(1) < r.getLong(2))
       assert(r.getLong(3) >= 0L && r.getLong(3) <= 8L)

@@ -172,9 +172,9 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("int8-quantized top-k keeps recall >= 0.8 vs full precision") {
-    val exact = Similarity.knnExact(spark, sf).collect()
+    val exact = Similarity.knnExact(Tables.embeddings(spark, sf)).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val quant = Similarity.knnQuantized(spark, sf).collect()
+    val quant = Similarity.knnQuantized(Tables.embeddings(spark, sf)).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
     val recall = (exact & quant).size.toDouble / exact.size
     assert(recall >= 0.8, s"quantized recall $recall < 0.8")

@@ -401,7 +401,7 @@ class TextStatsSpec extends SparkSpecBase {
   }
 
   test("bigram table: ranks dense per lang, counts non-increasing, ppm is exact floor division") {
-    val out = TextStats.bigramCounts(spark, sf).collect()
+    val out = TextStats.bigramCounts(Tables.documents(spark, sf)).collect()
     val byLang = out.groupBy(_.getString(0))
     byLang.foreach { case (lang, rows) =>
       val ranks = rows.map(_.getAs[Long]("rank")).sorted.toSeq
@@ -895,7 +895,7 @@ class TextStatsSpec extends SparkSpecBase {
     assert(out(("b", "c")) === 10000000L, "pure +10 shift")
     assert(out(("a", "c")) === 10000000L)
     // sf corpus: full matrix, non-negative, deterministic
-    val m = TextStats.sourceWassersteinMatrix(spark, sf).collect()
+    val m = TextStats.sourceWassersteinMatrix(Tables.documents(spark, sf)).collect()
     graft.core.Caches.releaseScratch(spark)
     val nSrc = Tables.documents(spark, sf).select("source").distinct().count()
     assert(m.length === (nSrc * (nSrc - 1) / 2).toInt)

@@ -8,19 +8,28 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
 
-/** The state data source reads a stopped StreamDedup checkpoint back as
-  * a table: every retained content hash with its surviving doc_id, plus
-  * the operator inventory via state-metadata. */
+/** The state data source reads stopped checkpoints back as tables: a
+  * StreamDedup checkpoint gives every retained content hash with its
+  * surviving doc_id, plus the operator inventory via state-metadata; a
+  * TimerSessionize checkpoint gives each user's still-open session. */
 class StateInspectSpec extends SparkSpecBase {
 
   private val RocksDB =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
-  test("dedup seen-state is readable offline with hashes and survivors") {
+  private def withRocksDB[A](body: => A): A = {
     val prior = spark.conf.getOption(ProviderKey)
     spark.conf.set(ProviderKey, RocksDB)
-    try {
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(ProviderKey, v)
+      case None => spark.conf.unset(ProviderKey)
+    }
+  }
+
+  test("dedup seen-state is readable offline with hashes and survivors") {
+    withRocksDB {
       val in = tmpDir("sinspect-in-")
       val out = tmpDir("sinspect-out-")
       val ckpt = tmpDir("sinspect-ckpt-")
@@ -47,9 +56,46 @@ class StateInspectSpec extends SparkSpecBase {
       val ops = StateInspect.operators(spark, ckpt)
       assert(ops.count() >= 1)
       assert(ops.columns.contains("operatorName"))
-    } finally prior match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
+    }
+  }
+
+  test("open timer sessions are readable offline with their bounds, counts and deadlines") {
+    withRocksDB {
+      val in = tmpDir("sinspect-sess-in-")
+      val out = tmpDir("sinspect-sess-out-")
+      val ckpt = tmpDir("sinspect-sess-ckpt-")
+      val T0 = 1700000000000L // epoch ms
+      val Gap = 1800000L      // the 30 min gap, in ms
+      val H3 = T0 + 10800000L // three hours after T0
+      def at(u: String, ms: Long) =
+        s"""{"user_name":"$u","ts":"${java.time.Instant.ofEpochMilli(ms)}"}"""
+      // u1 goes quiet, so the watermark (H3 - 30 s) closes it on a timer;
+      // u2's 3 h gap closes its first session inline and leaves one event
+      // open; u3 is open with two events inside the gap
+      Files.write(Paths.get(in, "b1.json"), Seq(
+        at("u1", T0), at("u1", T0 + 60000L), at("u1", T0 + 120000L),
+        at("u2", T0), at("u2", H3),
+        at("u3", H3 - 60000L), at("u3", H3 - 20000L)).mkString("\n").getBytes)
+      val q = TimerSessionize.sessions(spark,
+          spark.readStream.schema(StructType(Seq(
+            StructField("user_name", StringType), StructField("ts", TimestampType))))
+            .json(in), gapSeconds = Gap / 1000)
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").trigger(Trigger.AvailableNow).start()
+      q.awaitTermination()
+
+      val open = StateInspect.openSessions(spark, ckpt).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .sortBy(_._1).toSeq
+      assert(open === Seq(
+        ("u2", H3, H3, 1L, H3 + Gap),
+        ("u3", H3 - 60000L, H3 - 20000L, 2L, H3 - 20000L + Gap)))
+      // the sessions missing from the state are the ones emitted
+      val closed = spark.read.parquet(out).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(_._1).toSeq
+      assert(closed === Seq(("u1", T0, T0 + 120000L, 3L), ("u2", T0, T0, 1L)))
     }
   }
 }
