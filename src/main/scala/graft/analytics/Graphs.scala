@@ -1,10 +1,11 @@
 package graft.analytics
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, LongLongMap, Tables}
 
 /** Distributed graph analytics over the order co-purchase graph (parts that
   * appear in the same order are connected). Complements the iterative
@@ -313,69 +314,23 @@ object Graphs {
     * recursive member, and unrolling IS the semantics: fixed iters, not
     * convergence).
     *
-    * Scale shape: each iteration is one keyed equi-join of the edge list
-    * against the node-sized rank table plus one aggregation — the
-    * standard distributed PageRank step. Edges and degrees are computed
-    * once and reused ([[graft.core.Caches.scratch]]); each round's ranks
-    * are truncated with an eager `localCheckpoint` so the plan stays
-    * constant-size across iterations (same rule as the connected-
-    * components loop, q60). Undirected symmetric edges mean every node
-    * has out-degree ≥ 1 — no dangling-mass redistribution term needed.
+    * Scale shape: the [[PageRank]] kernel on the [[nodeLoop]] runner with
+    * `maxRounds = iters` — the q227 loop itself. Its early stop fires only
+    * once r_t = r_(t−1), after which every later round repeats r_t, so a
+    * run capped at `iters` rounds yields exactly r_iters. Undirected
+    * symmetric edges mean every node has out-degree ≥ 1 — no dangling-
+    * mass redistribution term needed.
     *
     * Overflow headroom: Σ contribs ≤ total mass = n·10⁶, so the ×17 stays
     * within Long for n up to ~5·10¹¹ nodes. */
   def pageRankPpm(spark: SparkSession, dir: String,
                   iters: Int = 3, topK: Int = 10): DataFrame =
-    pageRankPpmFromAdj(
-      coPurchaseAdjacency(spark, dir)
-        .select(col("node"), col("deg"),
-          expr("transform(nbrs, x -> x.v)").as("outs")),
-      iters, topK)
+    pageRankTop(coPurchaseNeighbors(spark, dir), topK, iters)
 
   /** [[pageRankPpm]] over an arbitrary undirected (u, v) edge list. */
   def pageRankPpmOf(undirected: DataFrame,
-                    iters: Int = 3, topK: Int = 10): DataFrame = {
-    val directed = undirected.select(col("u"), col("v"))
-      .unionAll(undirected.select(col("v").as("u"), col("u").as("v")))
-      .repartition(fullWidth(undirected), col("u"))
-    pageRankPpmFromAdj(
-      directed.groupBy(col("u"))
-        .agg(count(lit(1)).as("deg"), collect_list(col("v")).as("outs"))
-        .select(col("u").as("node"), col("deg"), col("outs")),
-      iters, topK)
-  }
-
-  /** Fixed-iteration pagerank over an out-adjacency plan (node, deg,
-    * outs) — round 13: the same node-sized loop frame as the converged
-    * kernel (q227), minus its convergence machinery. The adjacency is
-    * scratch-cached (scanned `iters` times), each iteration is one
-    * co-partitioned join + explode + node-sized re-aggregation, and the
-    * fixed small iteration count keeps the single fused job with NO
-    * per-round checkpoint (lineage grows linearly — `ranks` feeds one
-    * side only; a convergence-driven variant needs the q227 batching). */
-  private def pageRankPpmFromAdj(adjPlan: DataFrame,
-      iters: Int, topK: Int): DataFrame = {
-    val adj = Caches.scratch(adjPlan)
-    var ranks = adj.select(col("node"), lit(1000000L).as("rank_ppm"))
-    for (_ <- 1 to iters) {
-      ranks = adj
-        .join(ranks, Seq("node"))
-        .select(col("outs"), expr("rank_ppm div deg").as("contrib"))
-        .select(explode(col("outs")).as("v"), col("contrib"))
-        .groupBy(col("v"))
-        .agg(sum(col("contrib")).as("s"))
-        .select(col("v").as("node"),
-          expr("150000 + (s * 17) div 20").as("rank_ppm"))
-    }
-    // domain-sized: applied to the topK-row TakeOrdered frame below
-    val w = Window.orderBy(col("rank_ppm").desc, col("node").asc)
-    val out = ranks
-      .orderBy(col("rank_ppm").desc, col("node").asc).limit(topK)
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("node"), col("rank_ppm"))
-      .orderBy(col("rank").asc)
-    out
-  }
+                    iters: Int = 3, topK: Int = 10): DataFrame =
+    pageRankTop(adjacencyOf(undirected), topK, iters)
 
   /** q227: PageRank run to the EXACT integer fixpoint — the unbounded-
     * iteration form of q115 (round-7 stretch item 8). The ppm/floor
@@ -388,286 +343,45 @@ object Graphs {
     * unroll a SUFFICIENT number of rounds (maxIters=64 here) knowing the
     * tail rounds are no-ops.
     *
-    * Scale shape: per round, the node-sized rank frame joins INTO the
-    * pinned, checkpointed edge list — broadcast while the measured node
-    * count fits ([[TrickleBroadcastRows]]), shuffle beyond — and the
-    * new ranks aggregate at a width derived from the node count
-    * ([[NodeRowsPerPartition]]). One action per [[FixpointBatch]]
-    * rounds: rounds chain lazily and the batch-edge fixpoint test
-    * (anti-join between the batch's last two frames) materializes the
-    * whole chain and decides convergence. AQE is off inside the
-    * kernel: every join is explicitly hinted on driver-measured counts
-    * and its stage-by-stage materialization cost ~35% of the loop
-    * (measured evolution at the 46-round sf0.1 fixpoint: 29.0 s
-    * committed block form → 25.4 s with the edge frame checkpointed →
-    * 21.3 s with broadcast ranks + fused per-round fixpoint).
+    * Scale shape: the [[PageRank]] kernel on the [[nodeLoop]] runner —
+    * per round the rank of every node rides to the tasks holding its
+    * adjacency row, each task pre-combines its contributions in a
+    * primitive map, and the combined sums take the damping step. The
+    * result is the topK panel of the final rank frame.
     *
-    * The fixpoint test always compares CONSECUTIVE rounds (the batch's
-    * last two frames), so a floor-arithmetic CYCLE (period > 1, which
-    * irregular graphs can enter instead of a fixpoint) simply never
-    * fires the early stop and the loop runs to maxIters — exactly the
-    * r_maxIters the unrolled oracle evaluates, so the two engines still
-    * agree bit-for-bit; and a fixpoint reached mid-batch is detected at
-    * the batch edge with the identical final frame. */
+    * The fixpoint test always compares CONSECUTIVE rounds, so a floor-
+    * arithmetic CYCLE (period > 1, which irregular graphs can enter
+    * instead of a fixpoint) simply never fires the early stop and the
+    * loop runs to maxIters — exactly the r_maxIters the unrolled oracle
+    * evaluates, so the two engines still agree bit-for-bit; and a
+    * fixpoint reached mid-batch is detected at the batch edge with the
+    * identical final frame. */
   def pageRankConvergedPpm(spark: SparkSession, dir: String,
       topK: Int = 10, maxIters: Int = 64): DataFrame =
-    pageRankConvergedFromAdj(
-      coPurchaseAdjacency(spark, dir)
-        .select(col("node"), col("deg"),
-          expr("transform(nbrs, x -> x.v)").as("outs")),
-      topK, maxIters)
+    pageRankTop(coPurchaseNeighbors(spark, dir), topK, maxIters)
 
   private[analytics] def pageRankConvergedPpmOf(undirected: DataFrame,
-      topK: Int, maxIters: Int): DataFrame = {
-    val directed = undirected.select(col("u"), col("v"))
-      .unionAll(undirected.select(col("v").as("u"), col("u").as("v")))
-      .repartition(fullWidth(undirected), col("u"))
-    pageRankConvergedFromAdj(
-      directed.groupBy(col("u"))
-        .agg(count(lit(1)).as("deg"), collect_list(col("v")).as("outs"))
-        .select(col("u").as("node"), col("deg"), col("outs")),
-      topK, maxIters)
+      topK: Int, maxIters: Int): DataFrame =
+    pageRankTop(adjacencyOf(undirected), topK, maxIters)
+
+  /** The (rank, node, rank_ppm) topK panel after at most `rounds`
+    * PageRank rounds over a plain adjacency plan (node, nbrs). */
+  private def pageRankTop(adj: DataFrame, topK: Int, rounds: Int): DataFrame = {
+    // domain-sized: applied to the topK-row TakeOrdered frame below
+    val w = Window.orderBy(col("rank_ppm").desc, col("node").asc)
+    nodeLoop(adj, rounds, PageRank).values
+      .select(col("node"), col("value").as("rank_ppm"))
+      .orderBy(col("rank_ppm").desc, col("node").asc).limit(topK)
+      .withColumn("rank", row_number().over(w))
+      .select(col("rank"), col("node"), col("rank_ppm"))
+      .orderBy(col("rank").asc)
   }
 
-  /** The q227 loop over a prebuilt out-adjacency plan (node, deg,
-    * outs: array<node>) — from the memoized [[coPurchaseAdjacency]] for
-    * the declared query, or built ad hoc from an edge list for tests. */
-  private def pageRankConvergedFromAdj(adjPlan: DataFrame,
-      topK: Int, maxIters: Int): DataFrame = {
-    val spark = adjPlan.sparkSession
-    import spark.implicits._
-    // Round-14 (verdict item 1): the round-13 kernel was DRIVER-PLANNING-
-    // bound — each of the 46 sf0.1 rounds constructed a fresh Dataset
-    // (join+explode+agg), ~56 ms of Catalyst analysis per construction,
-    // ~0.45 s of plan building vs ~0.5 s of execution per 8-round batch.
-    // The loop now runs on RAW RDDs with ONE explicit HashPartitioner:
-    // zero Catalyst work per round, the co-partitioned rank join is a
-    // narrow zip of cached blocks, and the only per-round cost left is
-    // pagerank's irreducible node-sized contribution shuffle
-    // (reduceByKey). Arithmetic is bit-identical to the Dataset form:
-    // rank div deg and (s·17) div 20 on non-negative longs are plain
-    // Java long division; the contribution sum is order-independent
-    // integer addition. Batching and the consecutive-pair fixpoint test
-    // are unchanged in shape (FixpointBatch rounds chain lazily, one
-    // action per batch); the test is a co-partitioned zipPartitions
-    // count instead of an anti-join. Session confs (AQE, shuffle width)
-    // are NOT touched anymore — the round-13 set/restore dance was
-    // unsafe under concurrent queries (verdict what's-wrong 6); the RDD
-    // loop's width is the explicit partitioner, invisible to SQL.
-    //
-    // Below [[GatherLoopMaxNodes]] MEASURED nodes the loop switches to a
-    // DRIVER-GATHER round: the rank vector rides to the tasks in the
-    // round closure, each task pre-combines its partition's contributions
-    // in a primitive map, and the driver merges the ≤ loopW node-sized
-    // partials — one narrow job per round, no shuffle stage at all.
-    // Measured at sf0.1 (20k nodes, 46 rounds): a shuffle STAGE boundary
-    // costs ~51 ms in this runtime even for a 20k-row round (16-stage
-    // micro-chain probe), so the shuffle-per-round form has a 2.4 s
-    // floor the gather form does not.
-    val stats = adjPlan.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("deg")), lit(0L)).as("e")).head()
-    val nNodes = stats.getLong(0)
-    if (nNodes <= GatherLoopMaxNodes)
-      pageRankConvergedGather(adjPlan, topK, maxIters)
-    else {
-      // Scale-adaptive loop width from the MEASURED directed-edge count
-      // (per-partition work is edge-sized — the adjacency arrays — not
-      // node-sized); same formula as round 13 (width sweep there: 32 wide
-      // was stage-latency-bound, 1 wide serialized ~110M row-ops, ~600k
-      // edge entries per task is one latency quantum of work). At 100 TB
-      // the formula yields thousands of partitions and every round stays
-      // the same co-partitioned form.
-      val nEdges = stats.getLong(1)
-      val sessW = fullWidth(adjPlan)
-      val loopW = math.max(1L, math.min(sessW.toLong,
-        nEdges / LoopEdgesPerPartition + 1L)).toInt
-      val part = new org.apache.spark.HashPartitioner(loopW)
-      // adjacency → (node, (deg, outs)) pairs, partitioned once, cached:
-      // every round's rank join is then a narrow co-partitioned zip
-      val adjRdd = adjPlan.select(col("node"), col("deg"), col("outs"))
-        .as[(Long, Long, Array[Long])].rdd
-        .map { case (n, d, o) => (n, (d, o)) }
-        .partitionBy(part)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        var ranks: org.apache.spark.rdd.RDD[(Long, Long)] =
-          adjRdd.mapValues(_ => 1000000L)
-        // Per round: a narrow co-partitioned zip joins ranks into the
-        // adjacency and PRE-COMBINES contributions in a primitive
-        // long->long map (graft.core.LongLongMap — reduceByKey's boxed
-        // map-side combine alone cost ~0.3 s/round here), so the round's
-        // irreducible shuffle carries one entry per (partition, node)
-        // instead of one per contribution. Long sums are order-
-        // independent; rank/deg on non-negative longs is `div`.
-        def step(r: org.apache.spark.rdd.RDD[(Long, Long)])
-            : org.apache.spark.rdd.RDD[(Long, Long)] =
-          adjRdd.zipPartitions(r, preservesPartitioning = false) { (ai, ri) =>
-            val rank = new graft.core.LongLongMap(1 << 12)
-            ri.foreach { case (n, v) => rank.update(n, v) }
-            val acc = new graft.core.LongLongMap(1 << 12)
-            ai.foreach { case (n, (deg, outs)) =>
-              val rv = rank.getOrElse(n, Long.MinValue)
-              if (rv != Long.MinValue) { // inner-join semantics
-                val contrib = rv / deg
-                var i = 0
-                while (i < outs.length) { acc.addTo(outs(i), contrib); i += 1 }
-              }
-            }
-            acc.iterator
-          }
-            .reduceByKey(part, _ + _)
-            .mapValues(s => 150000L + (s * 17L) / 20L)
-        var iter = 0
-        var converged = false
-        var live: org.apache.spark.rdd.RDD[(Long, Long)] = null
-        // Batched cadence unchanged from round 13: FixpointBatch rounds
-        // chain lazily, ONE action per batch (the consecutive-pair
-        // changed-count) materializes the whole chain — intermediate
-        // rounds are ShuffledRDDs whose map stages the scheduler shares,
-        // so nothing recomputes. Convergence stays a CONSECUTIVE
-        // comparison (a floor-arithmetic cycle never fires the early
-        // stop; a mid-batch fixpoint holds through the batch's no-op
-        // tail and is caught at the batch edge with identical ranks).
-        while (!converged && iter < maxIters) {
-          val nRounds = math.min(FixpointBatch, maxIters - iter)
-          var prev = ranks
-          var last = ranks
-          (1 to nRounds).foreach { _ => prev = last; last = step(last) }
-          iter += nRounds
-          last.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // exact fixpoint: no (node, rank_ppm) pair of the batch's last
-          // round differs from its predecessor — a narrow co-partitioned
-          // zip (both sides hash(node)-partitioned by `part`), no shuffle
-          val changed = last.zipPartitions(prev) { (a, b) =>
-            // boxed map: a Long-valued scala map would silently unbox an
-            // absent key's null to 0L and break the membership test
-            val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-            b.foreach { case (n, v) => m.put(n, v) }
-            var c = 0L
-            a.foreach { case (n, v) =>
-              val got = m.get(n)
-              if (got == null || got.longValue() != v) c += 1L
-            }
-            Iterator.single(c)
-          }.fold(0L)(_ + _)
-          converged = changed == 0L
-          if (live != null) live.unpersist(blocking = false)
-          live = last
-          ranks = last
-        }
-        // final ranks stay persisted for the lazy result frame below;
-        // released with the caller's next releaseScratch
-        Caches.trackRdd(spark, ranks)
-        // domain-sized: applied to the topK-row TakeOrdered frame below
-        val w = Window.orderBy(col("rank_ppm").desc, col("node").asc)
-        ranks.toDF("node", "rank_ppm")
-          .orderBy(col("rank_ppm").desc, col("node").asc).limit(topK)
-          .withColumn("rank", row_number().over(w))
-          .select(col("rank"), col("node"), col("rank_ppm"))
-          .orderBy(col("rank").asc)
-      } finally {
-        // the result frame reads only the FINAL ranks blocks — the
-        // pinned adjacency owes nothing once the loop exits
-        adjRdd.unpersist(blocking = false)
-      }
-    }
-  }
-
-  /** Driver-gather converged pagerank for graphs whose MEASURED node
-    * count fits driver memory (≤ [[GatherLoopMaxNodes]]): the adjacency
-    * stays distributed (cached, ≤ loopW partitions from the edge-count
-    * formula), the rank VECTOR lives on the driver as two flat long
-    * arrays (nodes sorted once; ranks positional). Per round: one narrow
-    * job — each task rebuilds the node→rank index from the closure-
-    * shipped arrays (a few ms), pre-combines its partition's
-    * contributions in a primitive map, returns one interleaved long[]
-    * partial — and the driver sum-merges ≤ loopW partials and applies
-    * the damping formula. Convergence is the exact array comparison.
-    * Identical arithmetic to the distributed loop (integer sums are
-    * order-independent; same div/floor ops), so the two paths are
-    * interchangeable — GraphsSpec pins their equivalence. */
-  private def pageRankConvergedGather(adjPlan: DataFrame,
-      topK: Int, maxIters: Int): DataFrame = {
-    val spark = adjPlan.sparkSession
-    import spark.implicits._
-    val adjRdd = adjPlan.select(col("node"), col("deg"), col("outs"))
-      .as[(Long, Long, Array[Long])].rdd
-    val nEdges = adjPlan
-      .agg(coalesce(sum(col("deg")), lit(0L))).head().getLong(0)
-    val loopW = math.max(1L, math.min(fullWidth(adjPlan).toLong,
-      nEdges / LoopEdgesPerPartition + 1L)).toInt
-    val adj = adjRdd.coalesce(loopW)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = adj.map(_._1).collect().sorted
-      var ranks = Array.fill(nodes.length)(1000000L)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIters) {
-        val ns = nodes; val rs = ranks
-        val partials = adj.mapPartitions { it =>
-          val idx = new graft.core.LongLongMap(math.max(16, ns.length * 2))
-          var j = 0
-          while (j < ns.length) {
-            // MinValue marks a node that dropped from the rank set (an
-            // asymmetric test graph can have rankless nodes; the
-            // symmetric co-purchase graph never does)
-            if (rs(j) != Long.MinValue) idx.update(ns(j), rs(j))
-            j += 1
-          }
-          val acc = new graft.core.LongLongMap(math.max(16, ns.length * 2))
-          it.foreach { case (n, deg, outs) =>
-            val rv = idx.getOrElse(n, Long.MinValue)
-            if (rv != Long.MinValue) { // inner-join semantics
-              val contrib = rv / deg
-              var i = 0
-              while (i < outs.length) { acc.addTo(outs(i), contrib); i += 1 }
-            }
-          }
-          val flat = new Array[Long](acc.size * 2)
-          var w = 0
-          acc.foreachEntry { (n, v) => flat(w) = n; flat(w + 1) = v; w += 2 }
-          Iterator.single(flat)
-        }.collect()
-        val sums = new graft.core.LongLongMap(math.max(16, nodes.length * 2))
-        partials.foreach { flat =>
-          var i = 0
-          while (i < flat.length) { sums.addTo(flat(i), flat(i + 1)); i += 2 }
-        }
-        val out = new Array[Long](nodes.length)
-        var changed = false
-        var j = 0
-        while (j < nodes.length) {
-          val s = sums.getOrElse(nodes(j), Long.MinValue)
-          out(j) = if (s == Long.MinValue) Long.MinValue
-                   else 150000L + (s * 17L) / 20L
-          if (out(j) != ranks(j)) changed = true
-          j += 1
-        }
-        converged = !changed
-        ranks = out
-        iter += 1
-      }
-      // topK panel on the driver — same total (rank_ppm DESC, node ASC)
-      // order and row_number semantics as the distributed tail
-      val top = nodes.indices
-        .filter(j => ranks(j) != Long.MinValue)
-        .map(j => (nodes(j), ranks(j)))
-        .sortBy { case (n, r) => (-r, n) }
-        .take(topK)
-        .zipWithIndex
-        .map { case ((n, r), i) => (i + 1, n, r) }
-      top.toDF("rank", "node", "rank_ppm").orderBy(col("rank").asc)
-    } finally {
-      adj.unpersist(blocking = false)
-    }
-  }
-
-  /** Node-count ceiling for the driver-gather fixpoint loops: below it
-    * the per-round state (two flat long arrays + one primitive map) is
-    * ≤ ~16 MB on the driver and in each round closure — cheaper than
-    * any shuffle stage; above it the kernels run their fully
-    * distributed co-partitioned RDD loops. A measured scalar, not an
+  /** Node-count ceiling for the driver-gather rounds of [[nodeLoop]]:
+    * below it the per-round state (one primitive map of ≤ this many
+    * entries) is ≤ ~16 MB on the driver and in each round closure —
+    * cheaper than any shuffle stage; above it the loop runs its fully
+    * distributed co-partitioned rounds. A measured scalar, not an
     * estimate (same discipline as [[TrickleBroadcastRows]]). A var only
     * so GraphsSpec can force the distributed path on small fixtures and
     * pin the two paths' bit-equivalence. */
@@ -681,61 +395,45 @@ object Graphs {
     * runs 9 rounds at sf0.01 and 38 at sf0.1 before emptying — a fixed
     * bound either lies or wastes rounds, convergence does neither.
     *
-    * Scale shape: INCREMENTAL degree maintenance — the edge list is
-    * symmetrized, repartitioned on src and checkpointed ONCE; every
-    * round is one job over a NODE-sized (node, degree) frame (see the
-    * impl notes in [[kCorePeelCensusOf]] for the measured evolution
-    * 31.6 s → 12.7 s at the 38-round sf0.1 cascade). The result frame
-    * is driver-built from ≤ maxRounds scalars — domain-sized by
-    * construction. */
+    * Scale shape: the incremental-degree [[peel]] kernel on the
+    * [[nodeLoop]] runner; n_removed is the runner's per-round census of
+    * active (peeled) nodes. The result frame is driver-built from
+    * ≤ maxRounds scalars — domain-sized by construction. */
   def kCorePeelCensus(spark: SparkSession, dir: String,
-      k: Int = 85, maxRounds: Int = 64): DataFrame = {
-    val (_, _, removed) = peelCore(
-      coPurchaseAdjacency(spark, dir)
-        .select(col("node"), expr("transform(nbrs, x -> x.v)").as("nbrs")),
-      k, maxRounds)
-    import spark.implicits._
-    removed.toDF("round", "n_removed").orderBy(col("round").asc)
-  }
-
-  /** Rows per partition for node-sized iterative frames: at sf0.1 the
-    * degree frame is 20k rows, at 100 TB it is billions — the width must
-    * come from the data, not the session. 4M longs-pairs ≈ 64 MB. */
-  private val NodeRowsPerPartition = 4000000L
-
-  /** Broadcast the removed trickle only while it provably fits: 4M ids
-    * ≈ 64 MB of longs — above that fall back to a shuffle join (the
-    * driver KNOWS the exact row count each round, so this is adaptive
-    * on a measured scalar, not an estimate). */
-  private val TrickleBroadcastRows = 4000000L
-
-  /** Rounds chained lazily behind one fixpoint action in the converged
-    * pagerank (see the loop note there). 8 cuts the 46-round sf0.1
-    * fixpoint to 6 scheduled actions; the worst case pays
-    * FixpointBatch−1 no-op rounds of node-sized compute past the true
-    * fixpoint, which is noise next to the per-action scheduling cost
-    * this exists to amortize. */
-  private val FixpointBatch = 8
-
-  /** Within a fixpoint batch, checkpoint every Nth round (plus the last
-    * two, which the convergence anti-join reads). Un-checkpointed rounds
-    * fuse into their successor's plan; the periodic checkpoint bounds
-    * plan depth and analysis cost. */
-  private val FixpointCkptEvery = 4
-
-  /** Directed-edge entries per partition for the iterative graph
-    * kernels' loop width (the adjacency arrays are the per-partition
-    * payload, so the width must follow the EDGE count, not the node
-    * count). ~600k entries ≈ one stage-latency quantum of explode+agg
-    * work per task (measured sweep in pageRankConvergedPpmOf). */
-  private val LoopEdgesPerPartition = 600000L
+      k: Int = 85, maxRounds: Int = 64): DataFrame =
+    peelCensus(coPurchaseNeighbors(spark, dir), k, maxRounds)
 
   private[analytics] def kCorePeelCensusOf(spark: SparkSession,
-      edges0: DataFrame, k: Int, maxRounds: Int): DataFrame = {
-    val (_, _, removed) = peelCore(adjacencyOf(edges0), k, maxRounds)
+      edges0: DataFrame, k: Int, maxRounds: Int): DataFrame =
+    peelCensus(adjacencyOf(edges0), k, maxRounds)
+
+  private def peelCensus(adj: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+    val spark = adj.sparkSession
     import spark.implicits._
-    removed.toDF("round", "n_removed").orderBy(col("round").asc)
+    nodeLoop(adj, maxRounds, peel(k)).census.zipWithIndex
+      .map { case (n, i) => (i + 1L, n) }
+      .toDF("round", "n_removed").orderBy(col("round").asc)
   }
+
+  /** Broadcast a node-sized frame only while it provably fits: 4M ids
+    * ≈ 64 MB of longs — above that fall back to a shuffle join (the
+    * driver KNOWS the exact row count, so this is adaptive on a
+    * measured scalar, not an estimate). */
+  private val TrickleBroadcastRows = 4000000L
+
+  /** Rounds chained lazily behind one action on the distributed path of
+    * [[nodeLoop]]. 8 cuts the 46-round sf0.1 pagerank fixpoint to 6
+    * scheduled actions; the worst case pays FixpointBatch−1 no-op rounds
+    * of node-sized compute past the true fixpoint, which is noise next
+    * to the per-action scheduling cost this exists to amortize. */
+  private val FixpointBatch = 8
+
+  /** Adjacency row entries per partition for [[nodeLoop]]'s loop width
+    * (the rows are the per-partition payload, so the width must follow
+    * the EDGE count, not the node count). ~600k entries ≈ one
+    * stage-latency quantum of relax work per task (round-13 width sweep:
+    * 32 wide was stage-latency-bound, 1 wide serialized ~110M row-ops). */
+  private val LoopEdgesPerPartition = 600000L
 
   /** Plain symmetric adjacency plan (node, nbrs: array<node>) from an
     * undirected (u, v) edge list — the ad-hoc build the generic `Of`
@@ -749,271 +447,291 @@ object Graphs {
       .agg(collect_list(col("dst")).as("nbrs"))
       .select(col("src").as("node"), col("nbrs"))
 
-  /** Shared incremental-degree peel loop (impl notes below) — takes the
-    * symmetric adjacency plan (node, nbrs) and returns the surviving-
-    * subgraph census scalars (n_nodes with d > 0, Σ d over d > 0) and the
-    * per-round removal census. Round-14: the loop state lives in RAW RDDs
-    * (verdict item 1 — the round-13 Dataset loop was driver-planning-
-    * bound), so the final degree frame is reduced to the two scalars its
-    * only consumer (q195's census) reads, and every block is released
-    * before returning. */
-  private def peelCore(adjPlan: DataFrame, k: Int,
-      maxRounds: Int): (Long, Long, Seq[(Long, Long)]) = {
-    val spark = adjPlan.sparkSession
-    // INCREMENTAL-DEGREE cascade (round-8 advice item 3). Measured
-    // evolution at the 38-round sf0.1 cascade, same box, back-to-back:
-    //  (1) per-round edge-list degree re-aggregation + eager checkpoint
-    //      + count: 31.6 s (the r8-committed form, 8× the oracle);
-    //  (2) lazily batching 4 rounds behind one checkpoint: 57.7 s —
-    //      WORSE: un-materialized frames carry no stats, so AQE planned
-    //      the anti-joins as full sort-merge shuffles;
-    //  (3) incremental NODE-sized degree frame, eager ckpt + count:
-    //      22.2 s — the degree re-aggregation is redundant by induction
-    //      (a survivor's degree changes only by edges shared with the
-    //      removed trickle), but two driver round-trips per round remain;
-    //  (4) lazy ckpt so the count is the round's ONLY action: 20.5 s —
-    //      the floor moved to AQE's per-stage replanning and ~160
-    //      near-empty 32-wide tasks per round;
-    //  (5) THIS form: 12.7 s warm. One fused union-aggregate job per
-    //      round, AQE off inside the kernel (every join is explicitly
-    //      hinted on driver-measured counts — there is nothing left for
-    //      AQE to decide, and its stage-by-stage materialization was
-    //      pure overhead here), and every node-sized stage runs at a
-    //      width derived from the NODE count (NodeRowsPerPartition)
-    //      instead of the session's edge-scale default.
-    //
-    // Per round, ONE action evaluates:
-    //   next = (σ(¬bad) deg)  ∪  (π_dst,-1 (sym ⋉ bad_src ▷ bad_dst))
-    //          groupBy node → sum(d)        [lazy localCheckpoint]
-    //   nBad = count(σ(0<d<k) next)
-    // The count materializes the checkpoint blocks (the checkpointed RDD
-    // sits in its lineage) AND returns the next census scalar; the two
-    // trickle broadcasts launch as parallel futures at prepare time.
-    //
-    // Census equivalence with the edge-list formulation is exact but has
-    // one subtlety: a node that loses ALL its edges in one round vanishes
-    // from an edge-derived degree aggregate (never counted as removed),
-    // so `bad` requires d > 0 — zero-degree rows stay behind, inert and
-    // invisible (they contribute no decrements: their edges' other
-    // endpoints were removed in the round that zeroed them, and removed
-    // endpoints are anti-filtered from the delta legs), exactly like an
-    // isolated node in the edge form.
-    import spark.implicits._
+  /** The memoized [[coPurchaseAdjacency]] as a plain adjacency plan
+    * (node, nbrs: array<node>), weights dropped. */
+  private def coPurchaseNeighbors(spark: SparkSession, dir: String): DataFrame =
+    coPurchaseAdjacency(spark, dir).select(col("node"), col("nbrs.v").as("nbrs"))
+
+  /** Value of a node the loop state does not hold: no round-0 value, or
+    * dropped by an advance. */
+  private val Absent = Long.MinValue
+
+  /** One iterative graph kernel over a per-node long state, as
+    * [[nodeLoop]] runs it. Each adjacency row is (node, row: long[]); the
+    * kernel states its round once, and both execution paths run it:
+    *  - `init(node, row, first)`: the round-0 value (Absent: not in the
+    *    state); `first` is the least node id, a single-source kernel's
+    *    source;
+    *  - `active(value)`: whether the node relaxes its row this round;
+    *    each round's count of active nodes is the runner's census;
+    *  - `relax(value, row, acc)`: push the node's contributions into a
+    *    primitive accumulator with the combine's own op (addTo, minTo);
+    *  - `combine`: merges two contributions to one node (sum or min);
+    *  - `advance(prev, combined)`: the next value from the previous one
+    *    and the combined contributions (either may be Absent; Absent
+    *    drops the node).
+    * Contract: a round in which no node is active is the identity —
+    * `advance(v, Absent) == v` for every inactive v — so a zero census is
+    * a fixpoint and ends the loop without running the round. */
+  private final case class Kernel(
+      init: (Long, Array[Long], Long) => Long,
+      active: Long => Boolean,
+      relax: (Long, Array[Long], LongLongMap) => Unit,
+      combine: (Long, Long) => Long,
+      advance: (Long, Long) => Long)
+
+  /** PageRank in ppm over (node, neighbors): every node starts at 10⁶,
+    * sends `rank div deg` (deg = size of its row) to each neighbor, and
+    * the summed contributions s take the damping step
+    * `150000 + (s × 17) div 20`. A node no contribution reaches drops
+    * (none does on a symmetric graph). */
+  private val PageRank = Kernel(
+    init = (_, _, _) => 1000000L,
+    active = _ => true,
+    relax = (rank, outs, acc) => {
+      val contrib = rank / outs.length
+      var i = 0
+      while (i < outs.length) { acc.addTo(outs(i), contrib); i += 1 }
+    },
+    combine = _ + _,
+    advance = (_, s) => if (s == Absent) Absent else 150000L + (s * 17L) / 20L)
+
+  /** Incremental-degree k-core peel over (node, neighbors): the state is
+    * each node's live degree, a node with 0 < d < k is peeled (active),
+    * and each peeled node sends −1 to every neighbor. A survivor keeps
+    * d plus its decrements; a peeled node keeps only the decrements it
+    * received — Absent (gone) or a strictly negative phantom that no
+    * `d > 0` guard counts.
+    *
+    * Census equivalence with the edge-list formulation is exact but has
+    * one subtlety: a node that loses ALL its edges in one round vanishes
+    * from an edge-derived degree aggregate (never counted as removed),
+    * so `active` requires d > 0 — zero-degree rows stay behind, inert and
+    * invisible, exactly like an isolated node in the edge form. The
+    * degree re-aggregation per round is redundant by induction: a
+    * survivor's degree changes only by edges shared with the peeled
+    * trickle. */
+  private def peel(k: Int): Kernel = {
     def isBad(d: Long): Boolean = d > 0 && d < k
-    val removed = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-    // Round-14 (verdict item 1): the loop runs on RAW RDDs with one
-    // explicit HashPartitioner — zero Catalyst analysis per round (the
-    // round-13 Dataset loop spent ~half its time constructing plans).
-    // Semantics are the round-13 form exactly, per round:
-    //   bad   = σ(0 < d < k) deg              (narrow filter)
-    //   decr  = Σ_{bad u} (−1 per nbr of u)   (amortized shuffle: the
-    //           only per-round shuffle carries DELTA entries, ≤ 2|E|
-    //           across the WHOLE cascade since each node is bad once —
-    //           the round-13 union+groupBy re-shuffled survivors too)
-    //   next  = fullOuterJoin(σ(¬bad) deg, decr) summing the two legs
-    //           (narrow: both sides hash(node)-partitioned)
-    // fullOuterJoin ≡ the old unionAll+groupBy-sum: survivor-only rows
-    // keep d, hit rows get d + Σ(−1), decr-only rows materialize as the
-    // same strictly-negative phantom rows the d > 0 guards discount (a
-    // removed node's deltas can target nodes removed in the same or an
-    // earlier round; they can never re-enter isBad).
-    //
-    // Census equivalence with the edge-list formulation is exact but has
-    // one subtlety: a node that loses ALL its edges in one round vanishes
-    // from an edge-derived degree aggregate (never counted as removed),
-    // so `bad` requires d > 0 — zero-degree rows stay behind, inert and
-    // invisible, exactly like an isolated node in the edge form.
-    val stats = adjPlan.agg(count(lit(1)).as("n"),
-      coalesce(sum(size(col("nbrs"))), lit(0L)).as("e")).head()
-    val nNodes0 = stats.getLong(0)
-    val nEdges = stats.getLong(1)
-    // Below GatherLoopMaxNodes MEASURED nodes, the degree map lives on
-    // the driver and each round is ONE narrow job over the cached
-    // adjacency (bad set ships in the round closure; tasks return
-    // interleaved decrement partials) — no shuffle stage per round.
-    // Same rationale and threshold as the pagerank gather loop.
-    if (nNodes0 <= GatherLoopMaxNodes)
-      return peelCoreGather(adjPlan, k, maxRounds, nEdges)
-    // Width from the TOTAL edge count against the cascade's AMORTIZED
-    // work (≤ 2|E| delta entries over the whole cascade): ~4M entries ≈
-    // 64 MB per partition — width 1 at sf0.1 (one narrow single-task
-    // chain per batch), dozens of partitions at 100 TB where rounds
-    // become the same co-partitioned form, wider.
+    Kernel(
+      init = (_, nbrs, _) => nbrs.length.toLong,
+      active = isBad,
+      relax = (_, nbrs, acc) => {
+        var i = 0
+        while (i < nbrs.length) { acc.addTo(nbrs(i), -1L); i += 1 }
+      },
+      combine = _ + _,
+      advance = (d, decr) =>
+        if (d == Absent || isBad(d)) decr
+        else if (decr == Absent) d
+        else d + decr)
+  }
+
+  /** Single-source Bellman-Ford over (node, [v0, c0, v1, c1, …]): the
+    * least node id starts at 0, every reached node relaxes d + c to each
+    * neighbor, and a node keeps the min of its distance and its
+    * candidates. Distances only decrease, so a converged round is the
+    * identity. */
+  private val CheapestPath = Kernel(
+    init = (n, _, first) => if (n == first) 0L else Absent,
+    active = _ => true,
+    relax = (d, vc, acc) => {
+      var i = 0
+      while (i < vc.length) { acc.minTo(vc(i), d + vc(i + 1)); i += 2 }
+    },
+    combine = math.min,
+    advance = (d, cand) =>
+      if (d == Absent) cand else if (cand == Absent) d else math.min(d, cand))
+
+  /** A [[nodeLoop]] result: the count of active nodes in each round run
+    * (the census), and the final per-node state as a (node, value)
+    * frame. */
+  private final case class Fixpoint(census: Seq[Long], values: DataFrame)
+
+  /** The one runner of the iterative graph kernels (q115, q195, q227,
+    * q228, q233): runs `k` over the adjacency plan (node, row:
+    * array<bigint>) until a round changes no node's value, or for
+    * `maxRounds` rounds.
+    *
+    * One stats job measures the nodes, the row entries (the loop width:
+    * [[LoopEdgesPerPartition]] per partition, at most the session's
+    * shuffle width) and the least node id. Then:
+    *  - ≤ [[GatherLoopMaxNodes]] nodes: DRIVER-GATHER rounds. The state
+    *    lives on the driver; the adjacency stays distributed and cached.
+    *    Per round, the active nodes' values ride to the tasks in the
+    *    round closure, each task pre-combines its contributions in a
+    *    primitive map and returns them as one interleaved long[], and the
+    *    driver merges the ≤ loopW partials and advances every node — one
+    *    narrow job per round, no shuffle stage. (The first round's tasks
+    *    also evaluate `init` and return it: no separate seeding job.)
+    *    Measured at sf0.1 (20k nodes, 46 rounds): a shuffle STAGE costs
+    *    ~51 ms in this runtime even for a 20k-row round, so a shuffle per
+    *    round has a 2.4 s floor this form does not.
+    *  - above it: DISTRIBUTED rounds on raw RDDs with ONE explicit
+    *    HashPartitioner — zero Catalyst work per round (the round-13
+    *    Dataset loops were driver-planning-bound). The adjacency and the
+    *    state are co-partitioned by node; a round is a narrow zip that
+    *    relaxes into a primitive pre-combine (reduceByKey's boxed map-side
+    *    combine cost ~0.3 s/round at sf0.1), the round's one shuffle of
+    *    one entry per (partition, node), and a narrow zip that merges and
+    *    advances. [[FixpointBatch]] rounds chain lazily behind ONE action,
+    *    which returns every round's census and the changed count of the
+    *    batch's last two frames; a zero census or a zero change ends the
+    *    loop (rounds past it are no-ops — overshoot is compute, never
+    *    semantics). The final state stays persisted for the lazy result
+    *    frame and is released with the caller's next releaseScratch.
+    * Both paths run the same kernel functions; every combine is
+    * order-independent long arithmetic, so they are bit-identical
+    * (GraphsSpec pins it). No session conf is read or set. */
+  private def nodeLoop(adjPlan: DataFrame, maxRounds: Int, k: Kernel): Fixpoint = {
+    require(maxRounds > 0, s"maxRounds must be positive, got $maxRounds")
+    val spark = adjPlan.sparkSession
+    import spark.implicits._
+    val adjDf = adjPlan.toDF("node", "row")
+    val stats = adjDf.agg(count(lit(1)), coalesce(sum(size(col("row"))), lit(0L)),
+      coalesce(min(col("node")), lit(0L))).head()
+    val (nNodes, nEntries, first) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
     val loopW = math.max(1L, math.min(fullWidth(adjPlan).toLong,
-      nEdges / NodeRowsPerPartition + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(loopW)
+      nEntries / LoopEdgesPerPartition + 1L)).toInt
+    val rows = adjDf.as[(Long, Array[Long])].rdd
     val mdisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val adjRdd = adjPlan.select(col("node"), col("nbrs"))
-      .as[(Long, Array[Long])].rdd
-      .partitionBy(part)
-      .persist(mdisk)
-    try {
-      var deg: org.apache.spark.rdd.RDD[(Long, Long)] =
-        adjRdd.mapValues(_.length.toLong)
-      def stepOnce(d0: org.apache.spark.rdd.RDD[(Long, Long)])
-          : org.apache.spark.rdd.RDD[(Long, Long)] = {
-        // decrement pass: primitive pre-combine of the -1 deltas (same
-        // LongLongMap rationale as the pagerank step)
-        val decr = adjRdd.zipPartitions(d0, preservesPartitioning = false) {
-          (ai, di) =>
-            val bad = new graft.core.LongLongMap(1 << 10)
-            di.foreach { case (n, d) => if (isBad(d)) bad.update(n, 1L) }
-            val acc = new graft.core.LongLongMap(1 << 10)
-            ai.foreach { case (n, nbrs) =>
-              if (bad.contains(n)) {
-                var i = 0
-                while (i < nbrs.length) { acc.addTo(nbrs(i), -1L); i += 1 }
-              }
+    val census = scala.collection.mutable.ArrayBuffer.empty[Long]
+    if (nNodes <= GatherLoopMaxNodes) {
+      val adj = rows.coalesce(loopW).persist(mdisk)
+      try {
+        var state: LongLongMap = null // seeded by the first round's job
+        var shipped: Array[Long] = null // its active nodes' values
+        var done = false
+        while (!done && census.length < maxRounds) {
+          val ship = shipped
+          val partials = adj.mapPartitions { it =>
+            val idx = if (ship == null) null else LongLongMap.ofFlat(ship)
+            val seed = new LongLongMap()
+            val acc = new LongLongMap(if (ship == null) 1 << 12 else ship.length)
+            it.foreach { case (n, row) =>
+              val v =
+                if (idx != null) idx.getOrElse(n, Absent)
+                else { val v0 = k.init(n, row, first); if (v0 != Absent) seed.update(n, v0); v0 }
+              if (v != Absent && k.active(v)) k.relax(v, row, acc)
+            }
+            Iterator.single((seed.toFlat(), acc.toFlat()))
+          }.collect()
+          if (state == null) {
+            state = new LongLongMap(1 << 12)
+            partials.foreach(p => mergeFlat(state, p._1, (_, v) => v))
+            shipped = state.toFlat(k.active)
+          }
+          // a zero census is a fixpoint (the Kernel contract); only the
+          // first round, which seeds the state, can meet one here
+          if (shipped.isEmpty) done = true
+          else {
+            val comb = new LongLongMap(math.max(16, state.size * 2))
+            partials.foreach(p => mergeFlat(comb, p._2, k.combine))
+            val (next, changed) = advanceAll(k, state, comb)
+            census += shipped.length / 2
+            done = changed == 0L
+            state = next
+            shipped = state.toFlat(k.active)
+            done ||= shipped.isEmpty
+          }
+        }
+        Fixpoint(census.toList, spark.sparkContext.parallelize(Seq(state.toFlat()), 1)
+          .flatMap(_.grouped(2).map(e => (e(0), e(1)))).toDF("node", "value"))
+      } finally {
+        adj.unpersist(blocking = false)
+      }
+    } else {
+      val part = new org.apache.spark.HashPartitioner(loopW)
+      val adj = rows.partitionBy(part).persist(mdisk)
+      try {
+        def round(s: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+          val pushed = adj.zipPartitions(s) { (ai, si) =>
+            val idx = mapOf(si, k.active)
+            val acc = new LongLongMap(1 << 12)
+            ai.foreach { case (n, row) =>
+              val v = idx.getOrElse(n, Absent)
+              if (v != Absent) k.relax(v, row, acc)
             }
             acc.iterator
-        }.reduceByKey(part, _ + _)
-        // merge survivors with decrements: both sides hash(node)-
-        // partitioned by `part`, keys unique per side, so a narrow zip
-        // with an additive merge IS the old fullOuterJoin-sum (survivor-
-        // only keys keep d, decr-only keys surface as the strictly-
-        // negative phantom rows the d > 0 guards discount)
-        d0.filter { case (_, d) => !isBad(d) }
-          .zipPartitions(decr, preservesPartitioning = true) { (si, di) =>
-            val m = new graft.core.LongLongMap(1 << 12)
-            si.foreach { case (n, d) => m.addTo(n, d) }
-            di.foreach { case (n, dd) => m.addTo(n, dd) }
-            m.iterator
+          }.partitionBy(part)
+          s.zipPartitions(pushed, preservesPartitioning = true) { (si, pi) =>
+            val comb = new LongLongMap(1 << 12)
+            pi.foreach { case (n, x) => comb.merge(n, x, k.combine) }
+            advanceAll(k, mapOf(si), comb)._1.iterator
           }
-      }
-      // BATCHED cadence unchanged from round 13: FixpointBatch rounds
-      // chain lazily; ONE action per batch — the collected per-round
-      // census counts — materializes the whole chain (every round ends
-      // in a ShuffledRDD whose map stage the scheduler shares between
-      // its census reader and the next round, and each chain frame is
-      // persisted for the batch so narrow segments do not recompute).
-      // Rounds past the cascade's true end are no-ops (empty bad ⇒
-      // empty deltas ⇒ deg unchanged), their censuses read 0 and are
-      // never recorded — overshoot is compute, never semantics.
-      var round = 0
-      var live = true
-      while (live && round < maxRounds) {
-        val nRounds = math.min(FixpointBatch, maxRounds - round)
-        val chain = scala.collection.mutable
-          .ArrayBuffer[org.apache.spark.rdd.RDD[(Long, Long)]](deg)
-        (1 to nRounds).foreach { _ =>
-          chain += stepOnce(chain.last).persist(mdisk)
         }
-        // census c_j = |isBad(deg_j)| BEFORE round j+1 peels; one action
-        // returns c_0..c_{nRounds-1} and materializes the chain (the
-        // union includes the carry-over last frame so its blocks are
-        // populated before its predecessors are freed)
-        val censuses = spark.sparkContext.union(
-          chain.zipWithIndex.map { case (d, j) =>
-            d.mapPartitions(it =>
-              Iterator.single((j, it.count { case (_, dd) => isBad(dd) }.toLong)))
-              : org.apache.spark.rdd.RDD[(Int, Long)]
-          }.toSeq)
-          .reduceByKey(_ + _).collect().toMap
-        var j = 0
-        while (live && j < nRounds) {
-          val b = censuses(j)
-          if (b > 0L) { round += 1; removed += ((round.toLong, b)) }
-          else live = false
-          j += 1
+        var state: RDD[(Long, Long)] = adj.mapPartitions(_.flatMap { case (n, row) =>
+          val v = k.init(n, row, first)
+          if (v == Absent) None else Some((n, v))
+        }, preservesPartitioning = true)
+        var done = false
+        while (!done && census.length < maxRounds) {
+          val nRounds = math.min(FixpointBatch, maxRounds - census.length)
+          val chain = scala.collection.mutable.ArrayBuffer(state)
+          (1 to nRounds).foreach(_ => chain += round(chain.last).persist(mdisk))
+          // one action: (j, census of round j+1's input) for every round,
+          // and (nRounds, changed count of the last two frames)
+          val counts = new Array[Long](nRounds + 1)
+          spark.sparkContext.union(chain.init.zipWithIndex.map { case (s, j) =>
+            s.mapPartitions(it => Iterator.single((j, it.count(e => k.active(e._2)).toLong)))
+          }.toSeq :+ chain(nRounds - 1).zipPartitions(chain(nRounds)) { (a, b) =>
+            Iterator.single((nRounds, diffCount(mapOf(a), mapOf(b))))
+          }).collect().foreach { case (j, c) => counts(j) += c }
+          var j = 0
+          while (!done && j < nRounds) {
+            if (counts(j) == 0L) done = true else census += counts(j)
+            j += 1
+          }
+          done ||= counts(nRounds) == 0L
+          chain.init.foreach(_.unpersist(blocking = false))
+          state = chain.last
         }
-        chain.dropRight(1).foreach(_.unpersist(blocking = false))
-        deg = chain.last
+        Caches.trackRdd(spark, state)
+        Fixpoint(census.toList, state.toDF("node", "value"))
+      } finally {
+        // the result frame reads only the FINAL state's blocks — the
+        // pinned adjacency owes nothing once the loop exits
+        adj.unpersist(blocking = false)
       }
-      // surviving-subgraph scalars for q195's census (d > 0 is exactly
-      // the surviving subgraph — real rows never go negative, phantom
-      // rows never go positive); one narrow pass over the final blocks
-      val (nNodes, sumD) = deg.mapPartitions { it =>
-        var n = 0L; var s = 0L
-        it.foreach { case (_, d) => if (d > 0) { n += 1; s += d } }
-        Iterator.single((n, s))
-      }.fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-      deg.unpersist(blocking = false)
-      (nNodes, sumD, removed.toList)
-    } finally {
-      adjRdd.unpersist(blocking = false)
     }
   }
 
-  /** Driver-gather peel for graphs whose MEASURED node count fits driver
-    * memory (≤ [[GatherLoopMaxNodes]]): the degree map lives on the
-    * driver; the adjacency stays distributed and cached. Per round: the
-    * bad set (0 < d < k) comes from one scan of the driver map, ships in
-    * the round closure, each task pre-combines its partition's −1 deltas
-    * in a primitive map, and the driver merges the ≤ loopW partials —
-    * removing this round's bad nodes first (the survivor filter) and
-    * then summing deltas, so decrement-only keys surface as the same
-    * strictly-negative phantom entries the distributed form carries.
-    * Census semantics identical: one (round, n_bad) row per non-empty
-    * round, stop at the first empty one. */
-  private def peelCoreGather(adjPlan: DataFrame, k: Int, maxRounds: Int,
-      nEdges: Long): (Long, Long, Seq[(Long, Long)]) = {
-    val spark = adjPlan.sparkSession
-    import spark.implicits._
-    val loopW = math.max(1L, math.min(fullWidth(adjPlan).toLong,
-      nEdges / NodeRowsPerPartition + 1L)).toInt
-    val adj = adjPlan.select(col("node"), col("nbrs"))
-      .as[(Long, Array[Long])].rdd
-      .coalesce(loopW)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var deg = new graft.core.LongLongMap(1 << 12)
-      adj.mapPartitions { it =>
-        val m = new graft.core.LongLongMap(1 << 12)
-        it.foreach { case (n, nbrs) => m.update(n, nbrs.length.toLong) }
-        val flat = new Array[Long](m.size * 2)
-        var w = 0
-        m.foreachEntry { (n, d) => flat(w) = n; flat(w + 1) = d; w += 2 }
-        Iterator.single(flat)
-      }.collect().foreach { flat =>
-        var i = 0
-        while (i < flat.length) { deg.update(flat(i), flat(i + 1)); i += 2 }
-      }
-      val removed = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-      var round = 0
-      var live = true
-      while (live && round < maxRounds) {
-        val badBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        deg.foreachEntry { (n, d) => if (d > 0 && d < k) badBuf += n }
-        if (badBuf.isEmpty) live = false
-        else {
-          round += 1
-          removed += ((round.toLong, badBuf.length.toLong))
-          val bad = badBuf.toArray
-          val partials = adj.mapPartitions { it =>
-            val bs = new graft.core.LongLongMap(math.max(16, bad.length * 2))
-            var j = 0
-            while (j < bad.length) { bs.update(bad(j), 1L); j += 1 }
-            val acc = new graft.core.LongLongMap(1 << 10)
-            it.foreach { case (n, nbrs) =>
-              if (bs.contains(n)) {
-                var i = 0
-                while (i < nbrs.length) { acc.addTo(nbrs(i), -1L); i += 1 }
-              }
-            }
-            val flat = new Array[Long](acc.size * 2)
-            var w = 0
-            acc.foreachEntry { (n, v) => flat(w) = n; flat(w + 1) = v; w += 2 }
-            Iterator.single(flat)
-          }.collect()
-          // survivor filter (drop this round's bad rows), then deltas
-          val bs = new graft.core.LongLongMap(math.max(16, bad.length * 2))
-          bad.foreach(n => bs.update(n, 1L))
-          val next = new graft.core.LongLongMap(math.max(16, deg.size * 2))
-          deg.foreachEntry { (n, d) => if (!bs.contains(n)) next.update(n, d) }
-          partials.foreach { flat =>
-            var i = 0
-            while (i < flat.length) { next.addTo(flat(i), flat(i + 1)); i += 2 }
-          }
-          deg = next
-        }
-      }
-      var nNodes = 0L
-      var sumD = 0L
-      deg.foreachEntry { (_, d) => if (d > 0) { nNodes += 1; sumD += d } }
-      (nNodes, sumD, removed.toList)
-    } finally {
-      adj.unpersist(blocking = false)
+  /** (node, value) pairs whose value passes `keep`, as a primitive map. */
+  private def mapOf(it: Iterator[(Long, Long)],
+      keep: Long => Boolean = _ => true): LongLongMap = {
+    val m = new LongLongMap(1 << 12)
+    it.foreach { case (n, v) => if (keep(v)) m.update(n, v) }
+    m
+  }
+
+  /** Merge interleaved [n0, v0, n1, v1, …] entries into `m` with `f`. */
+  private def mergeFlat(m: LongLongMap, flat: Array[Long], f: (Long, Long) => Long): Unit = {
+    var i = 0
+    while (i < flat.length) { m.merge(flat(i), flat(i + 1), f); i += 2 }
+  }
+
+  /** The next state — `k.advance` over every node of `prev` or `comb` —
+    * and the count of nodes it changes (`diffCount(prev, next)`). */
+  private def advanceAll(k: Kernel, prev: LongLongMap,
+      comb: LongLongMap): (LongLongMap, Long) = {
+    val next = new LongLongMap(math.max(16, prev.size * 2))
+    var changed = 0L
+    def put(n: Long, was: Long, v: Long): Unit = {
+      if (v != was) changed += 1L
+      if (v != Absent) next.update(n, v)
     }
+    prev.foreachEntry((n, v) => put(n, v, k.advance(v, comb.getOrElse(n, Absent))))
+    comb.foreachEntry((n, c) => if (!prev.contains(n)) put(n, Absent, k.advance(Absent, c)))
+    (next, changed)
+  }
+
+  /** Nodes whose value differs between `a` and `b`, a node held by only
+    * one of them included. */
+  private def diffCount(a: LongLongMap, b: LongLongMap): Long = {
+    var c = 0L
+    a.foreachEntry((n, v) => if (b.getOrElse(n, Absent) != v) c += 1L)
+    b.foreachEntry((n, _) => if (!a.contains(n)) c += 1L)
+    c
   }
 
   /** q229: market-basket ASSOCIATION RULES over the co-purchase scaffold —
@@ -1066,228 +784,49 @@ object Graphs {
   /** q233: WEIGHTED single-source cheapest-path census (distributed
     * Bellman-Ford) — the graph family's missing metric kernel: q109's BFS
     * counts hops, this relaxes integer COSTS (cost = 10⁶ div w, so
-    * frequently-co-purchased parts are "close"). Per relaxation round:
-    * one keyed join of the frontier against the edge list + a min
-    * aggregation — the canonical distributed Bellman-Ford step. Distances
-    * only decrease, so the fixpoint early-exit is consistent with ANY
-    * oracle unroll count ≥ the convergence round (3-4 on this graph,
-    * 8 unrolled): a converged round is the identity.
+    * frequently-co-purchased parts are "close"). Distances only decrease,
+    * so the fixpoint early-exit is consistent with ANY oracle unroll count
+    * ≥ the convergence round (3-4 on this graph, 8 unrolled): a converged
+    * round is the identity.
     *
     * Output is the distance census (dist_ppm, n_nodes) — domain-sized
     * (distinct path costs), never per-node.
     *
-    * Scale shape: the edge list is scratch-pinned at full shuffle width
-    * on the join key; per-round frames are node-sized and checkpointed
-    * eagerly (the round references `dist` twice: relax + union). The
-    * driver holds only the source id and the convergence flag. */
+    * Scale shape: the [[CheapestPath]] kernel on the [[nodeLoop]] runner
+    * over the costed adjacency, each row flattened to one interleaved
+    * long[] [v0, c0, v1, c1, …] so the one-time Dataset→RDD conversion
+    * moves primitive arrays, not per-edge tuple objects; the census is
+    * one aggregation of the final distance frame. The source is the
+    * least node id. */
   def cheapestPathCensus(spark: SparkSession, dir: String,
       maxRounds: Int = 8): DataFrame =
-    cheapestPathFromAdj(
-      coPurchaseAdjacency(spark, dir)
-        .select(col("node"), expr(
-          "transform(nbrs, x -> struct(x.v AS v, 1000000 div x.w AS c))")
-          .as("outs")),
+    cheapestPathFrom(
+      coPurchaseAdjacency(spark, dir).select(col("node"),
+        expr("flatten(transform(nbrs, x -> array(x.v, 1000000 div x.w)))")),
       maxRounds)
 
   private[analytics] def cheapestPathCensusOf(pairs: DataFrame,
-      maxRounds: Int): DataFrame =
-    cheapestPathFromAdj(
-      pairs.select(col("u").as("node"),
-          struct(col("v"), expr("1000000 div w").as("c")).as("nb"))
-        .unionAll(pairs.select(col("v").as("node"),
-          struct(col("u").as("v"), expr("1000000 div w").as("c")).as("nb")))
+      maxRounds: Int): DataFrame = {
+    val c = expr("1000000 div w")
+    cheapestPathFrom(
+      pairs.select(col("u").as("node"), array(col("v"), c).as("vc"))
+        .unionAll(pairs.select(col("v").as("node"), array(col("u"), c).as("vc")))
         .repartition(fullWidth(pairs), col("node"))
         .groupBy(col("node"))
-        .agg(collect_list(col("nb")).as("outs")),
+        .agg(flatten(collect_list(col("vc")))),
       maxRounds)
-
-  /** The q233 Bellman-Ford loop over a prebuilt costed out-adjacency plan
-    * (node, outs: array<struct<v, c>>). Same round-13 kernel shape as the
-    * converged pagerank: loop-width adjacency checkpoint (width from the
-    * measured edge count), co-partitioned SHUFFLE_HASH joins (the dist
-    * frame lands hash(node)-partitioned from each round's aggregation),
-    * rounds batched lazily behind ONE fixpoint anti-join action per
-    * [[FixpointBatch]]. Rounds past the fixpoint re-derive the identical
-    * dist map (relaxation is monotone and already stable), so batch
-    * overshoot is compute, never semantics. */
-  private def cheapestPathFromAdj(adjPlan: DataFrame,
-      maxRounds: Int): DataFrame = {
-    val spark = adjPlan.sparkSession
-    import spark.implicits._
-    // Round-14 (verdict item 1): RDD relaxation loop — same shape as the
-    // converged pagerank (explicit HashPartitioner, zero Catalyst per
-    // round, batched rounds behind one action, consecutive-pair fixpoint
-    // via a narrow zipPartitions count). Arithmetic unchanged: d + c on
-    // non-negative longs, min() is order-independent, so the dist map is
-    // bit-identical to the round-13 Dataset form.
-    val stats = adjPlan.agg(min(col("node")).as("src"),
-      coalesce(sum(size(col("outs"))), lit(0L)).as("e"),
-      count(lit(1)).as("n")).head()
-    val src = stats.getLong(0)
-    val nEdges = stats.getLong(1)
-    val nNodes = stats.getLong(2)
-    // Below GatherLoopMaxNodes MEASURED nodes the dist map lives on the
-    // driver and each relaxation round is ONE narrow job (same rationale
-    // and threshold as the pagerank gather loop).
-    if (nNodes <= GatherLoopMaxNodes)
-      return cheapestPathGather(adjPlan, maxRounds, src, nEdges)
-    // per-round work re-explodes every reached node's out-list, so the
-    // width follows the PER-ROUND edge count like the pagerank loop
-    val loopW = math.max(1L, math.min(fullWidth(adjPlan).toLong,
-      nEdges / LoopEdgesPerPartition + 1L)).toInt
-    val part = new org.apache.spark.HashPartitioner(loopW)
-    val mdisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val adjRdd = adjPlan.select(col("node"), col("outs"))
-      .as[(Long, Array[(Long, Long)])].rdd
-      .partitionBy(part)
-      .persist(mdisk)
-    try {
-      var dist: org.apache.spark.rdd.RDD[(Long, Long)] = spark.sparkContext
-        .parallelize(Seq((src, 0L)), 1)
-        .partitionBy(part)
-      // Same primitive pre-combine shape as the pagerank step: the zip
-      // seeds the accumulator with d0's own entries (the old unionAll
-      // leg) and min-combines every relaxed candidate; min is order-
-      // independent, so the per-partition pre-min plus the shuffle-side
-      // min reduce is exactly the old global min.
-      def relax(d0: org.apache.spark.rdd.RDD[(Long, Long)])
-          : org.apache.spark.rdd.RDD[(Long, Long)] =
-        adjRdd.zipPartitions(d0, preservesPartitioning = false) { (ai, di) =>
-          val dist = new graft.core.LongLongMap(1 << 12)
-          di.foreach { case (n, d) => dist.update(n, d) }
-          val acc = new graft.core.LongLongMap(1 << 12)
-          dist.foreachEntry((n, d) => acc.minTo(n, d))
-          ai.foreach { case (n, outs) =>
-            val d = dist.getOrElse(n, Long.MinValue)
-            if (d != Long.MinValue) {
-              var i = 0
-              while (i < outs.length) {
-                val nb = outs(i); acc.minTo(nb._1, d + nb._2); i += 1
-              }
-            }
-          }
-          acc.iterator
-        }
-          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      var round = 0
-      var converged = false
-      var live: org.apache.spark.rdd.RDD[(Long, Long)] = null
-      while (!converged && round < maxRounds) {
-        val nRounds = math.min(FixpointBatch, maxRounds - round)
-        var prev = dist
-        var last = dist
-        (1 to nRounds).foreach { _ => prev = last; last = relax(last) }
-        round += nRounds
-        last.persist(mdisk)
-        // exact fixpoint: no (node, d) pair of the batch's last round
-        // differs from its predecessor — narrow co-partitioned zip
-        val changed = last.zipPartitions(prev) { (a, b) =>
-          // boxed map: a Long-valued scala map would silently unbox an
-          // absent key's null to 0L and break the membership test
-          val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-          b.foreach { case (n, v) => m.put(n, v) }
-          var c = 0L
-          a.foreach { case (n, v) =>
-            val got = m.get(n)
-            if (got == null || got.longValue() != v) c += 1L
-          }
-          Iterator.single(c)
-        }.fold(0L)(_ + _)
-        converged = changed == 0L
-        if (live != null) live.unpersist(blocking = false)
-        live = last
-        dist = last
-      }
-      Caches.trackRdd(spark, dist)
-      dist.toDF("node", "d")
-        .groupBy(col("d").as("dist_ppm"))
-        .agg(count(lit(1)).as("n_nodes"))
-        .select(col("dist_ppm").cast("long").as("dist_ppm"),
-          col("n_nodes").cast("long").as("n_nodes"))
-        .orderBy(col("dist_ppm").asc)
-    } finally {
-      adjRdd.unpersist(blocking = false)
-    }
   }
 
-  /** Driver-gather Bellman-Ford for graphs whose MEASURED node count
-    * fits driver memory (≤ [[GatherLoopMaxNodes]]): the dist map lives
-    * on the driver, the costed adjacency stays distributed and cached
-    * (projected to one INTERLEAVED long[] per node — [v0,c0,v1,c1,…] —
-    * so the one-time Dataset→RDD conversion moves primitive arrays, not
-    * per-edge tuple objects). Per round: the dist map ships in the round
-    * closure, tasks min-combine their partition's relaxation candidates
-    * in a primitive map, the driver min-merges the ≤ loopW partials into
-    * the dist map (the old unionAll leg is the map itself). min() is
-    * order-independent, so the dist map is bit-identical to the
-    * distributed form's. */
-  private def cheapestPathGather(adjPlan: DataFrame, maxRounds: Int,
-      src: Long, nEdges: Long): DataFrame = {
-    val spark = adjPlan.sparkSession
-    import spark.implicits._
-    val loopW = math.max(1L, math.min(fullWidth(adjPlan).toLong,
-      nEdges / LoopEdgesPerPartition + 1L)).toInt
-    val adj = adjPlan.select(col("node"),
-        expr("flatten(transform(outs, x -> array(x.v, x.c)))").as("flat"))
-      .as[(Long, Array[Long])].rdd
-      .coalesce(loopW)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dist = new graft.core.LongLongMap(1 << 10)
-      dist.update(src, 0L)
-      var round = 0
-      var converged = false
-      while (!converged && round < maxRounds) {
-        val flatDist = new Array[Long](dist.size * 2)
-        var w = 0
-        dist.foreachEntry { (n, d) => flatDist(w) = n; flatDist(w + 1) = d; w += 2 }
-        val partials = adj.mapPartitions { it =>
-          val idx = new graft.core.LongLongMap(math.max(16, flatDist.length))
-          var j = 0
-          while (j < flatDist.length) {
-            idx.update(flatDist(j), flatDist(j + 1)); j += 2
-          }
-          val acc = new graft.core.LongLongMap(1 << 10)
-          it.foreach { case (n, flat) =>
-            val d = idx.getOrElse(n, Long.MinValue)
-            if (d != Long.MinValue) {
-              var i = 0
-              while (i < flat.length) {
-                acc.minTo(flat(i), d + flat(i + 1)); i += 2
-              }
-            }
-          }
-          val out = new Array[Long](acc.size * 2)
-          var k2 = 0
-          acc.foreachEntry { (n, v) => out(k2) = n; out(k2 + 1) = v; k2 += 2 }
-          Iterator.single(out)
-        }.collect()
-        var changed = false
-        partials.foreach { flat =>
-          var i = 0
-          while (i < flat.length) {
-            val n = flat(i); val cand = flat(i + 1)
-            val cur = dist.getOrElse(n, Long.MinValue)
-            if (cur == Long.MinValue || cand < cur) {
-              dist.update(n, cand); changed = true
-            }
-            i += 2
-          }
-        }
-        converged = !changed
-        round += 1
-      }
-      // distance census on the driver: |reached| ≤ GatherLoopMaxNodes
-      val byDist = new graft.core.LongLongMap(1 << 10)
-      dist.foreachEntry { (_, d) => byDist.addTo(d, 1L) }
-      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      byDist.foreachEntry { (d, n) => rows += ((d, n)) }
-      rows.sortBy(_._1).toSeq
-        .toDF("dist_ppm", "n_nodes").orderBy(col("dist_ppm").asc)
-    } finally {
-      adj.unpersist(blocking = false)
-    }
-  }
+  private def cheapestPathFrom(adj: DataFrame, maxRounds: Int): DataFrame =
+    nodeLoop(adj, maxRounds, CheapestPath).values
+      .groupBy(col("value").as("dist_ppm"))
+      .agg(count(lit(1)).as("n_nodes"))
+      .select(col("dist_ppm").cast("long").as("dist_ppm"),
+        col("n_nodes").cast("long").as("n_nodes"))
+      // domain-sized: one row per distinct distance — sorted in one task,
+      // which skips a range exchange and its sampling job
+      .coalesce(1)
+      .orderBy(col("dist_ppm").asc)
 
   /** q245: MODULARITY census of a node partition — Newman's Q for the
     * brand partition of the co-purchase graph, the "is this grouping a
@@ -1356,8 +895,8 @@ object Graphs {
   /** Assortativity over arbitrary undirected (u < v) distinct edges. */
   private[analytics] def degreeAssortativityOf(edges: DataFrame): DataFrame = {
     // The degree frame is NODE-sized and read twice — materialize it
-    // once and broadcast while the measured count fits (the peelCore /
-    // pagerank discipline): the edge list is then scanned ONCE through
+    // once and broadcast while the measured count fits
+    // ([[TrickleBroadcastRows]]): the edge list is then scanned ONCE through
     // two broadcast-hash probes instead of paying two shuffled joins.
     val deg = Caches.scratch(edges.select(col("u").as("n"))
       .unionAll(edges.select(col("v").as("n")))
@@ -1386,45 +925,31 @@ object Graphs {
     * k = 80 (round 6+ is a fixpoint), so the bound is documentation,
     * not approximation, at test scale.
     *
-    * Scale shape: the same incremental-degree [[peelCore]] loop as the
-    * q228 cascade (one fused node-sized job per round, trickle joins
-    * hinted on driver-measured counts); the census then folds the FINAL
-    * degree frame in one aggregate — n_nodes = nodes with d > 0 (a node
-    * that lost every edge vanishes from an edge-derived count, and its
-    * inert d = 0 row matches that exactly), n_edges = Σd / 2 (the
-    * degree sum over the symmetrized list double-counts each surviving
-    * undirected edge). Under-degree nodes left by an exhausted rounds
-    * budget still carry d > 0 and stay in both counts, exactly like the
-    * edge-list form they replaced. */
+    * Scale shape: the same [[peel]] kernel on the [[nodeLoop]] runner as
+    * the q228 cascade; the census then folds the FINAL degree frame in
+    * one aggregate — n_nodes = nodes with d > 0 (a node that lost every
+    * edge vanishes from an edge-derived count, and its inert d = 0 row
+    * matches that exactly; a peeled node's phantom row is strictly
+    * negative, and a real row never goes negative), n_edges = Σd div 2
+    * (the degree sum over the symmetrized list double-counts each
+    * surviving undirected edge; integer division, since a double `/`
+    * would lose exactness past 2^53). Under-degree nodes left by an
+    * exhausted rounds budget still carry d > 0 and stay in both counts,
+    * exactly like the edge-list form they replaced. */
   def kCoreCensus(spark: SparkSession, dir: String,
       k: Int = 80, rounds: Int = 8): DataFrame =
-    kCoreCensusFromAdj(
-      coPurchaseAdjacency(spark, dir)
-        .select(col("node"), expr("transform(nbrs, x -> x.v)").as("nbrs")),
-      k, rounds)
+    kCoreCensusFrom(coPurchaseNeighbors(spark, dir), k, rounds)
 
   private[analytics] def kCoreCensusOf(edges0: DataFrame,
       k: Int, rounds: Int): DataFrame =
-    kCoreCensusFromAdj(adjacencyOf(edges0), k, rounds)
+    kCoreCensusFrom(adjacencyOf(edges0), k, rounds)
 
-  private def kCoreCensusFromAdj(adjPlan: DataFrame,
-      k: Int, rounds: Int): DataFrame = {
-    // peelCore reduces the final degree frame to the two surviving-
-    // subgraph scalars inside its own loop (d > 0 is exactly the
-    // surviving subgraph: a removed node u's pinned-edge deltas can
-    // target neighbors removed in EARLIER rounds, creating phantom rows
-    // with strictly negative d; real rows never go negative — a node
-    // reaches d = 0 only when its last neighbor is removed, after which
-    // no remaining edge can decrement it). The 1-row census is driver-
-    // built, like q228's removal census. n_edges halves the symmetrized
-    // degree sum with integer division (even by construction; a double
-    // `/` would lose exactness past 2^53 at 100 TB).
-    val (nNodes, sumD, _) = peelCore(adjPlan, k, rounds)
-    val spark = adjPlan.sparkSession
-    import spark.implicits._
-    Seq((k.toLong, nNodes, sumD / 2))
-      .toDF("core_k", "n_nodes", "n_edges")
-  }
+  private def kCoreCensusFrom(adj: DataFrame, k: Int, rounds: Int): DataFrame =
+    nodeLoop(adj, rounds, peel(k)).values
+      .filter(col("value") > 0)
+      .agg(count(lit(1)).as("n_nodes"), coalesce(sum(col("value")), lit(0L)).as("d"))
+      .select(lit(k.toLong).as("core_k"), col("n_nodes"),
+        expr("d div 2").cast("long").as("n_edges"))
 
   /** q289: RECOMMENDER BACKTEST — temporal-split hit-rate@k evaluation of
     * the co-occurrence recommender. Orders are split by date (first 80%

@@ -75,6 +75,14 @@ final class LongLongMap(initialCapacity: Int = 1 << 10) {
     else update(k, v)
   }
 
+  /** k → f(existing, v), inserting v if absent. */
+  def merge(k: Long, v: Long, f: (Long, Long) => Long): Unit = {
+    var i = slot(k)
+    while (used(i) && keys(i) != k) i = (i + 1) & mask
+    if (used(i)) vals(i) = f(vals(i), v)
+    else update(k, v)
+  }
+
   def getOrElse(k: Long, default: Long): Long = {
     var i = slot(k)
     while (used(i) && keys(i) != k) i = (i + 1) & mask
@@ -108,5 +116,28 @@ final class LongLongMap(initialCapacity: Int = 1 << 10) {
       if (used(i)) f(keys(i), vals(i))
       i += 1
     }
+  }
+
+  /** The entries whose value passes `keep`, interleaved [k0, v0, k1, v1, …]
+    * — the primitive form a map takes through a closure or a collect. */
+  def toFlat(keep: Long => Boolean = _ => true): Array[Long] = {
+    val out = new Array[Long](2 * n)
+    var w = 0
+    var i = 0
+    while (i < cap) {
+      if (used(i) && keep(vals(i))) { out(w) = keys(i); out(w + 1) = vals(i); w += 2 }
+      i += 1
+    }
+    if (w == out.length) out else java.util.Arrays.copyOf(out, w)
+  }
+}
+
+object LongLongMap {
+  /** A map of interleaved [k0, v0, k1, v1, …] entries (see `toFlat`). */
+  def ofFlat(flat: Array[Long]): LongLongMap = {
+    val m = new LongLongMap(math.max(16, flat.length))
+    var i = 0
+    while (i < flat.length) { m.update(flat(i), flat(i + 1)); i += 2 }
+    m
   }
 }

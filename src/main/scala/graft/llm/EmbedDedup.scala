@@ -175,19 +175,10 @@ object EmbedDedup {
     graft.core.Sessions.ensure(docs.sparkSession)
     val dot = graft.functions.DotProduct.Name
     val meta = docs.select(col("doc_id"), col("lang"), col("source"))
-    // pre-partitioned on the cell key and eagerly materialized (the q29
-    // materialize-then-plan recipe, round-14): the cell self-join arms
-    // AND all three (lang, source) aggregations below reuse the cached
-    // partitioning instead of re-exchanging the vector frame
     val dense = graft.core.Caches.scratch(
       denseVectors(tfVectors(docs))
         .withColumn("nrm", sqrt(call_function(dot, col("v"), col("v"))))
-        .join(meta, Seq("doc_id"))
-        .repartition(col("lang"), col("source")))
-    // materialize-then-plan: this count runs a Spark job while the frame
-    // is still being BUILT, and it is what makes the cache's (lang,
-    // source) partitioning visible to the joins and aggregations below
-    dense.count()
+        .join(meta, Seq("doc_id")))
     val a = dense.select(col("lang"), col("source"),
       col("doc_id").as("doc_a"), col("v").as("va"), col("nrm").as("na"))
     val b = dense.select(col("lang"), col("source"),

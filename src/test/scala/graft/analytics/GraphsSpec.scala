@@ -95,7 +95,7 @@ class GraphsSpec extends SparkSpecBase {
   test("pagerank ppm on sf data: dense ranks, floor ≥ base mass, deterministic") {
     val a = Graphs.pageRankPpm(spark, sf).collect()
     val b = Graphs.pageRankPpm(spark, sf).collect()
-    assert(a.toSeq === b.toSeq) // localCheckpoint loop is restart-identical
+    assert(a.toSeq === b.toSeq) // the loop is restart-identical
     assert(a.map(_.getInt(0)).toSeq === (1 to a.length))
     a.foreach(r => assert(r.getLong(2) >= 150000L))
     val ranks = a.map(_.getLong(2))
@@ -286,25 +286,69 @@ class GraphsSpec extends SparkSpecBase {
   }
 
   test("gather and distributed fixpoint paths are bit-identical") {
-    // round-14: below GatherLoopMaxNodes the kernels run driver-gather
-    // rounds; above it, co-partitioned RDD loops. Force the distributed
-    // path on the same sf input and pin row-for-row equality.
-    def allFour(): (Seq[Seq[Any]], Seq[Seq[Any]], Seq[Seq[Any]], Seq[Seq[Any]]) = (
-      Graphs.pageRankConvergedPpm(spark, sf).collect().toSeq.map(_.toSeq),
-      Graphs.kCorePeelCensus(spark, sf).collect().toSeq.map(_.toSeq),
-      Graphs.cheapestPathCensus(spark, sf).collect().toSeq.map(_.toSeq),
-      Graphs.kCoreCensus(spark, sf).collect().toSeq.map(_.toSeq))
-    val viaGather = allFour()
+    // below GatherLoopMaxNodes nodeLoop runs driver-gather rounds; above
+    // it, co-partitioned RDD rounds. Force the distributed path on the
+    // same inputs (sf data and the hand-traced fixtures) and pin
+    // row-for-row equality.
+    import spark.implicits._
+    val path = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
+    val k3 = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v")
+    val costed = Seq((1L, 2L, 2L), (2L, 3L, 1L)).toDF("u", "v", "w")
+    def all(): Seq[Seq[Seq[Any]]] = Seq(
+      Graphs.pageRankPpm(spark, sf),
+      Graphs.pageRankConvergedPpm(spark, sf),
+      Graphs.kCorePeelCensus(spark, sf),
+      Graphs.cheapestPathCensus(spark, sf),
+      Graphs.kCoreCensus(spark, sf),
+      Graphs.pageRankPpmOf(path, iters = 3, topK = 10),
+      Graphs.pageRankConvergedPpmOf(k3, 10, 64),
+      Graphs.cheapestPathCensusOf(costed, maxRounds = 8)
+    ).map(_.collect().toSeq.map(_.toSeq))
+    val viaGather = all()
     graft.core.Caches.releaseScratch(spark)
     val was = Graphs.GatherLoopMaxNodes
     Graphs.GatherLoopMaxNodes = 0L
     try {
-      val viaDistributed = allFour()
-      assert(viaGather === viaDistributed)
+      val viaDistributed = all()
+      viaGather.zip(viaDistributed).zipWithIndex.foreach { case ((g, d), i) =>
+        assert(g === d, s"input $i: gather and distributed paths differ")
+      }
     } finally {
       Graphs.GatherLoopMaxNodes = was
       graft.core.Caches.releaseScratch(spark)
     }
+  }
+
+  // The iterative kernels' loop mechanics live in one runner
+  // (Graphs.nodeLoop): one explicit HashPartitioner and one gather /
+  // distributed dispatch in the whole engine, so no kernel can grow a
+  // private copy of the loop back.
+  test("one fixpoint runner: one HashPartitioner and one gather dispatch in src/main") {
+    val partitioner = """new org\.apache\.spark\.HashPartitioner\(""".r
+    val dispatch = """[<>]=?\s*GatherLoopMaxNodes\b|\bGatherLoopMaxNodes\s*[<>]""".r
+    // positive controls: the detectors flag the shapes they count
+    assert(partitioner.findFirstIn(
+      "val part = new org.apache.spark.HashPartitioner(loopW)").isDefined)
+    assert(dispatch.findFirstIn("if (nNodes <= GatherLoopMaxNodes)").isDefined)
+    assert(dispatch.findFirstIn("if (GatherLoopMaxNodes >= nNodes)").isDefined)
+    // negative controls: prose, doc links and the test hook are not counted
+    assert(partitioner.findFirstIn("ONE explicit HashPartitioner per loop").isEmpty)
+    assert(dispatch.findFirstIn("fits driver memory (≤ [[GatherLoopMaxNodes]])").isEmpty)
+    assert(dispatch.findFirstIn("Graphs.GatherLoopMaxNodes = 0L").isEmpty)
+    val files = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .forEach(p => if (p.toString.endsWith(".scala")) files += p)
+    assert(files.nonEmpty, "source scan found nothing — path wrong?")
+    def sites(re: scala.util.matching.Regex): Seq[String] = files.toSeq.flatMap { p =>
+      val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      re.findAllMatchIn(txt).map(m => s"$p:${txt.take(m.start).count(_ == '\n') + 1}")
+    }
+    val parts = sites(partitioner)
+    assert(parts.size === 1, "HashPartitioner sites (the loop belongs in " +
+      "Graphs.nodeLoop):\n  " + parts.mkString("\n  "))
+    val dispatches = sites(dispatch)
+    assert(dispatches.size === 1, "GatherLoopMaxNodes comparisons (the " +
+      "dispatch belongs in Graphs.nodeLoop):\n  " + dispatches.mkString("\n  "))
   }
 
   test("k-core peel: a hub dropping straight to zero degree is never censused") {
