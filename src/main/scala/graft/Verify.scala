@@ -6,7 +6,9 @@ import graft.core.Sessions
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Queries run in
-  * sorted-name order for deterministic logs/timings. */
+  * sorted-name order for deterministic logs/timings. Usage:
+  * `Verify <sf_dir> <out_dir> [query …]`; a filter that names no query
+  * (e.g. `none`) writes only oracle_sql.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
@@ -15,6 +17,9 @@ object Verify {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // a query that fails to build must leave no result behind: an
+      // earlier run's parquet would otherwise pass the oracle check
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

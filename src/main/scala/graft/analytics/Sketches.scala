@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Shard, Tables}
 
 /** Mergeable cardinality / frequency sketches (SURVEY §2 scale levers).
   *
@@ -18,10 +18,9 @@ import graft.core.Tables
   */
 object Sketches {
 
-  /** 48-bit positive integer hash of a column (md5 prefix — portable:
-    * DuckDB `CAST('0x' || substr(md5(x), 1, 12) AS BIGINT)`). */
+  /** 48-bit positive integer hash of a column (the portable md5 prefix). */
   private def h48(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(c), 1, 12), 16, 10).cast("long")
+    Shard.md5Prefix(c, 12)
 
   /** q230: KMV (k-minimum-values / bottom-k) DISTINCT sketch with its own
     * accuracy audit — distinct active user-days per event type, plus the

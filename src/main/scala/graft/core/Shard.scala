@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
   * embedding LSH, q204 perceptual hash, q323 edit distance) shares with
   * its DuckDB oracle, written once.
   *
-  * '''Portable hash.''' [[h60]] is the first 15 hex digits of md5 as a
-  * long: Spark `conv(substring(md5(x),1,15),16,10)` ≡ DuckDB
-  * `CAST('0x' || substr(md5(x),1,15) AS BIGINT)` (60 bits, fits a signed
-  * long, never negative). md5 is a codegen'd built-in on both sides, so no
-  * UDF is needed and both engines put every row in the same bucket.
+  * '''Portable hash.''' [[md5Prefix]] is the first n hex digits of md5 as
+  * a long, and [[duckMd5Prefix]] spells the same hash in DuckDB; these two
+  * builders are the only places either engine writes it. [[h60]] is the
+  * 15-digit width (60 bits, fits a signed long, never negative). md5 is a
+  * codegen'd built-in on both sides, so no UDF is needed and both engines
+  * put every row in the same bucket.
   *
   * '''Capped blocking.''' A block key (a length band, an LSH band value, a
   * hash band) groups candidate docs for a quadratic in-block comparison.
@@ -28,9 +29,17 @@ object Shard {
   /** Most docs a subshard may hold. */
   val Cap = 64
 
+  /** The first `digits` hex digits of md5(c) as a long. Up to 15 digits
+    * the value fits a signed long and is never negative. */
+  def md5Prefix(c: Column, digits: Int): Column =
+    conv(substring(md5(c), 1, digits), 16, 10).cast("long")
+
+  /** The DuckDB twin of [[md5Prefix]], over a SQL expression. */
+  def duckMd5Prefix(expr: String, digits: Int): String =
+    s"CAST('0x' || substr(md5($expr), 1, $digits) AS BIGINT)"
+
   /** Portable 60-bit hash of a string expression. */
-  def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  def h60(c: Column): Column = md5Prefix(c, 15)
 
   /** `df` joined with its census on `keys`, plus `subshard` =
     * h60(doc_id) mod ceil(bdocs / [[Cap]]). The census is tiny (one row
@@ -53,7 +62,7 @@ object Shard {
        |  SELECT $k, COUNT(*) AS bdocs FROM $from GROUP BY $k),
        |keyed AS (
        |  SELECT m.*,
-       |         CAST('0x' || substr(md5(CAST(m.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+       |         ${duckMd5Prefix("CAST(m.doc_id AS VARCHAR)", 15)}
        |           % ((c.bdocs + ${Cap - 1}) // $Cap) AS subshard
        |  FROM $from m JOIN census c USING ($k))""".stripMargin
   }

@@ -1,11 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.core.Shard.h60
+import graft.core.Shard.{duckMd5Prefix, h60, md5Prefix}
 
 /** Dataset-curation operators a training-data pipeline runs after cleaning
   * and dedup: deterministic splits, stratified sampling, weighted source
@@ -22,15 +22,32 @@ import graft.core.Shard.h60
   */
 object Curation {
 
-  /** Train/val/test assignment: bucket = h(salt + doc_id) % 100, cut at
-    * 80/90. Per-doc and stable — the join-free, shuffle-free split. */
-  def withSplit(docs: DataFrame, trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    val bucket = h60(concat(lit("split:"), col("doc_id").cast("string"))) % 100
-    docs.withColumn("split",
-      when(bucket < trainPct, lit("train"))
-        .when(bucket < trainPct + valPct, lit("val"))
-        .otherwise(lit("test")))
+  /** Percent of split buckets that train, and that validate; the rest
+    * test. */
+  val TrainPct = 80
+  val ValPct = 10
+
+  /** Train/val/test label of column `key`: bucket = h60("split:" + key)
+    * % 100, cut at [[TrainPct]] and [[TrainPct]] + [[ValPct]]. */
+  def splitOf(key: String): Column = {
+    val bucket = h60(concat(lit("split:"), col(key).cast("string"))) % 100
+    when(bucket < TrainPct, lit("train"))
+      .when(bucket < TrainPct + ValPct, lit("val"))
+      .otherwise(lit("test"))
   }
+
+  /** The DuckDB twin of [[splitOf]]. */
+  def duckSplitOf(key: String): String = {
+    val bucket = s"${duckMd5Prefix(s"'split:' || CAST($key AS VARCHAR)", 15)} % 100"
+    s"""CASE WHEN $bucket < $TrainPct THEN 'train'
+       |         WHEN $bucket < ${TrainPct + ValPct} THEN 'val'
+       |         ELSE 'test' END""".stripMargin
+  }
+
+  /** Train/val/test assignment per doc ([[splitOf]] on doc_id). Per-doc
+    * and stable — the join-free, shuffle-free split. */
+  def withSplit(docs: DataFrame): DataFrame =
+    docs.withColumn("split", splitOf("doc_id"))
 
   /** q158: CROSS-SPLIT LEAKAGE census — near-dup pairs that straddle the
     * train/val/test boundary. A random-ish hash split assigns near-
@@ -83,22 +100,11 @@ object Curation {
     * Scale: the cluster frame is pair-graph-sized and broadcasts onto
     * the corpus (same shape as the keep-list join); the split is the
     * usual shuffle-free hash rule, just keyed one level up. */
-  def clusterSplit(docs: DataFrame, trainPct: Int = 80,
-                   valPct: Int = 10): DataFrame =
-    clusterSplitOf(DupClusters.dedupKeepList(docs), trainPct, valPct)
-
-  /** [[clusterSplit]] over an already-resolved keep list (the
-    * (spark, dir) path reuses the memoized cluster frame). */
-  private def clusterSplitOf(keep: DataFrame, trainPct: Int,
-                             valPct: Int): DataFrame = {
-    val keyed = keep
+  def clusterSplit(spark: SparkSession, dir: String): DataFrame = {
+    val keyed = DupClusters.dedupKeepList(spark, dir)
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("ckey"))
-    val bucket = h60(concat(lit("split:"), col("ckey").cast("string"))) % 100
-    val labeled = keyed.withColumn("split",
-      when(bucket < trainPct, lit("train"))
-        .when(bucket < trainPct + valPct, lit("val"))
-        .otherwise(lit("test")))
+    val labeled = keyed.withColumn("split", splitOf("ckey"))
     val crossed = labeled.groupBy(col("ckey"))
       .agg(countDistinct(col("split")).as("n_splits"))
       .agg(sum(when(col("n_splits") > 1, 1L).otherwise(0L))
@@ -112,9 +118,6 @@ object Curation {
         col("clusters_split_across"))
       .orderBy(col("split").asc)
   }
-
-  def clusterSplit(spark: SparkSession, dir: String): DataFrame =
-    clusterSplitOf(DupClusters.dedupKeepList(spark, dir), 80, 10)
 
   /** Split audit: docs and chars per (split, lang) — the report a pipeline
     * checks before training to confirm the split is balanced per stratum. */
@@ -714,8 +717,7 @@ object Curation {
   private[llm] def prioritySampleOf(docs: DataFrame, k: Int): DataFrame = {
     val pri = docs.select(col("doc_id"), col("n_chars"))
       .withColumn("h",
-        conv(substring(md5(concat(lit("prio:"), col("doc_id").cast("string"))),
-          1, 12), 16, 10).cast("long"))
+        md5Prefix(concat(lit("prio:"), col("doc_id").cast("string")), 12))
       .withColumn("priority",
         // least(., 32767): 32767·2⁴⁸ < 2⁶³ exactly; without the clamp a
         // 32768-char doc overflows int64 (Spark wraps / ANSI-throws where

@@ -223,7 +223,7 @@ object TextDedup {
     val wordCounts = normalized(docs)
       .select(col("doc_id"), explode(split(col("norm"), " ")).as("word"))
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h", conv(substring(md5(col("word")), 1, 8), 16, 10).cast("long"))
+      .withColumn("h", Shard.md5Prefix(col("word"), 8))
     val bitSums = (0 until SimhashBits).map { j =>
       sum((shiftright(col("h"), j).bitwiseAND(lit(1L)) * 2 - 1) * col("cnt")).as(s"s$j")
     }

@@ -7,6 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * the mistakes that would silently weaken the correctness gate. */
 class DriverContractSpec extends AnyFunSuite {
 
+  /** Every `src/main` Scala file with its text, for the source laws. */
+  private lazy val mainSources: Seq[(java.nio.file.Path, String)] = {
+    val files = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .forEach(p => if (p.toString.endsWith(".scala")) files += p)
+    assert(files.nonEmpty, "source scan found nothing — path wrong?")
+    files.toSeq.map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+  }
+
   test("queries and oracleSql cover exactly the same keys") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
@@ -30,6 +39,39 @@ class DriverContractSpec extends AnyFunSuite {
       s"gaps in numbering: missing ${(1 to nums.max).toSet -- nums}")
   }
 
+  // The oracle is one map per engine family (graft.oracle). `++` keeps
+  // the right-hand text of a key that two families define, so a key
+  // written twice would lose one oracle without any error.
+  test("oracle family maps are disjoint and together make oracleSql") {
+    def overlaps(fams: Seq[Map[String, String]]): Set[String] =
+      fams.combinations(2).flatMap { case Seq(a, b) => a.keySet & b.keySet }.toSet
+    // positive control: the check must see a key two families share
+    assert(overlaps(Seq(Map("q1" -> "a"), Map("q2" -> "b", "q1" -> "c"))) === Set("q1"))
+    val fams = SparkEntry.oracleFamilies
+    assert(overlaps(fams).isEmpty,
+      s"keys in more than one oracle family: ${overlaps(fams).toSeq.sorted}")
+    assert(fams.map(_.size).sum === SparkEntry.oracleSql.size)
+  }
+
+  // The portable md5-prefix hash is spelled by one Spark/DuckDB builder
+  // pair in graft.core.Shard, so the two engines' spellings sit side by
+  // side; a hand-written copy elsewhere could drift from them.
+  test("the md5-prefix hash is spelled only in graft.core.Shard") {
+    val spelled = "subs(?:tr|tring)\\(md5\\(".r
+    // positive control: both engines' spellings are caught
+    assert(spelled.findAllIn(
+      "CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) conv(substring(md5(c), 1, 8), 16, 10)").size === 2)
+    val sites = mainSources.flatMap { case (p, txt) =>
+      spelled.findAllMatchIn(txt).map(m => (p.getFileName.toString,
+        s"$p:${txt.take(m.start).count(_ == '\n') + 1}"))
+    }
+    val outside = sites.filterNot(_._1 == "Shard.scala").map(_._2)
+    assert(outside.isEmpty, "md5-prefix hash spelled outside Shard.md5Prefix/" +
+      "duckMd5Prefix:\n  " + outside.mkString("\n  "))
+    assert(sites.count(_._1 == "Shard.scala") === 2,
+      s"Shard.scala should spell the hash once per engine: ${sites.map(_._2)}")
+  }
+
   test("oracle SQL avoids the known silent-weakening mistakes") {
     SparkEntry.oracleSql.foreach { case (k, sql) =>
       // a query whose oracle has no ORDER BY is still compared (sorted
@@ -49,7 +91,7 @@ class DriverContractSpec extends AnyFunSuite {
   // the pipelines per CTE reference and per recursive iteration, and the
   // end-of-round gate died on the compounded cost (186-217 s per query
   // at sf0.1 for ~5 s of real work). Every closure must now come from
-  // SparkEntry.closureCtes, whose edges/lab are AS MATERIALIZED.
+  // graft.oracle.Duck.closureCtes, whose edges/lab are AS MATERIALIZED.
   test("oracle closures all use the single materialized builder") {
     val closureDef = """(\w*)reach\(src, dst\) AS \(""".r
     SparkEntry.oracleSql.foreach { case (k, sql) =>
@@ -59,10 +101,10 @@ class DriverContractSpec extends AnyFunSuite {
       closureDef.findAllMatchIn(sql).map(_.group(1)).foreach { p =>
         assert(sql.contains(s"${p}edges AS MATERIALIZED ("),
           s"$k: closure '${p}reach' without a materialized ${p}edges — " +
-            "use SparkEntry.closureCtes")
+            "use graft.oracle.Duck.closureCtes")
         assert(sql.contains(s"${p}lab AS MATERIALIZED ("),
           s"$k: closure '${p}reach' without a materialized ${p}lab — " +
-            "use SparkEntry.closureCtes")
+            "use graft.oracle.Duck.closureCtes")
       }
     }
   }
@@ -129,12 +171,7 @@ class DriverContractSpec extends AnyFunSuite {
       |    topUsers(EventsPipeline.silver(spark, dir))""".stripMargin).isDefined)
     assert(forward.findFirstIn("""def topUsers(spark: SparkSession, dir: String): DataFrame =
       |    topUsers(EventsPipeline.silver(spark, dir)).limit(3)""".stripMargin).isEmpty)
-    val files = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .forEach(p => if (p.toString.endsWith(".scala")) files += p)
-    assert(files.nonEmpty, "source scan found nothing — path wrong?")
-    val forwards = files.toSeq.flatMap { p =>
-      val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val forwards = mainSources.flatMap { case (p, txt) =>
       forward.findAllMatchIn(txt).map { m =>
         s"$p:${txt.take(m.start).count(_ == '\n') + 1}: ${m.group(1)}"
       }

@@ -45,7 +45,12 @@ def main():
             print(f"FAIL {name}: oracle error {e}")
             n_fail += 1
             continue
-        sdf = pq.read_table(f"{out_dir}/{name}")
+        try:
+            sdf = pq.read_table(f"{out_dir}/{name}")
+        except OSError:
+            print(f"FAIL {name}: no Spark result")
+            n_fail += 1
+            continue
         ocols, scols = sorted(odf.column_names), sorted(sdf.column_names)
         if ocols != scols:
             print(f"FAIL {name}: schema oracle={ocols} spark={scols}")
