@@ -430,7 +430,7 @@ object Diagnostics {
     // the probe edges become driver arithmetic, identical floor-division
     // semantics on non-negative operands).
     val mmRow = c.agg(min(col("v")).as("lo"),
-      (max(col("v")) - min(col("v")) + 1).as("span")).head
+      (max(col("v")) - min(col("v")) + 1).as("span")).head()
     val lo = mmRow.getLong(0)
     val span = mmRow.getLong(1)
     val binCounts = c

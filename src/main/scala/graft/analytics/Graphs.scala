@@ -378,13 +378,14 @@ object Graphs {
   }
 
   /** Node-count ceiling for the driver-gather rounds of [[nodeLoop]]:
-    * below it the per-round state (one primitive map of ≤ this many
-    * entries) is ≤ ~16 MB on the driver and in each round closure —
-    * cheaper than any shuffle stage; above it the loop runs its fully
-    * distributed co-partitioned rounds. A measured scalar, not an
-    * estimate (same discipline as [[TrickleBroadcastRows]]). A var only
-    * so GraphsSpec can force the distributed path on small fixtures and
-    * pin the two paths' bit-equivalence. */
+    * below it the state (one primitive map of ≤ this many entries) is
+    * ≤ ~16 MB on the driver, plus its active entries in each round
+    * closure when the rounds run as jobs — cheaper than any shuffle
+    * stage; above it the loop runs its fully distributed co-partitioned
+    * rounds. A measured scalar, not an estimate (same discipline as
+    * [[TrickleBroadcastRows]]). A var only so GraphsSpec can force the
+    * distributed path on small fixtures and pin the paths'
+    * bit-equivalence. */
   private[analytics] var GatherLoopMaxNodes = 500000L
 
   /** q228: k-core peel CASCADE census — the unbounded-iteration k-core
@@ -432,8 +433,11 @@ object Graphs {
     * (the rows are the per-partition payload, so the width must follow
     * the EDGE count, not the node count). ~600k entries ≈ one
     * stage-latency quantum of relax work per task (round-13 width sweep:
-    * 32 wide was stage-latency-bound, 1 wide serialized ~110M row-ops). */
-  private val LoopEdgesPerPartition = 600000L
+    * 32 wide was stage-latency-bound, 1 wide serialized ~110M row-ops).
+    * Below one partition's worth the gather rounds run in the driver. A
+    * var only so GraphsSpec can force the job-per-round path on small
+    * fixtures. */
+  private[analytics] var LoopEdgesPerPartition = 600000L
 
   /** Plain symmetric adjacency plan (node, nbrs: array<node>) from an
     * undirected (u, v) edge list — the ad-hoc build the generic `Of`
@@ -453,7 +457,8 @@ object Graphs {
     coPurchaseAdjacency(spark, dir).select(col("node"), col("nbrs.v").as("nbrs"))
 
   /** Value of a node the loop state does not hold: no round-0 value, or
-    * dropped by an advance. */
+    * dropped by an advance (a state advanced in place keeps a dropped
+    * node as an Absent-valued entry, which every reader skips). */
   private val Absent = Long.MinValue
 
   /** One iterative graph kernel over a per-node long state, as
@@ -557,16 +562,26 @@ object Graphs {
     * [[LoopEdgesPerPartition]] per partition, at most the session's
     * shuffle width) and the least node id. Then:
     *  - ≤ [[GatherLoopMaxNodes]] nodes: DRIVER-GATHER rounds. The state
-    *    lives on the driver; the adjacency stays distributed and cached.
-    *    Per round, the active nodes' values ride to the tasks in the
-    *    round closure, each task pre-combines its contributions in a
-    *    primitive map and returns them as one interleaved long[], and the
-    *    driver merges the ≤ loopW partials and advances every node — one
-    *    narrow job per round, no shuffle stage. (The first round's tasks
-    *    also evaluate `init` and return it: no separate seeding job.)
-    *    Measured at sf0.1 (20k nodes, 46 rounds): a shuffle STAGE costs
-    *    ~51 ms in this runtime even for a 20k-row round, so a shuffle per
-    *    round has a 2.4 s floor this form does not.
+    *    lives on the driver as one primitive map, advanced in place.
+    *    One round is [[relaxRows]] over every adjacency row: a node reads
+    *    its value from the state (the first round evaluates `init` and
+    *    seeds the state instead) and, if active, pre-combines its
+    *    contributions into a primitive map; the driver then advances
+    *    every node. Where the rows run depends on their size:
+    *     - fewer than [[LoopEdgesPerPartition]] row entries (loopW = 1):
+    *       DRIVER LOOP. The rows are collected once and every round runs
+    *       in the driver — no job per round (sf0.01's 2k nodes, 231k
+    *       entries: q227's 35 round jobs become none). The collect is
+    *       bounded by the stats job's own measurement, nEntries: fewer
+    *       than 600k row longs plus one key per row (~5 MB).
+    *     - otherwise: ONE NARROW JOB PER ROUND over the adjacency,
+    *       coalesced to loopW partitions and cached. The active nodes'
+    *       values ride to the tasks in the round closure, each task
+    *       returns its contributions as one interleaved long[], and the
+    *       driver merges the ≤ loopW partials — no shuffle stage.
+    *       Measured at sf0.1 (20k nodes, 46 rounds): a shuffle STAGE
+    *       costs ~51 ms in this runtime even for a 20k-row round, so a
+    *       shuffle per round has a 2.4 s floor this form does not.
     *  - above it: DISTRIBUTED rounds on raw RDDs with ONE explicit
     *    HashPartitioner — zero Catalyst work per round (the round-13
     *    Dataset loops were driver-planning-bound). The adjacency and the
@@ -580,7 +595,7 @@ object Graphs {
     *    loop (rounds past it are no-ops — overshoot is compute, never
     *    semantics). The final state stays persisted for the lazy result
     *    frame and is released with the caller's next releaseScratch.
-    * Both paths run the same kernel functions; every combine is
+    * All three run the same kernel functions; every combine is
     * order-independent long arithmetic, so they are bit-identical
     * (GraphsSpec pins it). No session conf is read or set. */
   private def nodeLoop(adjPlan: DataFrame, maxRounds: Int, k: Kernel): Fixpoint = {
@@ -597,48 +612,53 @@ object Graphs {
     val mdisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val census = scala.collection.mutable.ArrayBuffer.empty[Long]
     if (nNodes <= GatherLoopMaxNodes) {
-      val adj = rows.coalesce(loopW).persist(mdisk)
-      try {
-        var state: LongLongMap = null // seeded by the first round's job
-        var shipped: Array[Long] = null // its active nodes' values
-        var done = false
-        while (!done && census.length < maxRounds) {
-          val ship = shipped
+      // bounded: the stats job's nEntries < LoopEdgesPerPartition
+      val local = if (nEntries < LoopEdgesPerPartition) rows.collect() else null
+      val adj = if (local == null) rows.coalesce(loopW).persist(mdisk) else null
+      // one round's seeded state (first round only: `state` is null) and
+      // combined contributions
+      def round(state: LongLongMap): (LongLongMap, LongLongMap) =
+        if (local != null) relaxRows(k, first, local.iterator, state)
+        else {
+          val ship = if (state == null) null else state.toFlat(isActive(k, _))
           val partials = adj.mapPartitions { it =>
-            val idx = if (ship == null) null else LongLongMap.ofFlat(ship)
-            val seed = new LongLongMap()
-            val acc = new LongLongMap(if (ship == null) 1 << 12 else ship.length)
-            it.foreach { case (n, row) =>
-              val v =
-                if (idx != null) idx.getOrElse(n, Absent)
-                else { val v0 = k.init(n, row, first); if (v0 != Absent) seed.update(n, v0); v0 }
-              if (v != Absent && k.active(v)) k.relax(v, row, acc)
-            }
+            val (seed, acc) = relaxRows(k, first, it,
+              if (ship == null) null else LongLongMap.ofFlat(ship))
             Iterator.single((seed.toFlat(), acc.toFlat()))
           }.collect()
+          val seed = new LongLongMap(1 << 12)
+          val comb = new LongLongMap(if (ship == null) 1 << 12 else ship.length)
+          partials.foreach { case (s, c) =>
+            mergeFlat(seed, s, (_, v) => v)
+            mergeFlat(comb, c, k.combine)
+          }
+          (seed, comb)
+        }
+      try {
+        var state: LongLongMap = null // seeded by the first round
+        var active = 0L // its active nodes: the next round's census
+        var done = false
+        while (!done && census.length < maxRounds) {
+          val (seed, comb) = round(state)
           if (state == null) {
-            state = new LongLongMap(1 << 12)
-            partials.foreach(p => mergeFlat(state, p._1, (_, v) => v))
-            shipped = state.toFlat(k.active)
+            state = seed
+            state.foreachEntry((_, v) => if (isActive(k, v)) active += 1L)
           }
           // a zero census is a fixpoint (the Kernel contract); only the
           // first round, which seeds the state, can meet one here
-          if (shipped.isEmpty) done = true
+          if (active == 0L) done = true
           else {
-            val comb = new LongLongMap(math.max(16, state.size * 2))
-            partials.foreach(p => mergeFlat(comb, p._2, k.combine))
-            val (next, changed) = advanceAll(k, state, comb)
-            census += shipped.length / 2
-            done = changed == 0L
-            state = next
-            shipped = state.toFlat(k.active)
-            done ||= shipped.isEmpty
+            census += active
+            val (changed, nextActive) = advanceInPlace(k, state, comb)
+            active = nextActive
+            done = changed == 0L || active == 0L
           }
         }
-        Fixpoint(census.toList, spark.sparkContext.parallelize(Seq(state.toFlat()), 1)
+        Fixpoint(census.toList, spark.sparkContext
+          .parallelize(Seq(state.toFlat(_ != Absent)), 1)
           .flatMap(_.grouped(2).map(e => (e(0), e(1)))).toDF("node", "value"))
       } finally {
-        adj.unpersist(blocking = false)
+        if (adj != null) adj.unpersist(blocking = false)
       }
     } else {
       val part = new org.apache.spark.HashPartitioner(loopW)
@@ -657,7 +677,9 @@ object Graphs {
           s.zipPartitions(pushed, preservesPartitioning = true) { (si, pi) =>
             val comb = new LongLongMap(1 << 12)
             pi.foreach { case (n, x) => comb.merge(n, x, k.combine) }
-            advanceAll(k, mapOf(si), comb)._1.iterator
+            val next = mapOf(si)
+            advanceInPlace(k, next, comb)
+            next.iterator.filter(_._2 != Absent)
           }
         }
         var state: RDD[(Long, Long)] = adj.mapPartitions(_.flatMap { case (n, row) =>
@@ -710,19 +732,49 @@ object Graphs {
     while (i < flat.length) { m.merge(flat(i), flat(i + 1), f); i += 2 }
   }
 
-  /** The next state — `k.advance` over every node of `prev` or `comb` —
-    * and the count of nodes it changes (`diffCount(prev, next)`). */
-  private def advanceAll(k: Kernel, prev: LongLongMap,
-      comb: LongLongMap): (LongLongMap, Long) = {
-    val next = new LongLongMap(math.max(16, prev.size * 2))
-    var changed = 0L
-    def put(n: Long, was: Long, v: Long): Unit = {
-      if (v != was) changed += 1L
-      if (v != Absent) next.update(n, v)
+  /** Whether `v` is a state value (not [[Absent]]) whose node is active. */
+  private def isActive(k: Kernel, v: Long): Boolean = v != Absent && k.active(v)
+
+  /** One driver-gather round over adjacency `rows`, as both the driver
+    * loop and each round task of [[nodeLoop]] run it: a node reads its
+    * value from `state` or, in the first round (`state` null), evaluates
+    * `init` into the returned seed map; an active node relaxes its row
+    * into the returned contributions. */
+  private def relaxRows(k: Kernel, first: Long, rows: Iterator[(Long, Array[Long])],
+      state: LongLongMap): (LongLongMap, LongLongMap) = {
+    val seed = new LongLongMap(if (state == null) 1 << 12 else 16)
+    val acc = new LongLongMap(if (state == null) 1 << 12 else state.size)
+    rows.foreach { case (n, row) =>
+      val v =
+        if (state != null) state.getOrElse(n, Absent)
+        else { val v0 = k.init(n, row, first); if (v0 != Absent) seed.update(n, v0); v0 }
+      if (isActive(k, v)) k.relax(v, row, acc)
     }
-    prev.foreachEntry((n, v) => put(n, v, k.advance(v, comb.getOrElse(n, Absent))))
-    comb.foreachEntry((n, c) => if (!prev.contains(n)) put(n, Absent, k.advance(Absent, c)))
-    (next, changed)
+    (seed, acc)
+  }
+
+  /** Advance `state` in place to the next round — `k.advance` over every
+    * node of `state` or `comb`; a dropped node stays as an Absent entry —
+    * and count, in the same pass, the nodes it changes and the active
+    * nodes of the new state. */
+  private def advanceInPlace(k: Kernel, state: LongLongMap,
+      comb: LongLongMap): (Long, Long) = {
+    var changed = 0L
+    var active = 0L
+    def next(was: Long, c: Long): Long = {
+      val v = k.advance(was, c)
+      if (v != was) changed += 1L
+      if (isActive(k, v)) active += 1L
+      v
+    }
+    state.transformValues { (n, v) =>
+      val c = comb.getOrElse(n, Absent)
+      if (v == Absent && c == Absent) v else next(v, c)
+    }
+    comb.foreachEntry { (n, c) =>
+      if (!state.contains(n)) { val v = next(Absent, c); if (v != Absent) state.update(n, v) }
+    }
+    (changed, active)
   }
 
   /** Nodes whose value differs between `a` and `b`, a node held by only

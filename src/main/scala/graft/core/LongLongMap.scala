@@ -118,6 +118,15 @@ final class LongLongMap(initialCapacity: Int = 1 << 10) {
     }
   }
 
+  /** Replace each entry's value v by f(key, v), in place, in slot order. */
+  def transformValues(f: (Long, Long) => Long): Unit = {
+    var i = 0
+    while (i < cap) {
+      if (used(i)) vals(i) = f(keys(i), vals(i))
+      i += 1
+    }
+  }
+
   /** The entries whose value passes `keep`, interleaved [k0, v0, k1, v1, …]
     * — the primitive form a map takes through a closure or a collect. */
   def toFlat(keep: Long => Boolean = _ => true): Array[Long] = {

@@ -496,8 +496,8 @@ object TextStats {
       }
       b.result()
     }
-    val seqs = scala.collection.mutable.LinkedHashMap[String, Array[String]](
-      words.map { case (w, _) => w -> codePoints(w) }: _*)
+    val seqs = scala.collection.mutable.LinkedHashMap.from(
+      words.iterator.map { case (w, _) => w -> codePoints(w) })
     val freq = words.toMap
     val out = scala.collection.mutable.ArrayBuffer[(Long, String, String, String, Long)]()
     var step = 1

@@ -286,37 +286,53 @@ class GraphsSpec extends SparkSpecBase {
   }
 
   test("gather and distributed fixpoint paths are bit-identical") {
-    // below GatherLoopMaxNodes nodeLoop runs driver-gather rounds; above
-    // it, co-partitioned RDD rounds. Force the distributed path on the
-    // same inputs (sf data and the hand-traced fixtures) and pin
-    // row-for-row equality.
+    // three paths: below LoopEdgesPerPartition row entries nodeLoop runs
+    // its gather rounds in the driver; above it, one narrow job per
+    // round; above GatherLoopMaxNodes nodes, co-partitioned RDD rounds.
+    // Force the other two paths on the same inputs (sf data and the
+    // hand-traced fixtures) and pin row-for-row equality.
     import spark.implicits._
     val path = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
     val k3 = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v")
     val costed = Seq((1L, 2L, 2L), (2L, 3L, 1L)).toDF("u", "v", "w")
-    def all(): Seq[Seq[Seq[Any]]] = Seq(
-      Graphs.pageRankPpm(spark, sf),
-      Graphs.pageRankConvergedPpm(spark, sf),
-      Graphs.kCorePeelCensus(spark, sf),
-      Graphs.cheapestPathCensus(spark, sf),
-      Graphs.kCoreCensus(spark, sf),
-      Graphs.pageRankPpmOf(path, iters = 3, topK = 10),
-      Graphs.pageRankConvergedPpmOf(k3, 10, 64),
-      Graphs.cheapestPathCensusOf(costed, maxRounds = 8)
-    ).map(_.collect().toSeq.map(_.toSeq))
-    val viaGather = all()
-    graft.core.Caches.releaseScratch(spark)
-    val was = Graphs.GatherLoopMaxNodes
-    Graphs.GatherLoopMaxNodes = 0L
-    try {
-      val viaDistributed = all()
-      viaGather.zip(viaDistributed).zipWithIndex.foreach { case ((g, d), i) =>
-        assert(g === d, s"input $i: gather and distributed paths differ")
+    val inputs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRankPpm(sf)" -> (() => Graphs.pageRankPpm(spark, sf)),
+      "pageRankConvergedPpm(sf)" -> (() => Graphs.pageRankConvergedPpm(spark, sf)),
+      "kCorePeelCensus(sf)" -> (() => Graphs.kCorePeelCensus(spark, sf)),
+      "cheapestPathCensus(sf)" -> (() => Graphs.cheapestPathCensus(spark, sf)),
+      "kCoreCensus(sf)" -> (() => Graphs.kCoreCensus(spark, sf)),
+      "pageRankPpmOf(path)" -> (() => Graphs.pageRankPpmOf(path, iters = 3, topK = 10)),
+      "pageRankConvergedPpmOf(k3)" -> (() => Graphs.pageRankConvergedPpmOf(k3, 10, 64)),
+      "cheapestPathCensusOf(costed)" ->
+        (() => Graphs.cheapestPathCensusOf(costed, maxRounds = 8)))
+    def all(): Seq[Seq[Seq[Any]]] = try {
+      inputs.map(_._2().collect().toSeq.map(_.toSeq))
+    } finally graft.core.Caches.releaseScratch(spark)
+    val viaDriver = all()
+    val (edges, nodes) = (Graphs.LoopEdgesPerPartition, Graphs.GatherLoopMaxNodes)
+    val viaJobs = try { Graphs.LoopEdgesPerPartition = 1L; all() }
+      finally Graphs.LoopEdgesPerPartition = edges
+    val viaDistributed = try { Graphs.GatherLoopMaxNodes = 0L; all() }
+      finally Graphs.GatherLoopMaxNodes = nodes
+    for ((other, name) <- Seq(viaJobs -> "job-per-round", viaDistributed -> "distributed"))
+      inputs.map(_._1).zip(viaDriver.zip(other)).foreach { case (input, (d, o)) =>
+        assert(d === o, s"$input: driver-loop and $name paths differ")
       }
-    } finally {
-      Graphs.GatherLoopMaxNodes = was
-      graft.core.Caches.releaseScratch(spark)
-    }
+  }
+
+  test("the driver loop submits no job per round: 64 rounds cost the jobs of 2") {
+    // sf0.001's co-purchase adjacency is far below LoopEdgesPerPartition,
+    // so every PageRank round runs in the driver; the memoized adjacency
+    // is built before counting
+    Graphs.pageRankConvergedPpm(spark, sf, maxIters = 2).collect()
+    try {
+      val (two, jobs2) = jobsDuring(
+        Graphs.pageRankConvergedPpm(spark, sf, maxIters = 2).collect())
+      val (conv, jobs64) = jobsDuring(
+        Graphs.pageRankConvergedPpm(spark, sf, maxIters = 64).collect())
+      assert(two.toSeq !== conv.toSeq, "2 rounds already converged: the pin counts nothing")
+      assert(jobs64 === jobs2, s"maxIters 64 submitted $jobs64 jobs, maxIters 2 $jobs2")
+    } finally graft.core.Caches.releaseScratch(spark)
   }
 
   // The iterative kernels' loop mechanics live in one runner

@@ -1,8 +1,5 @@
 package graft.core
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.SparkSpecBase
@@ -24,29 +21,6 @@ class ListingJobsSpec extends SparkSpecBase {
     spark.range(users).selectExpr("id", "concat('user_', id) AS user_name")
       .write.partitionBy("user_name").parquet(dir)
     dir
-  }
-
-  /** `body`'s result and the jobs submitted from this thread while it runs
-    * (job group tagged, so jobs of anything else sharing the session are
-    * not counted). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"listing-probe-${System.nanoTime}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "listing probe")
-    val result = try body finally {
-      sc.clearJobGroup()
-      org.apache.spark.GraftListenerBridge.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    (result, jobs.get())
   }
 
   test("reading 40 partition directories submits no listing job") {
