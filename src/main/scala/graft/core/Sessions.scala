@@ -45,11 +45,13 @@ object Sessions {
           spark.experimental.extraOptimizations :+
             graft.functions.FuseIntersectCount
       }
-      // planner strategy: the as-of join physical operator (idempotent add)
-      if (!spark.experimental.extraStrategies
-            .contains(graft.plans.AsOfJoinStrategy)) {
+      // planner strategies (idempotent adds): the as-of join physical
+      // operator, and small global sorts planned as one task with no
+      // range-sampling job and no range shuffle
+      for (s <- Seq(graft.plans.AsOfJoinStrategy, graft.plans.OneTaskSort)
+           if !spark.experimental.extraStrategies.contains(s)) {
         spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+          spark.experimental.extraStrategies :+ s
       }
       // storage-partitioned joins: let DSv2 scans that report
       // KeyGroupedPartitioning (DocGen partitionByLang) satisfy join/agg

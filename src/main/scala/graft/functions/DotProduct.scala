@@ -111,5 +111,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.analytics.BloomJoin.bloomAggBuilder))
     ext.injectOptimizerRule(_ => FuseIntersectCount)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.OneTaskSort)
   }
 }

@@ -56,13 +56,16 @@ object Ledger {
         col("modificationTime").as("modification_time"))
 
   /** Ledger table read; empty frame with the right schema before the first
-    * append. (Local-path check; on a cluster the ledger is a catalog table
+    * append. The schema is declared, not inferred: parquet schema
+    * inference runs a Spark job over the footers on every read, twice a
+    * tick. (Local-path check; on a cluster the ledger is a catalog table
     * and this becomes spark.table.) */
-  def readLedger(spark: SparkSession, ledgerDir: String): DataFrame =
-    if (new java.io.File(ledgerDir).exists()) spark.read.parquet(ledgerDir)
+  def readLedger(spark: SparkSession, ledgerDir: String): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(LedgerSchema)
+    if (new java.io.File(ledgerDir).exists()) spark.read.schema(schema).parquet(ledgerDir)
     else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(LedgerSchema))
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   /** Files not yet processed: left-anti on content hash. */
   def newFiles(candidates: DataFrame, ledger: DataFrame): DataFrame =
@@ -96,7 +99,7 @@ object Ledger {
     val freshPaths = fileMeta(spark, inDir)
       .join(seenMeta, Seq("path", "length", "modification_time"), "left_anti")
       .select(col("path")).limit(maxFilesPerTick)
-      .collect().map(_.getString(0)).toSeq
+      .collect().map(_.getString(0)).toSeq // bounded: maxFilesPerTick
     if (freshPaths.isEmpty) return 0L
 
     // Stage 2: hash ONLY the fresh paths — collected ONCE so content is
@@ -104,7 +107,7 @@ object Ledger {
     // snapshot) drops renamed copies of bytes the ledger has already seen.
     val hashedSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "content_hash STRING, path STRING, length LONG, modification_time TIMESTAMP")
-    val hashedRows = hashPaths(spark, freshPaths).collect()
+    val hashedRows = hashPaths(spark, freshPaths).collect() // bounded: maxFilesPerTick
     val hashedDf = spark.createDataFrame(
       java.util.Arrays.asList(hashedRows: _*), hashedSchema)
     // The anti-join only sees the PRIOR ledger, so byte-identical files
@@ -113,7 +116,7 @@ object Ledger {
     // ledgered below as seen copies, like renamed copies of older files.
     val rows = newFiles(hashedDf, ledger)
       .select(col("content_hash"), col("path"), col("length"), col("modification_time"))
-      .collect()
+      .collect() // bounded: maxFilesPerTick
       .groupBy(_.getString(0)).values.map(_.minBy(_.getString(1)))
       .toArray.sortBy(_.getString(1))
     if (rows.nonEmpty) process(rows.map(_.getString(1)).toSeq)

@@ -251,11 +251,19 @@ class PlanAuditSpec extends SparkSpecBase {
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-    val plan = physical(uncached(graft.analytics.Graphs.itemItemRecs(spark, sf)))
     // a cache scan is a leaf here, so this sees only the per-run plan
-    assert(plan.collect { case s: InMemoryTableScanExec => s }.size === 1,
-      s"adjacency memo not read once in:\n$plan")
-    val exchanges = plan.collect { case e: Exchange => e }
+    def exchangesAboveAdjacency() = {
+      val plan = physical(uncached(graft.analytics.Graphs.itemItemRecs(spark, sf)))
+      assert(plan.collect { case s: InMemoryTableScanExec => s }.size === 1,
+        s"adjacency memo not read once in:\n$plan")
+      (plan, plan.collect { case e: Exchange => e })
+    }
+    // at this size the final orderBy runs as one task (graft.plans.OneTaskSort)
+    val (small, none) = exchangesAboveAdjacency()
+    assert(none.isEmpty, s"expected no exchange above the adjacency:\n$small")
+    // above the advisory partition size the orderBy keeps its range exchange
+    val (plan, exchanges) = withConf(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")(exchangesAboveAdjacency())
     assert(exchanges.size === 1 && (exchanges.head match {
       case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RangePartitioning]
       case _ => false

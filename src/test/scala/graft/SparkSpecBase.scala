@@ -17,6 +17,17 @@ trait SparkSpecBase extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** `body` with the session conf `key` set to `value`, then the prior
+    * value (or none) restored. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** `body`'s result and the jobs submitted from this thread while it runs
     * (job group tagged, so jobs of anything else sharing the session are
     * not counted). */

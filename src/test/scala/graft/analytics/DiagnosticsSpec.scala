@@ -12,9 +12,9 @@ class DiagnosticsSpec extends SparkSpecBase {
   test("skew census agrees with a direct recount of the top key") {
     val out = Diagnostics.keySkewCensus(events).cache()
     assert(out.count() === 10)
-    val top = out.filter(col("rank") === 1).head
+    val top = out.filter(col("rank") === 1).head()
     val directTop = events.groupBy("user_id").count()
-      .orderBy(col("count").desc, col("user_id").asc).head
+      .orderBy(col("count").desc, col("user_id").asc).head()
     assert(top.getLong(1) === directTop.getLong(0)) // user_id
     assert(top.getLong(2) === directTop.getLong(1)) // cnt
   }
@@ -84,7 +84,7 @@ class DiagnosticsSpec extends SparkSpecBase {
 
   test("join-cardinality audit: exact term equals the real join size") {
     import org.apache.spark.sql.functions._
-    val r = Diagnostics.joinCardAudit(spark, sf).head
+    val r = Diagnostics.joinCardAudit(spark, sf).head()
     graft.core.Caches.releaseScratch(spark)
     val events = graft.core.Tables.events(spark, sf)
     val orders = graft.core.Tables.orders(spark, sf)

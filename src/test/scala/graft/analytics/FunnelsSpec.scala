@@ -20,7 +20,7 @@ class FunnelsSpec extends SparkSpecBase {
 
   test("funnel stages are monotone on the fixture corpus") {
     val r = Funnels.funnel(
-      graft.pipeline.EventsPipeline.silver(spark, sf)).head
+      graft.pipeline.EventsPipeline.silver(spark, sf)).head()
     val (users, v, c, p) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     assert(users >= v && v >= c && c >= p)
@@ -36,7 +36,7 @@ class FunnelsSpec extends SparkSpecBase {
       silverRow(4, 2, "purchase", 5), silverRow(5, 2, "view", 10),
       // u3: click(5) then view(10) then click never again: click must NOT count
       silverRow(6, 3, "click", 5), silverRow(7, 3, "view", 10)))
-    val r = Funnels.funnel(silver).head
+    val r = Funnels.funnel(silver).head()
     assert(r.getLong(0) === 3) // users
     assert(r.getLong(1) === 3) // all three viewed
     assert(r.getLong(2) === 1) // only u1's click is after a view
@@ -50,9 +50,9 @@ class FunnelsSpec extends SparkSpecBase {
     assert(out.filter(col("d1_retained") > col("cohort_users")).count() === 0)
     assert(out.filter(col("d7_retained") > col("cohort_users")).count() === 0)
     // every user belongs to exactly one cohort
-    val total = out.agg(sum("cohort_users")).head.getLong(0)
+    val total = out.agg(sum("cohort_users")).head().getLong(0)
     val users = graft.pipeline.EventsPipeline.silver(spark, sf)
-      .select(countDistinct(col("user_id"))).head.getLong(0)
+      .select(countDistinct(col("user_id"))).head().getLong(0)
     assert(total === users)
   }
 
@@ -99,7 +99,7 @@ class FunnelsSpec extends SparkSpecBase {
     val motifs = Funnels.motifCensus(silver)
     val perUser = silver.groupBy("user_id").count().collect()
       .map(r => math.max(0L, r.getLong(1) - 2)).sum
-    assert(motifs.agg(sum("n")).head.getLong(0) === perUser,
+    assert(motifs.agg(sum("n")).head().getLong(0) === perUser,
       "triple count must be n_events - 2 per user")
   }
 
@@ -208,10 +208,10 @@ class FunnelsSpec extends SparkSpecBase {
     out.filter(r => r.getLong(0) == r.getLong(1))
       .foreach(r => assert(r.getLong(4) === 1000000L, s"own-week NRR != 1: $r"))
     // total cents across cells == total cents in the 28-day window
-    val d0 = silver.agg(min(col("event_date"))).head.getDate(0).toString
+    val d0 = silver.agg(min(col("event_date"))).head().getDate(0).toString
     val total = silver
       .filter(datediff(col("event_date"), lit(d0)) < 28)
-      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)"))).head.getLong(0)
+      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)"))).head().getLong(0)
     assert(out.map(_.getLong(3)).sum === total, "cents not conserved")
   }
 

@@ -12,7 +12,7 @@ class GraphsSpec extends SparkSpecBase {
     val edges = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L)).toDF("u", "v")
-    val out = Graphs.triangleCensus(edges).head
+    val out = Graphs.triangleCensus(edges).head()
     assert(out.getAs[Long]("n_nodes") === 5L)
     assert(out.getAs[Long]("n_edges") === 7L)
     assert(out.getAs[Long]("n_triangles") === 4L)
@@ -26,7 +26,7 @@ class GraphsSpec extends SparkSpecBase {
       u <- 1 to n; v <- (u + 1) to n
       if (u * 7919 + v * 104729) % 5 == 0
     } yield (u.toLong, v.toLong)).toDF("u", "v")
-    val got = Graphs.triangleCensus(edges).head.getAs[Long]("n_triangles")
+    val got = Graphs.triangleCensus(edges).head().getAs[Long]("n_triangles")
     // brute force: every node triple with all three edges present
     val e = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def has(a: Long, b: Long) = e((a min b, a max b))
@@ -49,7 +49,7 @@ class GraphsSpec extends SparkSpecBase {
       assert(ws.zip(ws.tail).forall { case (a, b) => a >= b })
     }
     // spot-check one edge weight against the direct co-order count
-    val r = out.head
+    val r = out.head()
     val li = graft.core.Tables.lineitem(spark, sf)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     val direct = li.filter(col("pk") === r.getLong(0)).select("ok")
@@ -106,14 +106,14 @@ class GraphsSpec extends SparkSpecBase {
     import spark.implicits._
     // star K1,3: hub degree 3, leaves 1 — perfectly disassortative
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("u", "v")
-    val s = Graphs.degreeAssortativityOf(star).head
+    val s = Graphs.degreeAssortativityOf(star).head()
     assert(s.getAs[Long]("n_edges") === 3L)
     assert(s.getAs[Long]("r_num") === -s.getAs[Long]("r_den"))
     assert(s.getAs[Long]("r_den") > 0L)
     // path 1-2-3: degrees 1,2,1; directed pairs x=[1,2,2,1], y=[2,1,1,2]
     // n=4 Sx=6 Sxy=2*(2+2)=8 Sxx=10 → num=32-36=-4, den=40-36=4 → r=-1
     val path = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-    val p = Graphs.degreeAssortativityOf(path).head
+    val p = Graphs.degreeAssortativityOf(path).head()
     assert(p.getAs[Long]("r_num") === -4L)
     assert(p.getAs[Long]("r_den") === 4L)
   }
@@ -123,14 +123,14 @@ class GraphsSpec extends SparkSpecBase {
     // K5 (all degrees 4) + pendant chain 5-6-7: k=3 strips 6 and 7
     val g = (for { u <- 1L to 5L; v <- (u + 1) to 5L } yield (u, v)) ++
       Seq((5L, 6L), (6L, 7L))
-    val r = Graphs.kCoreCensusOf(g.toDF("u", "v"), k = 3, rounds = 3).head
+    val r = Graphs.kCoreCensusOf(g.toDF("u", "v"), k = 3, rounds = 3).head()
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((3L, 5L, 10L)))
     // path graph, k=2: each round only exposes the next endpoints —
     // one round is NOT enough, the cascade must iterate to empty
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("u", "v")
-    val p = Graphs.kCoreCensusOf(path, k = 2, rounds = 3).head
+    val p = Graphs.kCoreCensusOf(path, k = 2, rounds = 3).head()
     assert((p.getLong(1), p.getLong(2)) === ((0L, 0L)))
-    val oneRound = Graphs.kCoreCensusOf(path, k = 2, rounds = 1).head
+    val oneRound = Graphs.kCoreCensusOf(path, k = 2, rounds = 1).head()
     assert(oneRound.getLong(2) === 1L, "round 1 alone leaves the middle edge")
   }
 
@@ -241,7 +241,7 @@ class GraphsSpec extends SparkSpecBase {
   }
 
   test("assortativity on sf data: Cauchy-Schwarz bound and nonzero den") {
-    val r = Graphs.degreeAssortativity(spark, sf).head
+    val r = Graphs.degreeAssortativity(spark, sf).head()
     val (num, den) = (r.getAs[Long]("r_num"), r.getAs[Long]("r_den"))
     assert(den > 0L, "degenerate graph: all degrees equal")
     assert(math.abs(num) <= den, "correlation outside [-1, 1]")
@@ -379,7 +379,7 @@ class GraphsSpec extends SparkSpecBase {
     val census = Graphs.kCorePeelCensusOf(spark, star, k = 3, maxRounds = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(census === Seq((1L, 5L)), s"got $census")
-    val core = Graphs.kCoreCensusOf(star, k = 3, rounds = 8).head
+    val core = Graphs.kCoreCensusOf(star, k = 3, rounds = 8).head()
     assert((core.getLong(1), core.getLong(2)) === ((0L, 0L)),
       "hub must not survive as core mass")
     // and on the distributed path too

@@ -37,7 +37,7 @@ class HistorySpec extends SparkSpecBase {
   }
 
   test("interval order counts reconcile with the order log") {
-    assert(hist.agg(sum("n_orders")).head.getLong(0) === orders.count())
+    assert(hist.agg(sum("n_orders")).head().getLong(0) === orders.count())
   }
 
   test("property: intervals tile and reconcile for arbitrary order logs") {
@@ -56,7 +56,7 @@ class HistorySpec extends SparkSpecBase {
       val orders = rows
         .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate")
       val h = History.statusHistory(orders).cache()
-      assert(h.agg(sum("n_orders")).head.getLong(0) === rows.size.toLong)
+      assert(h.agg(sum("n_orders")).head().getLong(0) === rows.size.toLong)
       val opens = h.groupBy("o_custkey")
         .agg(sum(col("is_current").cast("long")).as("open"))
         .filter(col("open") =!= 1).count()

@@ -26,7 +26,7 @@ class ReportsSpec extends SparkSpecBase {
   }
 
   test("hourly activity percentages sum to 100") {
-    val total = Reports.hourlyActivity(silver).agg(sum("pct")).head.getDouble(0)
+    val total = Reports.hourlyActivity(silver).agg(sum("pct")).head().getDouble(0)
     assert(math.abs(total - 100.0) < 1e-9)
   }
 
@@ -121,10 +121,10 @@ class ReportsSpec extends SparkSpecBase {
     // cell total == corpus total (every event lands in exactly one cell)
     val cellSum = pivoted.select(
       Reports.EventTypes.map(t => sum(col(t))): _*)
-      .head.toSeq.map(_.asInstanceOf[Long]).sum
+      .head().toSeq.map(_.asInstanceOf[Long]).sum
     assert(cellSum === silver.count())
     // a spot cell equals the direct filtered count
-    val u = pivoted.head
+    val u = pivoted.head()
     val direct = silver.filter(col("user_id") === u.getLong(0) &&
       col("event_type") === "click").count()
     assert(u.getAs[Long]("click") === direct)
@@ -133,7 +133,7 @@ class ReportsSpec extends SparkSpecBase {
   test("histogram buckets partition all non-null values within their bounds") {
     val silver = graft.pipeline.EventsPipeline.silver(spark, sf)
     val out = Reports.valueHistogram(silver).cache()
-    assert(out.agg(sum("n")).head.getLong(0) ===
+    assert(out.agg(sum("n")).head().getLong(0) ===
       silver.filter(col("value").isNotNull).count())
     // each regular bucket's seen range lies inside its [lo, hi) bounds
     val w = 200.0 / 20
@@ -148,7 +148,7 @@ class ReportsSpec extends SparkSpecBase {
     val out = Reports.userQuartiles(EventsPipeline.silver(spark, sf)).collect()
     assert(out.map(_.getAs[Long]("users")).sum ===
       graft.pipeline.EventsPipeline.silver(spark, sf)
-        .select(countDistinct(col("user_id"))).head.getLong(0))
+        .select(countDistinct(col("user_id"))).head().getLong(0))
     // ntile balance: sizes differ by at most one
     val sizes = out.map(_.getAs[Long]("users"))
     assert(sizes.max - sizes.min <= 1)
@@ -180,7 +180,7 @@ class ReportsSpec extends SparkSpecBase {
   test("unpivot inverts the pivot: long form ≡ counts, zero rows kept") {
     val silver = graft.pipeline.EventsPipeline.silver(spark, sf)
     val long = Reports.userTypeUnpivot(silver).cache()
-    val users = silver.select(countDistinct(col("user_id"))).head.getLong(0)
+    val users = silver.select(countDistinct(col("user_id"))).head().getLong(0)
     // dense matrix: exactly |users| × |types| rows
     assert(long.count() === users * Reports.EventTypes.size)
     // zero-count combos survive (crafted user with a single type: the
@@ -210,7 +210,7 @@ class ReportsSpec extends SparkSpecBase {
     // major map is a subset, and an all-minor user serializes as "{}"
     import spark.implicits._
     val tiny = Seq((7L, "click")).toDF("user_id", "event_type")
-    val t = Reports.userTypeMapProfile(tiny).head
+    val t = Reports.userTypeMapProfile(tiny).head()
     assert(t.getAs[String]("major_json") === "{}")
     assert(t.getAs[Int]("n_major_types") === 0)
     assert(out.filter(col("n_major_types") > col("n_types")).count() === 0)
@@ -339,13 +339,13 @@ class ReportsSpec extends SparkSpecBase {
       .agg(sum(col("a")).as("c1"), sum(lit(1L) - col("a")).as("c2"))
     val w = Window.orderBy(col("v_c").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val n1 = grid.agg(sum("c1")).head.getLong(0)
-    val n2 = grid.agg(sum("c2")).head.getLong(0)
+    val n1 = grid.agg(sum("c1")).head().getLong(0)
+    val n2 = grid.agg(sum("c2")).head().getLong(0)
     val naive = grid
       .withColumn("d", abs(lit(n2) * sum(col("c1")).over(w) -
         lit(n1) * sum(col("c2")).over(w)))
-      .agg(max("d")).head.getLong(0)
-    val out = Reports.ksDistance(silver).head
+      .agg(max("d")).head().getLong(0)
+    val out = Reports.ksDistance(silver).head()
     assert(out.getAs[Long]("n1") === n1)
     assert(out.getAs[Long]("n2") === n2)
     assert(out.getAs[Long]("ks_num") === naive)
@@ -361,12 +361,12 @@ class ReportsSpec extends SparkSpecBase {
     val same = (ev("click", Seq(1.0, 2.0, 3.0)) ++
       ev("purchase", Seq(1.0, 2.0, 3.0)))
       .toDF("event_id", "event_type", "value")
-    assert(Reports.ksDistance(same).head.getAs[Long]("ks_num") === 0L)
+    assert(Reports.ksDistance(same).head().getAs[Long]("ks_num") === 0L)
     // fully separated supports → D = 1 → ppm = 1e6
     val split = (ev("click", Seq(1.0, 2.0)) ++
       ev("purchase", Seq(10.0, 20.0)))
       .toDF("event_id", "event_type", "value")
-    assert(Reports.ksDistance(split).head.getAs[Long]("ks_ppm") === 1000000L)
+    assert(Reports.ksDistance(split).head().getAs[Long]("ks_ppm") === 1000000L)
   }
 
   test("l-diversity census: cells partition, l bounded by users") {

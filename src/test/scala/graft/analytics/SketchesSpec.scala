@@ -66,7 +66,7 @@ class SketchesSpec extends SparkSpecBase {
         .select((conv(substring(md5(concat(lit(s"$i#"), col("w"))), 1, 12), 16, 10)
           .cast("long") % 16).as("b"),
           col("w"))
-      val wb = bucket.filter(col("w") === word).select(col("b")).head.getLong(0)
+      val wb = bucket.filter(col("w") === word).select(col("b")).head().getLong(0)
       bucket.filter(col("b") === wb).count()
     }.min
     assert(out.head.getLong(2) === est, "min-over-rows read-back mismatch")

@@ -15,7 +15,7 @@ class StarQueriesSpec extends SparkSpecBase {
 
   test("customer share percentages sum to 100") {
     val total = StarQueries.customerShareByNation(spark, sf)
-      .agg(sum("pct")).head.getDouble(0)
+      .agg(sum("pct")).head().getDouble(0)
     assert(math.abs(total - 100.0) < 1e-9)
   }
 
@@ -23,12 +23,12 @@ class StarQueriesSpec extends SparkSpecBase {
     val out = StarQueries.ordersRollup(spark, sf)
     val grand = out.filter(col("o_year").isNull && col("o_orderpriority").isNull)
     assert(grand.count() === 1)
-    assert(grand.head.getAs[Long]("cnt") === 1500)
+    assert(grand.head().getAs[Long]("cnt") === 1500)
   }
 
   test("semi + anti partition the customer table") {
     val withOrders = StarQueries.segmentsWithOrders(spark, sf)
-      .agg(sum("customers_with_orders")).head.getLong(0)
+      .agg(sum("customers_with_orders")).head().getLong(0)
     val without = StarQueries.customersWithoutOrders(spark, sf).count()
     assert(withOrders + without === 150)
   }
@@ -65,13 +65,13 @@ class StarQueriesSpec extends SparkSpecBase {
     def gini(counts: Seq[(Long, Int)]): Long = {
       val silver = counts.flatMap { case (u, k) => Seq.fill(k)(u) }
         .toDF("user_id").withColumn("event_type", lit("play"))
-      StarQueries.giniPpm(spark, silver).head.getAs[Long]("gini_ppm")
+      StarQueries.giniPpm(spark, silver).head().getAs[Long]("gini_ppm")
     }
     assert(gini(Seq(1L -> 4, 2L -> 4, 3L -> 4, 4L -> 4)) === 0L)
     // one user holds everything: G = (n-1)/n = 0.75
     assert(gini(Seq(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 97)) > 600000L)
     val sfG = StarQueries.giniPpm(spark,
-      graft.pipeline.EventsPipeline.silver(spark, sf)).head.getAs[Long]("gini_ppm")
+      graft.pipeline.EventsPipeline.silver(spark, sf)).head().getAs[Long]("gini_ppm")
     assert(sfG >= 0L && sfG < 1000000L)
   }
 
@@ -196,7 +196,7 @@ class StarQueriesSpec extends SparkSpecBase {
     val o = graft.core.Tables.orders(spark, sf)
     assert(out.map(_.getLong(2)).sum === o.count())
     val cents = o.select(
-      sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))).head.getLong(0)
+      sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))).head().getLong(0)
     assert(out.map(_.getLong(3)).sum === cents)
     out.foreach(r => assert(r.getInt(1) >= 0, s"negative age: $r"))
   }
@@ -224,7 +224,7 @@ class StarQueriesSpec extends SparkSpecBase {
   }
 
   test("rank agreement: pair classes partition k(k-1)/2, tau_num consistent") {
-    val r = StarQueries.rankAgreement(spark, sf).head
+    val r = StarQueries.rankAgreement(spark, sf).head()
     val (k, nPairs, c, d, t, tau) = (r.getLong(0), r.getLong(1),
       r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
     assert(k === 50L && nPairs === 50L * 49 / 2)
@@ -257,7 +257,7 @@ class StarQueriesSpec extends SparkSpecBase {
     val c = graft.core.Tables.customer(spark, sf)
     val total = o.join(c, o("o_custkey") === c("c_custkey"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")))
-      .head.getLong(0)
+      .head().getLong(0)
     assert(out.map(_.getLong(2)).sum === total)
   }
 }

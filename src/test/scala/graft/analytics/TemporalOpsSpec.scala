@@ -53,7 +53,7 @@ class TemporalOpsSpec extends SparkSpecBase {
 
   test("sessions: per-user event counts reconcile; gaps within session bounded") {
     val sessions = TemporalOps.sessionize(silver)
-    val total = sessions.agg(sum("n_events")).head.getLong(0)
+    val total = sessions.agg(sum("n_events")).head().getLong(0)
     assert(total === silver.count())
     // session numbering is dense from 1
     val bad = sessions.groupBy("user_id")

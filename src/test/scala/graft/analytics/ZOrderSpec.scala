@@ -48,7 +48,7 @@ class ZOrderSpec extends SparkSpecBase {
       .write.mode("overwrite").parquet(kDir)
 
     val (pLo, pHi) = {
-      val mm = li.agg(min("l_partkey"), max("l_partkey")).head
+      val mm = li.agg(min("l_partkey"), max("l_partkey")).head()
       (mm.getLong(0), mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 8)
     }
     def box(df: DataFrame) = df.filter(

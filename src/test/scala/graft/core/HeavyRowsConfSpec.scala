@@ -10,11 +10,6 @@ class HeavyRowsConfSpec extends SparkSpecBase {
 
   private val Docs = "spark.graft.scan.heavyRows.documents"
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    spark.conf.set(key, value)
-    try body finally spark.conf.unset(key)
-  }
-
   test("the per-table key overrides only its table's built-in quantum") {
     assert(Tables.heavyQuantum(spark, "documents", 300L) === 300L)
     withConf(Docs, "70") {

@@ -17,7 +17,7 @@ class ShardSpec extends SparkSpecBase {
   private def blockPairs(df: DataFrame, keys: String*): Long =
     df.groupBy((keys :+ "subshard").map(col): _*).count()
       .agg(coalesce(sum(expr("count * (count - 1) div 2")), lit(0L)))
-      .head.getLong(0)
+      .head().getLong(0)
 
   test("200 docs under one key split into ceil(200/Cap) = 4 subshards") {
     val df = spark.range(200).select(col("id").as("doc_id"), lit(7L).as("k"))

@@ -26,7 +26,7 @@ class IntersectCountSpec extends SparkSpecBase with TableDrivenPropertyChecks {
     val nullDf = Seq((Seq(1L, 2L), null: Seq[java.lang.Long])).toDF("a", "b")
     val r = nullDf.select(
       size(array_intersect(col("a"), col("b"))).as("builtin"),
-      call_function("graft_intersect_count", col("a"), col("b")).as("fused")).head
+      call_function("graft_intersect_count", col("a"), col("b")).as("fused")).head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
 
@@ -71,7 +71,7 @@ class IntersectCountSpec extends SparkSpecBase with TableDrivenPropertyChecks {
     val census = graft.analytics.Graphs.coPurchaseTriangles(spark, sf)
     val optimized = census.queryExecution.optimizedPlan.toString
     assert(optimized.contains("graft_intersect_count"))
-    assert(census.head.getAs[Long]("n_triangles") > 0)
+    assert(census.head().getAs[Long]("n_triangles") > 0)
     graft.core.Caches.releaseScratch(spark)
   }
 }

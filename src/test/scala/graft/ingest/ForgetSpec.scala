@@ -29,7 +29,7 @@ class ForgetSpec extends SparkSpecBase {
   test("audit is complete and reconciles with the deletion set") {
     val audit = Forget.forgetAudit(spark, sf).cache()
     assert(audit.filter(!col("complete")).count() === 0)
-    val removed = audit.agg(sum("rows_removed")).head.getLong(0)
+    val removed = audit.agg(sum("rows_removed")).head().getLong(0)
     val direct = EventsPipeline.silver(spark, sf)
       .filter(col("user_id") % Forget.DeleteMod === 0).count()
     assert(removed === direct)

@@ -70,4 +70,16 @@ class LedgerSpec extends SparkSpecBase {
     assert(run() === 0)
     assert(seen.size === 5)
   }
+
+  test("reading an existing ledger submits no job: its schema is declared") {
+    val in = tmpDir("ledger-read-in-")
+    val ledger = tmpDir("ledger-read-") + "/ledger"
+    Files.write(Paths.get(in, "a.json"), "{\"x\":1}".getBytes)
+    assert(Ledger.ingestTick(spark, in, ledger)(_ => ()) === 1)
+    // parquet schema inference would run one job over the footers
+    val (df, jobs) = jobsDuring(Ledger.readLedger(spark, ledger))
+    assert(jobs === 0)
+    assert(df.schema === org.apache.spark.sql.types.StructType.fromDDL(Ledger.LedgerSchema))
+    assert(df.count() === 1)
+  }
 }

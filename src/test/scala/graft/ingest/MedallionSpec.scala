@@ -15,7 +15,7 @@ class MedallionSpec extends SparkSpecBase {
     val bronzeCnt = spark.read.parquet(s"$out/bronze").count()
     val silverCnt = spark.read.parquet(s"$out/silver").count()
     val goldSum = spark.read.parquet(s"$out/gold")
-      .agg(sum("listen_count")).head.getLong(0)
+      .agg(sum("listen_count")).head().getLong(0)
     assert(bronzeCnt === 1000)
     assert(silverCnt <= bronzeCnt)
     assert(goldSum === silverCnt)

@@ -151,8 +151,8 @@ class CurationSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     // total packed tokens == total corpus tokens (nothing dropped)
     val total = Curation.tokenCounts(Tables.documents(spark, sf))
-      .agg(sum(col("ws_tokens"))).head.getLong(0)
-    assert(out.agg(sum(col("n_tokens"))).head.getLong(0) === total)
+      .agg(sum(col("ws_tokens"))).head().getLong(0)
+    assert(out.agg(sum(col("n_tokens"))).head().getLong(0) === total)
     out.collect().groupBy(_.getString(0)).foreach { case (_, rows) =>
       val byChunk = rows.sortBy(_.getAs[Long]("chunk_id"))
       // chunk ids dense from 0 (the stream is tiled, no holes)
@@ -174,8 +174,8 @@ class CurationSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val out = Curation.packGreedy(Tables.documents(spark, sf)).cache()
     // nothing lost: token totals match the stream packing's
-    assert(out.agg(sum("n_tokens")).head.getLong(0) ===
-      Curation.packSequences(Tables.documents(spark, sf)).agg(sum("n_tokens")).head.getLong(0))
+    assert(out.agg(sum("n_tokens")).head().getLong(0) ===
+      Curation.packSequences(Tables.documents(spark, sf)).agg(sum("n_tokens")).head().getLong(0))
     // a chunk over budget can only be a single oversized doc
     assert(out.filter(col("n_tokens") > 512 && col("n_docs") > 1).count() === 0)
     // padding accounting
@@ -212,8 +212,8 @@ class CurationSpec extends SparkSpecBase {
     val docs = graft.core.Tables.documents(spark, sf)
     val out = Curation.packGreedyGrouped(Tables.documents(spark, sf)).cache()
     // conservation: same token total as the other packing spellings
-    assert(out.agg(sum("n_tokens")).head.getLong(0) ===
-      Curation.packSequences(Tables.documents(spark, sf)).agg(sum("n_tokens")).head.getLong(0))
+    assert(out.agg(sum("n_tokens")).head().getLong(0) ===
+      Curation.packSequences(Tables.documents(spark, sf)).agg(sum("n_tokens")).head().getLong(0))
     // budget respected except single oversized docs
     assert(out.filter(col("n_tokens") > 512 && col("n_docs") > 1).count() === 0)
     // each group holds at most groupDocs docs and a group of g docs can
@@ -432,7 +432,7 @@ class CurationSpec extends SparkSpecBase {
     // relative error; 40% is the same 3-sigma-ish bound the KMV spec uses.
     val est = out.map(_.getLong(5)).sum
     val truth = graft.core.Tables.documents(spark, sf)
-      .agg(sum(col("n_chars"))).head.getLong(0)
+      .agg(sum(col("n_chars"))).head().getLong(0)
     val errPpm = math.abs(est - truth) * 1000000L / truth
     assert(errPpm <= 400000L, s"estimate $est vs truth $truth (err $errPpm ppm)")
     // deterministic: no RNG state, same sample every run

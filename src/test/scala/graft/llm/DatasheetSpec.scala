@@ -17,7 +17,7 @@ class DatasheetSpec extends SparkSpecBase {
       docs.select("source").distinct().count())
     assert(m("03_langs") === docs.select("lang").distinct().count())
     assert(m("04_chars_total") ===
-      docs.agg(sum(col("n_chars"))).head.getLong(0))
+      docs.agg(sum(col("n_chars"))).head().getLong(0))
     assert(m("07_tokens_per_doc_ppm") ===
       m("05_tokens_total") * 1000000L / m("01_docs"))
     assert(m("06_vocab_size") <= m("05_tokens_total"))

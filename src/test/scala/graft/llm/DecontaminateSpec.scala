@@ -53,7 +53,7 @@ class DecontaminateSpec extends SparkSpecBase {
         (col("boilerplate_ratio") > Decontaminate.BoilerplateHeavyRatio))
       .count() === 0)
     // a threshold of 5% docs must flag SOMETHING in a small-vocab corpus
-    assert(out.agg(sum("boilerplate_2grams")).head.getLong(0) > 0)
+    assert(out.agg(sum("boilerplate_2grams")).head().getLong(0) > 0)
   }
 
   test("source overlap: a cloned source scores jaccard 1 against its twin") {

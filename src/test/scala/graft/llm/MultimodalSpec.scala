@@ -196,14 +196,14 @@ class MultimodalSpec extends SparkSpecBase {
     val docs = (1L to 200L).map(i => (i, text)).toDF("doc_id", "text")
     val bands = Multimodal.phashBands(docs)
     val maxShard = bands.groupBy("b", "bv", "subshard").count()
-      .agg(org.apache.spark.sql.functions.max("count")).head.getLong(0)
+      .agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
     // hash-mod sharding is uneven but each shard must stay well under
     // the un-capped bucket size; the PAIR bound is what matters
     val pairBound = 200L * 4 * (Shard.Cap - 1) / 2
     val candPairs = bands.groupBy("b", "bv", "subshard").count()
       .agg(org.apache.spark.sql.functions
         .sum(org.apache.spark.sql.functions.expr("count * (count - 1) div 2")))
-      .head.getLong(0)
+      .head().getLong(0)
     assert(candPairs <= pairBound,
       s"candidate pairs $candPairs exceed the linear bound $pairBound")
     assert(maxShard < 200L, "subsharding did not split the oversized bucket")

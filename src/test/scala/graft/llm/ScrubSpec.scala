@@ -26,10 +26,10 @@ class ScrubSpec extends SparkSpecBase {
 
   test("audit totals reconcile with row-level counts") {
     val audit = Scrub.redactionAudit(events)
-    val total = audit.agg(sum("total_redactions")).head.getLong(0)
+    val total = audit.agg(sum("total_redactions")).head().getLong(0)
     val rowTotal = Scrub.redact(events)
-      .agg(sum("n_redactions")).head.getLong(0)
+      .agg(sum("n_redactions")).head().getLong(0)
     assert(total === rowTotal)
-    assert(audit.agg(sum("events")).head.getLong(0) === events.count())
+    assert(audit.agg(sum("events")).head().getLong(0) === events.count())
   }
 }

@@ -41,7 +41,7 @@ class SimilaritySpec extends SparkSpecBase {
 
   test("label consistency over the corpus: conservation and bounds") {
     val out = Similarity.labelConsistency(emb).cache()
-    assert(out.agg(sum("n_vecs")).head.getLong(0) === emb.count())
+    assert(out.agg(sum("n_vecs")).head().getLong(0) === emb.count())
     graft.core.Caches.releaseScratch(spark)
     val bad = out.filter(col("agreement_ppm") > 1000000 ||
       col("n_suspect") > col("n_vecs") || col("n_isolated") > col("n_vecs"))
@@ -141,7 +141,7 @@ class SimilaritySpec extends SparkSpecBase {
   test("cluster profile: every vector assigned once, purity bounded") {
     val out = Similarity.clusterProfile(emb).cache()
     assert(out.agg(org.apache.spark.sql.functions.sum("n_vectors"))
-      .head.getLong(0) === emb.count())
+      .head().getLong(0) === emb.count())
     val rows = out.collect()
     assert(rows.forall(r => r.getAs[Long]("purity_bps") >= 0 &&
       r.getAs[Long]("purity_bps") <= 10000))

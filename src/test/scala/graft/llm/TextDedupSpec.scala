@@ -483,7 +483,7 @@ class TextDedupSpec extends SparkSpecBase {
   }
 
   test("dedup recall audit: verified LSH pairs are a subset of exact ground truth") {
-    val r = TextDedup.dedupRecallAudit(spark, sf).head
+    val r = TextDedup.dedupRecallAudit(spark, sf).head()
     graft.core.Caches.releaseScratch(spark)
     val (nExact, nCand, nVer, nHits, recall, prec) = (r.getLong(0),
       r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))

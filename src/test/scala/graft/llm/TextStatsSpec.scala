@@ -19,7 +19,7 @@ class TextStatsSpec extends SparkSpecBase {
 
   test("corpus stats: doc totals reconcile with the corpus") {
     val out = TextStats.corpusStats(docs)
-    val total = out.agg(sum("docs")).head.getLong(0)
+    val total = out.agg(sum("docs")).head().getLong(0)
     assert(total === docs.count())
   }
 

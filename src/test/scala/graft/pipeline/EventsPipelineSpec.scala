@@ -24,7 +24,7 @@ class EventsPipelineSpec extends SparkSpecBase {
   test("silver dedup is idempotent") {
     val silver = EventsPipeline.silver(spark, sf)
     val bronzeCols = EventsPipeline.bronze(spark, sf).columns.map(col)
-    val again = EventsPipeline.silverOf(silver.select(bronzeCols: _*))
+    val again = EventsPipeline.silverOf(silver.select(bronzeCols.toIndexedSeq: _*))
     assert(again.count() === silver.count())
     assert(again.select("event_id").except(silver.select("event_id")).count() === 0)
   }
@@ -32,7 +32,7 @@ class EventsPipelineSpec extends SparkSpecBase {
   test("gold top-3 days is a subset of gold daily with <=3 rows per user") {
     val daily = EventsPipeline.goldDaily(spark, sf)
     val top3 = EventsPipeline.goldTop3Days(spark, sf)
-    val perUser = top3.groupBy("user_id").count().agg(max("count")).head.getLong(0)
+    val perUser = top3.groupBy("user_id").count().agg(max("count")).head().getLong(0)
     assert(perUser <= 3)
     assert(top3.join(daily, Seq("user_id", "event_date"), "left_anti").count() === 0)
   }
@@ -40,7 +40,7 @@ class EventsPipelineSpec extends SparkSpecBase {
   test("gold daily counts reconcile with silver") {
     val silverCnt = EventsPipeline.silver(spark, sf).count()
     val goldSum = EventsPipeline.goldDaily(spark, sf)
-      .agg(sum("listen_count")).head.getLong(0)
+      .agg(sum("listen_count")).head().getLong(0)
     assert(goldSum === silverCnt)
   }
 

@@ -45,7 +45,7 @@ class PipelinePropertiesSpec extends SparkSpecBase {
     for (evs <- batches) {
       val bronze = bronzeOf(evs)
       val once = EventsPipeline.silverOf(bronze)
-      val twice = EventsPipeline.silverOf(once.select(bronze.columns.map(col): _*))
+      val twice = EventsPipeline.silverOf(once.select(bronze.columns.toIndexedSeq.map(col): _*))
       assert(once.count() === twice.count())
       val collisions = once
         .groupBy(col("user_id"), date_trunc("second", col("ts")))
@@ -60,7 +60,7 @@ class PipelinePropertiesSpec extends SparkSpecBase {
       val daily = EventsPipeline.goldDailyOf(silver)
       val top = EventsPipeline.goldTop3DaysOf(silver)
       val maxPerUser = top.groupBy("user_id").count()
-        .agg(coalesce(max("count"), lit(0L))).head.getLong(0)
+        .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
       assert(maxPerUser <= 3)
       assert(top.join(daily, Seq("user_id", "event_date"), "left_anti").count() === 0)
     }
