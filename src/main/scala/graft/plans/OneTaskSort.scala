@@ -11,8 +11,8 @@ import org.apache.spark.sql.internal.SQLConf
   * `SinglePartition`, which satisfies the sort's `OrderedDistribution`, so
   * `EnsureRequirements` adds no range exchange: no `RangePartitioner`
   * sampling job, no shuffle write and no shuffle read. Every report ends
-  * in a global `orderBy`, and at report sizes those two extra jobs were
-  * most of a visit's scheduling.
+  * in a global `orderBy`; over the persisted silver, the sampling job and
+  * the shuffle stage were two of such a report's three jobs.
   *
   * The bound is Spark's own advisory partition size, not a new knob: at or
   * under it AQE would coalesce the range shuffle's reducers into one
