@@ -47,7 +47,9 @@ object Sessions {
       }
       // planner strategies (idempotent adds): the as-of join physical
       // operator, and small global sorts planned as one task with no
-      // range-sampling job and no range shuffle
+      // range-sampling job and no range shuffle (only where AQE would
+      // coalesce the sort's shuffle to one reducer: `local` below sets
+      // parallelismFirst=false; Spark's default keeps the range exchange)
       for (s <- Seq(graft.plans.AsOfJoinStrategy, graft.plans.OneTaskSort)
            if !spark.experimental.extraStrategies.contains(s)) {
         spark.experimental.extraStrategies =

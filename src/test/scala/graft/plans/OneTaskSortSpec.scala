@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
@@ -14,7 +14,9 @@ import graft.pipeline.EventsPipeline
 /** [[OneTaskSort]]: a global sort under the advisory partition size runs
   * in one task with no range exchange; above it the range exchange stays
   * and the rows come back in the same order. sf0.001 never crosses the
-  * 8m bound, so the control lowers the bound to one byte. */
+  * 8m bound, so the control lowers the bound to one byte. Where AQE would
+  * keep several reducers (`parallelismFirst=true`, Spark's default) the
+  * range exchange stays too. */
 class OneTaskSortSpec extends SparkSpecBase {
 
   /** q15 over the persisted silver, built fresh per visit. */
@@ -47,11 +49,11 @@ class OneTaskSortSpec extends SparkSpecBase {
     assert(jobs === 1)
   }
 
-  test("above the advisory size the range exchange stays, with the same rows in order") {
-    val small = q15().collect().toSeq
+  /** Runs q15 with `key` set to `value`: the plan keeps exactly one range
+    * exchange, plans no coalesce, and returns the rows. */
+  private def q15KeepsRangeExchange(key: String, value: String): Seq[Row] = {
     val df = q15()
-    val large = withConf(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")(df.collect().toSeq)
+    val rows = withConf(key, value)(df.collect().toSeq)
     val nodes = planNodes(df)
     assert(nodes.count {
       case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RangePartitioning]
@@ -59,15 +61,17 @@ class OneTaskSortSpec extends SparkSpecBase {
     } === 1,
       s"expected the orderBy range exchange in:\n${df.queryExecution.executedPlan}")
     assert(!nodes.exists(_.isInstanceOf[CoalesceExec]))
+    rows
+  }
+
+  test("above the advisory size the range exchange stays, with the same rows in order") {
+    val small = q15().collect().toSeq
+    val large = q15KeepsRangeExchange("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
     assert(small.nonEmpty)
     assert(large === small)
   }
 
-  test("orderBy + limit is still a TakeOrderedAndProject") {
-    val df = Reports.topUsers(EventsPipeline.silver(spark, sf))
-    val nodes = planNodes(df)
-    val plan = df.queryExecution.executedPlan
-    assert(nodes.exists(_.isInstanceOf[TakeOrderedAndProjectExec]), s"in:\n$plan")
-    assert(!nodes.exists(_.isInstanceOf[CoalesceExec]), s"in:\n$plan")
+  test("with Spark's default parallelismFirst the range exchange stays") {
+    q15KeepsRangeExchange("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
   }
 }
