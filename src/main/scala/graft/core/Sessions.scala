@@ -80,7 +80,21 @@ object Sessions {
     * driver's own JVM, so all it adds is job and stage scheduling — one
     * job per `user_name`-partitioned bronze directory on every read.
     * Sessions handed in by a cluster driver ([[ensure]]) keep Spark's
-    * default, where parallel listing does help on object stores. */
+    * default, where parallel listing does help on object stores.
+    *
+    * The `file:` FileSystem and FileContext are [[NoForkLocalFileSystem]]
+    * and [[NoForkLocalFs]]. Without the native Hadoop library, stock
+    * `RawLocalFileSystem` forks `chmod` for every file, `.crc` file and
+    * directory it creates, and `readlink` for every `FileContext`
+    * rename. One `perfbench` `ingest` run (`tools/forks.py`, 4 cores)
+    * forked about 270 `chmod` and 34 `readlink` per tick with the stock
+    * classes and none of either with these. Every local write is
+    * affected: the bronze batch and stream sinks, silver/gold, the
+    * ledger, checkpoint and commit logs. Driver-supplied sessions
+    * ([[ensure]]) keep Hadoop's defaults. Like every `spark.hadoop.*`
+    * key these bind only when this builder creates the JVM's first
+    * SparkContext, and a `file:` FileSystem cached in the JVM before that
+    * stays the stock one; `LocalFsSpec` checks the test session's. */
   def local(cpus: Int, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -106,6 +120,10 @@ object Sessions {
       // serial listing: see the scaladoc above
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)
+      // fork-free file: FileSystem and FileContext: see the scaladoc above
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NoForkLocalFs].getName)
       // the generated-class cache defaults to 100 entries; a session
       // running the whole 150+-query surface holds far more codegen
       // units than that, and evictions mean re-Janino-compiling hot

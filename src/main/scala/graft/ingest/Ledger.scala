@@ -105,8 +105,9 @@ object Ledger {
     // Stage 2: hash ONLY the fresh paths — collected ONCE so content is
     // read exactly once — then a content anti-join (over the in-memory
     // snapshot) drops renamed copies of bytes the ledger has already seen.
-    val hashedSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "content_hash STRING, path STRING, length LONG, modification_time TIMESTAMP")
+    val hashedSchema = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.types.StructType.fromDDL(LedgerSchema)
+        .filterNot(_.name == "processed_at"))
     val hashedRows = hashPaths(spark, freshPaths).collect() // bounded: maxFilesPerTick
     val hashedDf = spark.createDataFrame(
       java.util.Arrays.asList(hashedRows: _*), hashedSchema)

@@ -203,10 +203,7 @@ class PlanAuditSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     // no broadcast: at sf0.001 the arms are small enough to broadcast,
     // which would hide the shuffle join every larger corpus gets
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val was = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       val plan = physical(uncached(
         graft.llm.TextDedup.ngramJaccardDups(Tables.documents(spark, sf))))
       def onCache(p: SparkPlan): Boolean = p match {
@@ -221,13 +218,7 @@ class PlanAuditSpec extends SparkSpecBase {
       assert(joins.size === 1, s"expected one shingle-keyed self-join in:\n$plan")
       assert(joins.head.children.forall(onCache),
         s"an Exchange sits between the shingle self-join and its cache:\n$plan")
-    } finally {
-      was match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      graft.core.Caches.releaseScratch(spark)
-    }
+    } finally graft.core.Caches.releaseScratch(spark)
   }
 
   test("q298 dedup sweep: one (wsize, gram) exchange feeds the distinct, the count and the join") {
@@ -342,9 +333,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // a real dim-side FILTER predicate (LIMIT does not qualify), and the
     // stats heuristic relaxed — tiny fixtures have no size benefit to
     // detect, which is the thing being measured at real scale anyway
-    val prev = spark.conf.getOption("spark.sql.optimizer.dynamicPartitionPruning.useStats")
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    try {
+    withConf("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false") {
       val dim = silver.select(col("user_id").as("uid")).distinct()
         .filter(col("uid") % 7 === 0)
       val joined = fact.join(dim, fact("user_id") === dim("uid"))
@@ -353,11 +342,6 @@ class PlanAuditSpec extends SparkSpecBase {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("dynamicpruning") || plan.contains("DynamicPruning"),
         s"no dynamic partition pruning in:\n$plan")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", v)
-        case None => spark.conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
-      }
     }
   }
 

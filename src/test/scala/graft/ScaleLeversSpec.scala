@@ -12,17 +12,6 @@ import graft.core.Tables
   */
 class ScaleLeversSpec extends SparkSpecBase {
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the skewed partition of a hot-key sort-merge join") {
     import spark.implicits._
     withConfs(

@@ -28,6 +28,17 @@ trait SparkSpecBase extends AnyFunSuite {
     }
   }
 
+  /** [[withConf]] for several confs, the first outermost. */
+  def withConfs[T](kvs: (String, String)*)(body: => T): T = kvs match {
+    case Seq() => body
+    case (k, v) +: rest => withConf(k, v)(withConfs(rest: _*)(body))
+  }
+
+  /** `body` on the RocksDB state store provider. */
+  def withRocksDB[T](body: => T): T = withConf(
+    "spark.sql.streaming.stateStore.providerClass",
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
   /** `body`'s result and the jobs submitted from this thread while it runs
     * (job group tagged, so jobs of anything else sharing the session are
     * not counted). */

@@ -16,20 +16,6 @@ import graft.SparkSpecBase
   */
 class RocksDBStateSpec extends SparkSpecBase {
 
-  private val RocksDB =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDB[A](body: => A): A = {
-    val prior = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDB)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   private def docStream(rows: Long, rowsPerBatch: Long) =
     spark.readStream.format("graft-docs")
       .option("rows", rows).option("rowsPerBatch", rowsPerBatch)

@@ -14,20 +14,6 @@ import graft.SparkSpecBase
   * TimerSessionize checkpoint gives each user's still-open session. */
 class StateInspectSpec extends SparkSpecBase {
 
-  private val RocksDB =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDB[A](body: => A): A = {
-    val prior = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDB)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   test("dedup seen-state is readable offline with hashes and survivors") {
     withRocksDB {
       val in = tmpDir("sinspect-in-")

@@ -17,20 +17,6 @@ import graft.llm.TextDedup
   * bounds state deterministically. */
 class StreamNearDedupSpec extends SparkSpecBase {
 
-  private val RocksDB =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDB[A](body: => A): A = {
-    val prior = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDB)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   private val inSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
   private val outSchema = StructType(Seq(

@@ -15,20 +15,6 @@ import graft.SparkSpecBase
   * and restarts. */
 class StreamProfileSpec extends SparkSpecBase {
 
-  private val RocksDB =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDB[A](body: => A): A = {
-    val prior = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDB)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   private val inSchema = StructType(Seq(
     StructField("user_id", LongType), StructField("event_id", LongType),
     StructField("event_type", StringType), StructField("ts_ms", LongType)))
