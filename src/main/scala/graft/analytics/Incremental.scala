@@ -116,12 +116,8 @@ object Incremental {
     * event_id % 3 == 0, with users ending in 0 as deletes. */
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     val silver = EventsPipeline.silver(spark, dir)
-    def gold(df: DataFrame): DataFrame =
-      df.groupBy(col("user_id"), col("event_date"))
-        .agg(count(lit(1)).as("listen_count"),
-          countDistinct(col("event_type")).as("unique_types"))
-    val target = gold(silver.filter(col("event_id") % 3 =!= 0))
-    val changes = gold(silver.filter(col("event_id") % 3 === 0))
+    val target = EventsPipeline.goldDailyOf(silver.filter(col("event_id") % 3 =!= 0))
+    val changes = EventsPipeline.goldDailyOf(silver.filter(col("event_id") % 3 === 0))
       .withColumn("op",
         when(col("user_id") % 10 === 0, lit("delete")).otherwise(lit("upsert")))
     target.as("t")

@@ -1,9 +1,10 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.pipeline.Tiers
 
 /** Reference-faithful ingest of ListenBrainz NDJSON listen events
   * (SURVEY §1.2, §2.1 S1/S4/S6/S9; reference src/jobs/ingest_job.py:51-93).
@@ -46,8 +47,13 @@ object ListenIngest {
 
   val CorruptCol = "_corrupt"
 
-  private def withCorrupt(schema: StructType): StructType =
-    schema.add(StructField(CorruptCol, StringType))
+  /** The batch ([[readRaw]]) and stream (`StreamingIngest.rawStream`)
+    * listen readers' schema, and the options of every NDJSON reader. */
+  val rawSchema: StructType = listenSchema.add(StructField(CorruptCol, StringType))
+  val rawOptions: Map[String, String] = Map(
+    "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> CorruptCol,
+    "pathGlobFilter" -> "*.{txt,json}")
 
   /** S1 + S4 + S9: NDJSON scan with explicit schema, PERMISSIVE corrupt
     * handling, and the .txt/.json extension predicate. The parsed batch is
@@ -59,12 +65,7 @@ object ListenIngest {
     * operator-local caches via [[graft.core.Caches.releaseScratch]]. */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     graft.core.Caches.scratch(
-      spark.read
-        .schema(withCorrupt(listenSchema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CorruptCol)
-        .option("pathGlobFilter", "*.{txt,json}")
-        .json(path))
+      spark.read.schema(rawSchema).options(rawOptions).json(path))
 
   /** Bronze flatten (reference ingest_job.py:72-86): project the nested
     * struct to flat columns, cast, derive the partition date. Corrupt rows
@@ -100,43 +101,13 @@ object ListenIngest {
       .mode("overwrite")
       .parquet(outDir)
 
-  /** Silver (reference transform_job.py:75-95): timestamp enrichment +
-    * window dedup on (user_name, listened_at). The reference's ORDER BY
-    * equals its PARTITION BY — nondeterministic survivor; we break ties on
-    * recording_msid (SURVEY §7.4.1). */
-  def silver(bronzeDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_name", "listened_at")
-      .orderBy(col("recording_msid").asc)
-    bronzeDf
-      .withColumn("listened_datetime", timestamp_seconds(col("listened_at")))
-      .withColumn("year", year(col("listened_datetime")))
-      .withColumn("month", month(col("listened_datetime")))
-      .withColumn("day", dayofmonth(col("listened_datetime")))
-      .withColumn("hour", hour(col("listened_datetime")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
+  /** Silver, gold daily and top-3 days of [[graft.pipeline.Tiers.listen]];
+    * silver first turns the epoch-seconds `listened_at` into a timestamp. */
+  def silver(bronzeDf: DataFrame): DataFrame =
+    Tiers.listen.silver(
+      bronzeDf.withColumn("listened_datetime", timestamp_seconds(col("listened_at"))))
 
-  /** Gold (reference transform_job.py:106-120 + daily_job.py:37-46):
-    * per-user-per-day aggregate with the canonical `listen_count` name
-    * (SURVEY §7.4.2 — the reference emits `count` in one job and
-    * `listen_count` in another; we standardize and keep the tolerant read
-    * in Medallion). */
-  def goldDaily(silverDf: DataFrame): DataFrame =
-    silverDf
-      .groupBy(col("user_name"), col("listened_date"))
-      .agg(
-        count(lit(1)).as("listen_count"),
-        countDistinct(col("track_name")).as("unique_tracks"),
-        countDistinct(col("artist_name")).as("unique_artists"))
+  def goldDaily(silverDf: DataFrame): DataFrame = Tiers.listen.goldDaily(silverDf)
 
-  def goldTop3Days(goldDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_name")
-      .orderBy(col("listen_count").desc, col("listened_date").asc)
-    goldDf
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .drop("rnk")
-  }
+  def goldTop3Days(goldDf: DataFrame): DataFrame = Tiers.listen.top3Days(goldDf)
 }

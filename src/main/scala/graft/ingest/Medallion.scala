@@ -150,25 +150,19 @@ object Medallion {
         col("user_id"), col("event_type"), col("value"), col("props"))
       .write.mode("overwrite").json(outDir)
 
-  /** S1: schema'd PERMISSIVE NDJSON scan of event files. */
+  /** S1: schema'd PERMISSIVE NDJSON scan of event files, with the listen
+    * readers' options. */
   def readEventsNdjson(spark: SparkSession, inDir: String): DataFrame =
     Sessions.ensure(spark).read
-      .schema(eventNdjsonSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .option("pathGlobFilter", "*.json")
-      .json(inDir)
+      .schema(eventNdjsonSchema).options(ListenIngest.rawOptions).json(inDir)
 
-  /** Valid NDJSON rows flattened to the bronze shape (q10 contract). */
+  /** Valid NDJSON rows flattened to the bronze shape without `ts` (q10
+    * contract), through the events bronze flatten. */
   def bronzeFromNdjson(ndjson: DataFrame): DataFrame =
-    ndjson
+    EventsPipeline.bronzeOf(ndjson
       .filter(col("_corrupt").isNull && col("event_id").isNotNull)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withColumn("props_struct", from_json(col("props"), EventsPipeline.propsSchema))
-      .select(
-        col("event_id"), col("user_id"), col("event_type"), col("value"),
-        col("props_struct.k").as("prop_k"),
-        to_date(col("ts")).as("event_date"))
+      .withColumn("ts", timestamp_micros(col("ts_us"))))
+      .drop("ts")
 
   /** q-entry: full NDJSON round trip — export a slice, scan it back with
     * the schema'd PERMISSIVE reader, flatten to bronze. Oracle-checked
@@ -325,7 +319,6 @@ object Medallion {
   def retentionPlan(spark: SparkSession, dir: String,
                     goldDays: Int = 7, silverDays: Int = 14,
                     bronzeDays: Int = 21): DataFrame = {
-    import graft.pipeline.EventsPipeline
     val silver = EventsPipeline.silver(spark, dir)
     val asOf = silver.agg(max(col("event_date")).as("asof"))
     def census(tierName: String, df: DataFrame, days: Int): DataFrame =

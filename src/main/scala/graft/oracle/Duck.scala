@@ -13,7 +13,8 @@ private[oracle] object Duck {
 
   /** Shared oracle CTE: the events medallion (bronze flatten + silver
     * enrichment/dedup) as DuckDB SQL, kept in lockstep with
-    * [[graft.pipeline.EventsPipeline]]. */
+    * [[graft.pipeline.EventsPipeline.bronzeOf]] and
+    * [[graft.pipeline.Tiers.events]]' silver. */
   val silverCte: String =
     """WITH bronze AS (
       |  SELECT event_id, user_id, event_type, value,
@@ -33,12 +34,21 @@ private[oracle] object Duck {
       |)""".stripMargin
 
   /** The gold-daily aggregate over `silver`, as in
-    * [[graft.pipeline.EventsPipeline.goldDaily]]: events and distinct
-    * event types per user and day. */
+    * [[graft.pipeline.Tiers.events]]' gold: events and distinct event
+    * types per user and day. */
   val goldDaily: String =
     """SELECT user_id, event_date, COUNT(*) AS listen_count,
       |       COUNT(DISTINCT event_type) AS unique_types
       |FROM silver GROUP BY 1, 2""".stripMargin
+
+  /** The `ranked` CTE over `gold`, as in [[graft.pipeline.Tiers.events]]'
+    * top-3: the top 3 days of each user are `rnk <= 3`. */
+  val goldRanked: String =
+    """ranked AS (
+      |  SELECT *, row_number() OVER (
+      |    PARTITION BY user_id
+      |    ORDER BY listen_count DESC, event_date ASC) AS rnk
+      |  FROM gold)""".stripMargin
 
   val duckNorm = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 

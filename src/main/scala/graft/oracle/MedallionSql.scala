@@ -30,11 +30,7 @@ object MedallionSql {
       (silverCte +
         s""", gold AS (
           |$goldDaily),
-          |ranked AS (
-          |  SELECT *, row_number() OVER (
-          |    PARTITION BY user_id
-          |    ORDER BY listen_count DESC, event_date ASC) AS rnk
-          |  FROM gold)
+          |$goldRanked
           |SELECT user_id, event_date, listen_count, unique_types
           |FROM ranked WHERE rnk <= 3 ORDER BY user_id, event_date""".stripMargin),
     // q77: same deletion carve (user_id % 50), same audit identities.
@@ -83,14 +79,10 @@ object MedallionSql {
     // the oracle is the row_number formulation.
     "q108_topk_aggregator" ->
       (silverCte +
-        """, gold AS (
+        s""", gold AS (
           |  SELECT user_id, event_date, COUNT(*) AS listen_count
           |  FROM silver GROUP BY 1, 2),
-          |ranked AS (
-          |  SELECT *, row_number() OVER (
-          |    PARTITION BY user_id
-          |    ORDER BY listen_count DESC, event_date ASC) AS rnk
-          |  FROM gold)
+          |$goldRanked
           |SELECT user_id, event_date, listen_count, CAST(rnk AS INTEGER) AS rnk
           |FROM ranked WHERE rnk <= 3
           |ORDER BY user_id ASC, rnk ASC""".stripMargin),

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,9 +24,8 @@ import graft.core.Tables
   *    partitioned/bucketed table write (see graft.ingest.Medallion).
   *  - JSON flattening is `from_json` with an explicit schema (codegen'd,
   *    no UDF), so it runs inside WholeStageCodegen on the scan projection.
-  *  - dedup + top-k are window row_number with a deterministic tiebreak
-  *    (SURVEY §7.4.1): survivor choice is stable under retries/speculative
-  *    execution — mandatory for exactly-once semantics at scale.
+  *  - silver, gold and top-3 are [[Tiers.events]], the same transforms
+  *    [[graft.ingest.ListenIngest]] runs over the listen schema.
   */
 object EventsPipeline {
 
@@ -38,7 +36,11 @@ object EventsPipeline {
   /** Bronze: flatten the JSON payload, derive the partition date.
     * Reference: ingest_job.py:72-86 (DuckDB read_json + COPY PARTITION_BY). */
   def bronze(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    bronzeOf(Tables.events(spark, dir))
+
+  /** The bronze flatten of any frame with the events columns. */
+  def bronzeOf(events: DataFrame): DataFrame =
+    events
       .withColumn("props_struct", from_json(col("props"), propsSchema))
       .select(
         col("event_id"),
@@ -73,33 +75,11 @@ object EventsPipeline {
         sum(when(col("miss").isNull, 1L).otherwise(0L)).as("n_missing"))
       .orderBy(col("event_type").asc, col("k_decile").asc)
 
-  /** Silver transform over an arbitrary bronze frame: time enrichment +
-    * dedup. Reference: transform_job.py:75-88 — withColumn year/month/day/
-    * hour then row_number over (user, listened_at). The reference orders by
-    * the partition key itself (nondeterministic survivor); we order by
-    * event_id asc so the earliest-ingested row wins, deterministically
-    * (SURVEY §7.4.1). Dedup granularity is the timestamp truncated to
-    * seconds: the reference's listened_at is epoch *seconds*, so
-    * second-granularity is the faithful key.
-    *
-    * The single repartition on user_id is the only exchange in the whole
-    * silver+reports lineage: the dedup window needs rows clustered by
-    * (user_id, second), which hash(user_id) already guarantees. */
-  def silverOf(bronzeDf: DataFrame): DataFrame = {
-    val enriched = bronzeDf
-      .repartition(col("user_id"))
-      .withColumn("year", year(col("ts")))
-      .withColumn("month", month(col("ts")))
-      .withColumn("day", dayofmonth(col("ts")))
-      .withColumn("hour", hour(col("ts")))
-    val w = Window
-      .partitionBy(col("user_id"), date_trunc("second", col("ts")))
-      .orderBy(col("event_id").asc)
-    enriched
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
+  /** [[Tiers.events]]' silver after one repartition on user_id: the only
+    * exchange of the silver+reports lineage, since hash(user_id) already
+    * clusters the dedup window's (user_id, second). */
+  def silverOf(bronzeDf: DataFrame): DataFrame =
+    Tiers.events.silver(bronzeDf.repartition(col("user_id")))
 
   /** Most-recently-used dirs whose silver stays persisted per session.
     * The harness touches one dir; a long-lived service querying many dirs
@@ -123,34 +103,17 @@ object EventsPipeline {
   def cachedDirCount(spark: SparkSession): Int =
     silverCache.cachedCount(spark)
 
-  /** Gold daily aggregate: per-user-per-day counts + distincts.
-    * Reference: transform_job.py:106-111. Partial aggregation (map-side
-    * combine) happens automatically; the grouping keys start with user_id so
-    * the persisted silver partitioning is reused — no exchange. Exact
-    * countDistinct plans via Expand; [[Reports.userProfileApprox]] is the
+  /** [[Tiers.events]]' gold daily; [[Reports.userProfileApprox]] is the
     * 100 TB sketch variant. */
   def goldDailyOf(silverDf: DataFrame): DataFrame =
-    silverDf
-      .groupBy(col("user_id"), col("event_date"))
-      .agg(
-        count(lit(1)).as("listen_count"),
-        countDistinct(col("event_type")).as("unique_types"))
+    Tiers.events.goldDaily(silverDf)
 
   def goldDaily(spark: SparkSession, dir: String): DataFrame =
     goldDailyOf(silver(spark, dir))
 
-  /** Gold user peaks: top-3 days per user by listen_count.
-    * Reference: transform_job.py:114-120, daily_job.py:37-46.
-    * row_number (not rank) ⇒ exactly ≤3 rows/user; tiebreak on event_date
-    * asc is deterministic. */
-  def goldTop3DaysOf(silverDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("listen_count").desc, col("event_date").asc)
-    goldDailyOf(silverDf)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .drop("rnk")
-  }
+  /** [[Tiers.events]]' top-3 days per user. */
+  def goldTop3DaysOf(silverDf: DataFrame): DataFrame =
+    Tiers.events.top3Days(goldDailyOf(silverDf))
 
   def goldTop3Days(spark: SparkSession, dir: String): DataFrame =
     goldTop3DaysOf(silver(spark, dir))
@@ -162,7 +125,9 @@ object EventsPipeline {
     * k rows per group — the per-group analogue of TakeOrdered vs global
     * sort. Dates travel as epoch-day ints through the typed buffer and
     * come back as DateType at the end. Proven row-identical to the
-    * window form in EventsPipelineSpec. */
+    * window form in EventsPipelineSpec. It stays apart from
+    * [[Tiers.top3Days]] on purpose: it is the other algorithm for the same
+    * rows (q108), not a copy of the window form. */
   def goldTop3DaysTyped(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val daily = goldDailyOf(silver(spark, dir))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Sort, Window}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 
@@ -35,7 +35,9 @@ import org.apache.spark.sql.internal.SQLConf
   * single task sorts every row. At sf0.1 on 4 cores neither of those two
   * got slower (median warm run: q15 0.39 → 0.25 s, q104 2.45 → 2.38 s).
   *
-  * Left as they are: sorts under a limit (`SpecialLimits` plans the
+  * Left as they are: sorts of a window with no partition spec or a global
+  * aggregate (Spark plans those over `Exchange SinglePartition`, which
+  * needs no coalesce), sorts under a limit (`SpecialLimits` plans the
   * `Limit` node first, as `TakeOrderedAndProject`), local sorts
   * (`sortWithinPartitions`) and streaming plans. Registered next to
   * [[AsOfJoinStrategy]] by `graft.core.Sessions` and
@@ -43,10 +45,17 @@ import org.apache.spark.sql.internal.SQLConf
 object OneTaskSort extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(order, true, child, _) if !plan.isStreaming && coalescesToOne &&
-        child.stats.sizeInBytes <=
+        !singlePartition(child) && child.stats.sizeInBytes <=
           SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>
       SortExec(order, global = true, CoalesceExec(1, planLater(child))) :: Nil
     case _ => Nil
+  }
+
+  private def singlePartition(plan: LogicalPlan): Boolean = plan match {
+    case p @ (_: Project | _: Filter) => singlePartition(p.children.head)
+    case w: Window => w.partitionSpec.isEmpty
+    case a: Aggregate => a.groupingExpressions.isEmpty
+    case _ => false
   }
 
   /** Whether AQE would read a shuffle at or under the advisory size as one

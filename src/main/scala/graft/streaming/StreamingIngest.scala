@@ -33,10 +33,8 @@ object StreamingIngest {
     * rows preserved in _corrupt, extension predicate via pathGlobFilter). */
   def rawStream(spark: SparkSession, inDir: String, maxFilesPerTrigger: Int = 1000): DataFrame =
     spark.readStream
-      .schema(ListenIngest.listenSchema.add(ListenIngest.CorruptCol, "string"))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", ListenIngest.CorruptCol)
-      .option("pathGlobFilter", "*.{txt,json}")
+      .schema(ListenIngest.rawSchema)
+      .options(ListenIngest.rawOptions)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(inDir)
 
@@ -62,7 +60,9 @@ object StreamingIngest {
   /** §2.9 stretch (SURVEY §7.4.6): event-time stateful ops in the stream —
     * watermarked dedup + windowed per-user daily counts. The watermark
     * bounds dedup/aggregation state to 7 days of event time, aligned with
-    * the DAU window the reports compute. */
+    * the DAU window the reports compute. It dedups with `dropDuplicates`,
+    * not [[graft.pipeline.Tiers.listen]]'s silver: Spark rejects non-time
+    * windows such as `row_number` on streaming Datasets. */
   def dailyCountsStream(raw: DataFrame): DataFrame =
     raw
       .filter(col(ListenIngest.CorruptCol).isNull)

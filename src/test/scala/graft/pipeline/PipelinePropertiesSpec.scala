@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -64,5 +65,57 @@ class PipelinePropertiesSpec extends SparkSpecBase {
       assert(maxPerUser <= 3)
       assert(top.join(daily, Seq("user_id", "event_date"), "left_anti").count() === 0)
     }
+  }
+
+  /** Batches spread over 6 days: each of 4 users has 0–3 events on each
+    * day, one minute apart, so users span more than 3 days and tie on
+    * daily counts, also at the top-3 cut. */
+  private val spreadBatchGen: Gen[List[GenEv]] =
+    Gen.listOfN(24, Gen.choose(0, 3)).map { counts =>
+      val midnight = 1699920000000L // 2023-11-14T00:00:00Z
+      for {
+        (n, cell) <- counts.zipWithIndex
+        i <- 0 until n
+      } yield {
+        val (user, day) = (cell / 6, cell % 6)
+        GenEv(cell * 10L + i, new Timestamp(midnight + day * 86400000L + i * 60000L),
+          user, Seq("play", "skip", "like")(i), 1.0, "{}")
+      }
+    }
+
+  /** Per user, (date, listen_count) of the gold rows of `tiers`, in top-3
+    * order: count descending, then date ascending. */
+  private def byUser(tiers: Tiers, gold: DataFrame): Map[String, Seq[(String, Long)]] =
+    gold.select(col(tiers.user).cast("string"), col(tiers.date).cast("string"),
+        col("listen_count"))
+      .collect().toSeq
+      .groupBy(_.getString(0))
+      .map { case (u, rows) =>
+        u -> rows.map(r => (r.getString(1), r.getLong(2))).sortBy(d => (-d._2, d._1))
+      }
+
+  test("property: top-3 keeps each user's 3 largest days, the earlier date first on a tie") {
+    var tiedAtCut = 0
+    for (seed <- 1L to 8L; evs <- spreadBatchGen(Gen.Parameters.default, Seed(seed))) {
+      val bronze = bronzeOf(evs)
+      val listen = bronze.select(
+        col("user_id").as("user_name"), col("ts").as("listened_datetime"),
+        unix_seconds(col("ts")).as("listened_at"),
+        col("event_id").cast("string").as("recording_msid"),
+        col("event_date").as("listened_date"),
+        col("event_type").as("track_name"), col("event_type").as("artist_name"))
+      for ((tiers, in) <- Seq(Tiers.events -> bronze, Tiers.listen -> listen)) {
+        val gold = tiers.goldDaily(tiers.silver(in))
+        val daily = byUser(tiers, gold)
+        val top = byUser(tiers, tiers.top3Days(gold))
+        assert(top.values.forall(_.size <= 3))
+        assert(top === daily.map { case (u, days) => u -> days.take(3) })
+        for ((u, days) <- daily if days.size > 3 && days(2)._2 == days(3)._2) {
+          tiedAtCut += 1
+          assert(top(u).last._1 < days(3)._1, s"$u kept a later day of a tie: ${top(u)}")
+        }
+      }
+    }
+    assert(tiedAtCut > 0, "no batch tied at the top-3 cut")
   }
 }

@@ -71,6 +71,23 @@ class OneTaskSortSpec extends SparkSpecBase {
     assert(large === small)
   }
 
+  test("q19 and q56 sort their single-partition window with no coalesce and no range exchange") {
+    val silver = EventsPipeline.silver(spark, sf)
+    Seq(Reports.hourlyActivity(_), Reports.hourlyActivityRounded(_)).foreach { q =>
+      val df = q(silver)
+      df.collect()
+      val nodes = planNodes(df)
+      val plan = df.queryExecution.executedPlan
+      assert(!nodes.exists(_.isInstanceOf[CoalesceExec]), s"a coalesce in:\n$plan")
+      assert(!nodes.exists {
+        case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }, s"a range exchange in:\n$plan")
+      assert(nodes.exists { case s: SortExec => s.global; case _ => false },
+        s"no global sort in:\n$plan")
+    }
+  }
+
   test("with Spark's default parallelismFirst the range exchange stays") {
     q15KeepsRangeExchange("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
   }
